@@ -1,8 +1,8 @@
 """Dump `.explain("formatted")` for a named set of queries to
-plans/r17/<query>_<tag>.txt — the before/after plan evidence for the r17
+plans/r<N>/<query>_<tag>.txt — the before/after plan evidence of an
 optimization round. Run:
 
-    python scripts/dump_plans_r17.py before query1 query2 ...
+    python scripts/dump_plans.py --round 18 before query1 query2 ...
 
 Queries whose builders run driver-side iterative work (bpe/kmeans/ivfpq)
 still produce their FINAL plan; the iterative jobs run during build and
@@ -12,6 +12,7 @@ shape plus whatever the builder left lazy.
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -25,19 +26,22 @@ from uav_streamprocessor_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("tag")
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r17"
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name="dump_plans_r17")
+    spark = get_spark(app_name=f"dump_plans_r{args.round}")
     qmap = registry.queries()
-    for name in names:
+    for name in args.names:
         df = qmap[name](spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        path = out_dir / f"{name}_{tag}.txt"
+        path = out_dir / f"{name}_{args.tag}.txt"
         path.write_text(buf.getvalue())
         print(f"wrote {path}", file=sys.stderr)
 

@@ -153,7 +153,6 @@ def test_avi_camera_pushdown_prunes_whole_files(spark, tmp_path):
     df = (
         spark.read.format("uav_video")
         .option("path", f"{pa},{pb}")
-        .option("pushdown", "true")
         .load()
         .filter(F.col("camera_id") == "camA")
     )

@@ -60,14 +60,14 @@ def test_frame_number_pushdown_reader_unit():
     from pyspark.sql.datasource import EqualTo, In
 
     from uav_streamprocessor_spark.sources.video_source import (
-        PushdownVideoBatchReader,
+        VideoBatchReader,
     )
 
     opts = {
         "path": "synthetic://camA?frames=50&w=16&h=16&seed=1",
         "framesPerPartition": "2",
     }
-    reader = PushdownVideoBatchReader(opts)
+    reader = VideoBatchReader(opts)
     leftover = list(
         reader.pushFilters([In(("frame_number",), (0, 30, 60, 10))])
     )
@@ -79,7 +79,7 @@ def test_frame_number_pushdown_reader_unit():
     got = [r[1] for p in parts for r in reader.read(p)]
     assert got == [0, 10, 30]
     # conjunct intersection, like the camera_id rule
-    reader2 = PushdownVideoBatchReader(opts)
+    reader2 = VideoBatchReader(opts)
     list(
         reader2.pushFilters(
             [In(("frame_number",), (0, 10, 20)), EqualTo(("frame_number",), 10)]
@@ -90,21 +90,20 @@ def test_frame_number_pushdown_reader_unit():
 
 def test_frame_number_pushdown_sparse_plan(spark):
     """End-to-end: an IN list on frame_number prunes partitions to the
-    keyframe chunks and returns the same rows the unpushed plan does."""
+    keyframe chunks and returns the same rows as the modulo filter, which
+    the reader cannot consume and so runs over the dense scan."""
     spec = "synthetic://camA?frames=95&w=32&h=32&seed=1&gen=md5"
     base = (
         spark.read.format("uav_video")
         .option("path", spec)
         .option("framesPerPartition", "30")
-    )
-    pushed = (
-        base.option("pushdown", "true")
         .load()
-        .filter(F.col("frame_number").isin([0, 30, 60, 90]))
     )
+    pushed = base.filter(F.col("frame_number").isin([0, 30, 60, 90]))
     # 4 wanted frames, 30/partition → ONE partition instead of ceil(95/30)=4
     assert pushed.rdd.getNumPartitions() == 1
-    plain = base.load().filter(F.col("frame_number").isin([0, 30, 60, 90]))
+    plain = base.filter(F.col("frame_number") % 30 == 0)
+    assert plain.rdd.getNumPartitions() == 4
     a = sorted(
         (r["frame_number"], bytes(r["image"])) for r in pushed.collect()
     )
@@ -128,7 +127,6 @@ def test_content_signature_matches_closed_form(spark):
         spark.read.format("uav_video")
         .option("path", "synthetic://px0?frames=31&w=640&h=360&gen=md5")
         .option("framesPerPartition", "4")
-        .option("pushdown", "true")
         .load()
         .filter(F.col("frame_number").isin([0, 30]))
     )

@@ -389,7 +389,6 @@ def test_pixel_moments_pushdown_engages(spark):
     from uav_streamprocessor_spark.sources import video_source
 
     video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     src = (
         spark.read.format("uav_video")
         .option(
@@ -399,7 +398,6 @@ def test_pixel_moments_pushdown_engages(spark):
                 for i in range(2)
             ),
         )
-        .option("pushdown", "true")
         .option("framesPerPartition", "4")
         .load()
         .filter(F.col("frame_number").isin([0, 30, 60, 90, 120]))
@@ -428,12 +426,10 @@ def test_pixel_moments_mjpeg_pushdown_engages(spark):
     from uav_streamprocessor_spark.sources import video_source
 
     video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     paths = _reg._mjpeg_md5_fixture_paths(spark)
     src = (
         spark.read.format("uav_video")
         .option("path", ",".join(paths))
-        .option("pushdown", "true")
         .option("framesPerPartition", "4")
         .load()
         .filter(F.col("frame_number").isin([0, 30]))

@@ -116,22 +116,26 @@ def test_jpeg_encode_decode_golden_digests():
 
 
 def test_mjpeg_keyframe_pushdown_list_ties_to_fixture():
-    """The keyframe IN-list pushed into the uav_video source derives
-    from the SAME constants the fixture builder uses (ADVICE r17: the
-    literal [0, 30] would silently drop keyframes >= 60 if the fixture
-    ever grew). Breaking the tie — changing n_frames or the interval
-    without the other — changes this list and fails here."""
+    """Every keyframe IN-list pushed into the uav_video source derives
+    from the SAME constants its fixture builder uses (ADVICE r17: a
+    literal list would silently drop keyframes if a fixture ever grew).
+    Breaking the tie — changing n_frames or the interval without the
+    other — changes these lists and fails here."""
     from uav_streamprocessor_spark import registry
     from uav_streamprocessor_spark.config import DEFAULT_CONFIG
 
-    n_frames = registry._MJPEG_FIXTURE_GEOMETRY[1]
     interval = DEFAULT_CONFIG.keyframe_interval
-    got = registry._mjpeg_keyframe_numbers()
-    assert got == [
-        f for f in range(n_frames) if f % interval == 0
-    ]
-    # today's fixture: 60 frames, interval 30 → exactly the r17 literal
-    assert got == [0, 30]
+    for n_frames, today in (
+        # detections fixture: 60 frames → exactly the r17 literal
+        (registry._MJPEG_FIXTURE_GEOMETRY[1], [0, 30]),
+        # md5 MJPG contract fixture: 31 frames
+        (registry._MJPEG_MD5_FIXTURE_GEOMETRY[1], [0, 30]),
+        # md5 synthetic moments source: 121 frames
+        (registry._MOMENTS_FRAMES, [0, 30, 60, 90, 120]),
+    ):
+        got = registry._keyframe_numbers(n_frames)
+        assert got == [f for f in range(n_frames) if f % interval == 0]
+        assert got == today
 
 
 def test_jpeg_decoder_error_contract_held():

@@ -51,7 +51,6 @@ def test_camera_filter_pushdown_prunes_sources(spark):
             "synthetic://camB?frames=40&w=32&h=32&seed=2",
         )
         .option("framesPerPartition", "30")
-        .option("pushdown", "true")
         .load()
     )
     filtered = df.filter("camera_id = 'camA'")
@@ -65,6 +64,33 @@ def test_camera_filter_pushdown_prunes_sources(spark):
     assert both.rdd.getNumPartitions() == 2
 
 
+def test_register_enables_pushdown_for_vanilla_sessions(spark):
+    """Spark refuses a reader that defines pushFilters while
+    spark.sql.python.filterPushdown.enabled is false, its default. So
+    `register` sets the conf on every call, also on a session where the
+    source is already registered, and camera_id filters still prune
+    whole sources afterwards."""
+    from uav_streamprocessor_spark.sources.video_source import register
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    spark.conf.set(key, "false")
+    register(spark)
+    assert spark.conf.get(key) == "true"
+    df = (
+        spark.read.format("uav_video")
+        .option(
+            "path",
+            "synthetic://camA?frames=10&w=16&h=16&seed=1,"
+            "synthetic://camB?frames=20&w=16&h=16&seed=2",
+        )
+        .option("framesPerPartition", "10")
+        .load()
+        .filter("camera_id = 'camB'")
+    )
+    assert df.rdd.getNumPartitions() == 2  # camA's partition never planned
+    assert df.count() == 20
+
+
 def test_pushdown_conjuncts_intersect_not_overwrite():
     """Two pushed camera_id filters must BOTH constrain the reader: the
     consumed-but-dropped-first-filter bug would return camB rows for
@@ -73,13 +99,13 @@ def test_pushdown_conjuncts_intersect_not_overwrite():
     conjunctions, so the plan path can't reach it today)."""
     from pyspark.sql.datasource import EqualTo, In
 
-    from uav_streamprocessor_spark.sources.video_source import PushdownVideoBatchReader
+    from uav_streamprocessor_spark.sources.video_source import VideoBatchReader
 
     opts = {
         "path": "synthetic://camA?frames=5&w=16&h=16&seed=1,"
         "synthetic://camB?frames=5&w=16&h=16&seed=2",
     }
-    reader = PushdownVideoBatchReader(opts)
+    reader = VideoBatchReader(opts)
     leftover = list(
         reader.pushFilters(
             [In(("camera_id",), ("camA", "camB")), EqualTo(("camera_id",), "camB")]
@@ -88,7 +114,7 @@ def test_pushdown_conjuncts_intersect_not_overwrite():
     assert leftover == []  # both consumed...
     assert reader._camera_filter == {"camB"}  # ...and intersected
     # disjoint conjuncts → empty source, not a resurrected filter
-    reader2 = PushdownVideoBatchReader(opts)
+    reader2 = VideoBatchReader(opts)
     list(reader2.pushFilters([EqualTo(("camera_id",), "camA"), EqualTo(("camera_id",), "camB")]))
     assert reader2._camera_filter == set()
     assert reader2.partitions() == []

@@ -148,11 +148,11 @@ def test_sparse_partition_plan_property(frames, fpp, wanted):
     every chunk respects framesPerPartition — the planner can neither
     drop, duplicate, nor resurrect a frame."""
     from uav_streamprocessor_spark.sources.video_source import (
-        PushdownVideoBatchReader,
+        VideoBatchReader,
     )
     from pyspark.sql.datasource import In
 
-    reader = PushdownVideoBatchReader(
+    reader = VideoBatchReader(
         {
             "path": f"synthetic://c?frames={frames}&w=8&h=8",
             "framesPerPartition": str(fpp),

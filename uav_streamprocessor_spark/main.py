@@ -27,7 +27,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     # flags mirror uav/main.py:15-71 (names Spark-idiomatic)
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--source", required=True,
-                   help="uav_video spec(s), image dir, or frames parquet")
+                   help="synthetic:// or .avi spec(s), image dir, or frames parquet")
     p.add_argument("--output-dir", required=True)
     p.add_argument("--target-resolution", type=int, default=640)
     p.add_argument("--keyframe-interval", type=int, default=30)
@@ -44,13 +44,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     from uav_streamprocessor_spark.config import PipelineConfig
+    from uav_streamprocessor_spark.operators.uav_core import frame_counters
     from uav_streamprocessor_spark.plans.pipeline import (
         keyframe_detections_flat,
         recorder_rows,
         sender_payloads,
     )
     from uav_streamprocessor_spark.session import get_spark
-    from uav_streamprocessor_spark.sources import video_source
     from uav_streamprocessor_spark.sources.readers import load_frames
 
     args = parse_args(argv)
@@ -63,14 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
     spark = get_spark(app_name="uav_pipeline", master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus)
-    video_source.register(spark)
-
-    if args.source.startswith("synthetic://"):
-        frames = (
-            spark.read.format("uav_video").option("path", args.source).load()
-        )
-    else:
-        frames = load_frames(spark, args.source)
+    frames = load_frames(spark, args.source)
 
     out = Path(args.output_dir)
     # K1 record branch: every frame, partitioned by camera for pruned scans
@@ -98,9 +91,9 @@ def main(argv: list[str] | None = None) -> int:
         ).json(str(out / "payloads"))
 
     # A1 counters from written data (uav/main.py:175-179's final report)
-    rec = spark.read.parquet(str(out / "recorded"))
-    total = rec.count()
-    kf = rec.filter(F.col("frame_number") % cfg.keyframe_interval == 0).count()
+    per_cam = frame_counters(spark.read.parquet(str(out / "recorded")), cfg).collect()
+    total = sum(r["total_frames"] for r in per_cam)
+    kf = sum(r["keyframes"] for r in per_cam)
     ndet = spark.read.parquet(str(out / "detections")).filter(
         F.col("class_name").isNotNull()
     ).count()

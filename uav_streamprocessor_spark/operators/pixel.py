@@ -290,51 +290,6 @@ class StubDetector:
         return boxes
 
 
-def detect_objects(
-    frames: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    image_col: str = "image",
-    decode=None,
-) -> DataFrame:
-    """T2 via mapInPandas (iterator form): the detector loads ONCE per
-    executor Python worker and streams Arrow batches through — the engine's
-    version of the reference's load-once-at-init (frame_processing.py:70-76).
-    Adds `detections array<struct>`; explode downstream for the flat table.
-
-    `decode` is the codec seam: any bytes→HxWx3-uint8 callable (e.g. a
-    cv2.imdecode wrapper) drops in; defaults to the raw-tensor codec.
-    Passed functions pickle by value to executors, so the swap needs no
-    module-path gymnastics."""
-    out_schema = T.StructType(
-        frames.schema.fields
-        + [T.StructField("detections", T.ArrayType(BBOX_STRUCT), False)]
-    )
-    conf, classes = cfg.confidence, cfg.classes
-    dec = decode or decode_image
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = StubDetector(conf, classes)  # one load per worker
-        for pdf in batches:
-            dets = []
-            for buf in pdf[image_col]:
-                try:
-                    dets.append(detector.detect(dec(bytes(buf))))
-                except Exception:
-                    dets.append([])  # skip-and-continue (frame_processing.py:113-115)
-            pdf = pdf.copy()
-            pdf["detections"] = [
-                [
-                    (b["x_min"], b["y_min"], b["x_max"], b["y_max"],
-                     b["confidence"], b["class_id"], b["class_name"])
-                    for b in row
-                ]
-                for row in dets
-            ]
-            yield pdf
-
-    return frames.mapInPandas(run, schema=out_schema)
-
-
 def explode_detections(detected: DataFrame) -> DataFrame:
     """Flatten the 1:N nesting into the keyed detections table
     (SURVEY.md §1.3)."""

@@ -2250,20 +2250,23 @@ _register(
 )(_pixel_pipeline)
 
 
-# (n_cams, n_frames, w, h, q) — shared by the fixture builder and the
-# keyframe pushdown IN-list below, so the two can never disagree (the
-# r17 shape hardcoded isin([0, 30]), correct only while n_frames stayed
-# 60; tests/test_r18_optimizations.py pins the tie)
+# Fixture sizes shared by each fixture builder and the keyframe IN list
+# its query pushes into the uav_video source, so the two can never
+# disagree (a literal list silently drops keyframes once a fixture
+# grows; tests/test_r18_optimizations.py pins the tie).
+# (n_cams, n_frames, w, h, q) of the MJPG detections fixture
 _MJPEG_FIXTURE_GEOMETRY = (2, 60, 640, 360, 85)
+# (n_cams, n_frames, w, h, q) of the md5 MJPG contract fixture
+_MJPEG_MD5_FIXTURE_GEOMETRY = (2, 31, 640, 360, 85)
+# frames per camera of the md5 synthetic moments source
+_MOMENTS_FRAMES = 121
 
 
-def _mjpeg_keyframe_numbers() -> list[int]:
-    """The keyframe numbers the production modulo filter selects from the
-    fixture — derived from the SAME constants the fixture builder uses
-    plus the pipeline's configured interval."""
+def _keyframe_numbers(n_frames: int) -> list[int]:
+    """The frame numbers the production keyframes() modulo filter keeps
+    out of an n_frames-long source at the configured interval."""
     from uav_streamprocessor_spark.config import DEFAULT_CONFIG
 
-    n_frames = _MJPEG_FIXTURE_GEOMETRY[1]
     return list(range(0, n_frames, DEFAULT_CONFIG.keyframe_interval))
 
 
@@ -2367,12 +2370,10 @@ def _pixel_pipeline_mjpeg(spark):
     from uav_streamprocessor_spark.sources import video_source
 
     video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     paths = _mjpeg_fixture_paths(spark)
     frames = (
         spark.read.format("uav_video")
         .option("path", ",".join(paths))
-        .option("pushdown", "true")
         # r18: one keyframe per partition — under IN-list pushdown the
         # sparse plan packs requested frames into framesPerPartition
         # chunks, so "4" serialized a camera's keyframe decodes in one
@@ -2391,7 +2392,11 @@ def _pixel_pipeline_mjpeg(spark):
         # fixture geometry + configured interval instead of a literal
         # [0, 30] (ADVICE r17 — a longer fixture would have silently
         # dropped keyframes >= 60)
-        .filter(F.col("frame_number").isin(_mjpeg_keyframe_numbers()))
+        .filter(
+            F.col("frame_number").isin(
+                _keyframe_numbers(_MJPEG_FIXTURE_GEOMETRY[1])
+            )
+        )
     )
     return keyframe_detections_flat(frames)
 
@@ -2424,17 +2429,13 @@ def _pixel_moments(spark):
     from uav_streamprocessor_spark.sources import video_source
 
     video_source.register(spark)
-    # runtime conf, vanilla-session safe (the register_base_tables
-    # nanosAsLong precedent): Spark refuses a pushFilters reader while
-    # this is false, and the driver contract runs an untuned session
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spec = ",".join(
-        f"synthetic://px{i}?frames=121&w=640&h=360&gen=md5" for i in range(2)
+        f"synthetic://px{i}?frames={_MOMENTS_FRAMES}&w=640&h=360&gen=md5"
+        for i in range(2)
     )
     frames = (
         spark.read.format("uav_video")
         .option("path", spec)
-        .option("pushdown", "true")
         # r18: one keyframe per partition — under IN-list pushdown the
         # sparse plan packs requested frames into framesPerPartition
         # chunks, so "4" serialized a camera's keyframe decodes in one
@@ -2447,7 +2448,7 @@ def _pixel_moments(spark):
         # frame_number pushdown, so skipped frames are never synthesized
         # (the keyframe analogue of row-group pruning); the production
         # keyframes() modulo filter stays on top, semantics unchanged
-        .filter(F.col("frame_number").isin([0, 30, 60, 90, 120]))
+        .filter(F.col("frame_number").isin(_keyframe_numbers(_MOMENTS_FRAMES)))
     )
     return content_signature(keyframes(frames))
 
@@ -2546,7 +2547,7 @@ def _mjpeg_md5_fixture_paths(spark) -> list[str]:
 
     from uav_streamprocessor_spark.sources import video_source
 
-    n_cams, n_frames, w, h, q = 2, 31, 640, 360, 85
+    n_cams, n_frames, w, h, q = _MJPEG_MD5_FIXTURE_GEOMETRY
     base = Path(tempfile.gettempdir()) / (
         f"uav_spark_mjpeg_md5_fixture_v1_{n_cams}x{n_frames}_{w}x{h}_q{q}"
     )
@@ -2628,12 +2629,10 @@ def _pixel_moments_mjpeg(spark):
     from uav_streamprocessor_spark.sources import video_source
 
     video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     paths = _mjpeg_md5_fixture_paths(spark)
     frames = (
         spark.read.format("uav_video")
         .option("path", ",".join(paths))
-        .option("pushdown", "true")
         # r18: one keyframe per partition — under IN-list pushdown the
         # sparse plan packs requested frames into framesPerPartition
         # chunks, so "4" serialized a camera's keyframe decodes in one
@@ -2644,7 +2643,11 @@ def _pixel_moments_mjpeg(spark):
         .load()
         # decimation pushdown: only the keyframes are entropy-decoded —
         # the sparse seek plan skips 29/31 of the T.81 work per camera
-        .filter(F.col("frame_number").isin([0, 30]))
+        .filter(
+            F.col("frame_number").isin(
+                _keyframe_numbers(_MJPEG_MD5_FIXTURE_GEOMETRY[1])
+            )
+        )
     )
     return roundtrip_contract(keyframes(frames))
 

@@ -5,6 +5,8 @@ dispatches on the source string: rtsp:// → StreamReader, directory →
 ImageReader, file → VideoReader. The engine's `load_frames` does the same
 by URI scheme, returning a batch or streaming DataFrame:
 
+- synthetic:// spec(s) / *.avi file(s) → the `uav_video` DataSource
+  (S2, frame_reader.py:116-155; sources/video_source.py)
 - image directory → `binaryFile` scan + filename-order frame numbering
   (S1, frame_reader.py:55-113)
 - frames parquet table → the canonical engine input (video decode is an
@@ -87,9 +89,15 @@ def read_stream(spark: SparkSession, url: str) -> DataFrame:
 
 def load_frames(spark: SparkSession, source: str) -> DataFrame:
     """S4 SourceReader dispatch (uav/frame_reader.py:209-221 semantics:
-    scheme prefix → stream; directory → images; file/table → frames)."""
+    scheme prefix → stream; video → uav_video; directory → images;
+    file/table → frames)."""
     if source.startswith(("rtsp://", "rate://")):
         return read_stream(spark, source)
+    if source.startswith("synthetic://") or source.lower().endswith(".avi"):
+        from uav_streamprocessor_spark.sources import video_source
+
+        video_source.register(spark)
+        return spark.read.format("uav_video").option("path", source).load()
     p = Path(source)
     if p.is_dir() and not source.endswith(".parquet"):
         return read_image_dir(spark, source)

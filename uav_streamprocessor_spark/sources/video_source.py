@@ -8,6 +8,9 @@ engine's adapter is a Spark 4 `pyspark.sql.datasource.DataSource`:
 - batch: `spark.read.format("uav_video").option("path", ...)` — one
   partition per video/segment, frames decoded inside the partition reader
   (executor-side, parallel across files — the reference decodes serially).
+  Filters on camera_id / frame_number are pushed into the reader:
+  camera_id prunes whole sources, frame_number prunes to a sparse seek
+  plan. `register` turns on the runtime conf Spark requires for that.
 - stream: `spark.readStream.format("uav_video")` — a
   `DataSourceStreamReader` whose offsets are frame indices; each
   micro-batch decodes a bounded frame range (at-least-once on replay).
@@ -24,7 +27,6 @@ across all three and fully tested.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -224,13 +226,62 @@ class _VideoPartition(InputPartition):
         self.frames = frames
 
 
+def _read_partition(partition: _VideoPartition) -> Iterator[tuple]:
+    dec = _open_decoder(partition.spec)
+    if partition.frames is not None:
+        for f in partition.frames:
+            yield from dec.read(f, f + 1)
+        return
+    yield from dec.read(partition.start, partition.end)
+
+
 class VideoBatchReader(DataSourceReader):
+    """Batch reader with filter pushdown (Spark 4 Python DataSource API):
+    camera_id equality/IN prunes WHOLE SOURCES before any decode — the
+    video analogue of partition pruning — and frame_number equality/IN
+    prunes to a sparse seek plan, so every-Nth decimation expressed as an
+    IN list decodes ONLY the keyframes (~1/30 of the decode work at the
+    reference's default interval). Both columns are exact per row, so
+    consumed filters are fully satisfied; everything else is yielded back
+    for Spark to evaluate.
+
+    Spark refuses any reader that defines pushFilters while Python
+    filter pushdown is off; `register` turns it on at runtime, so
+    vanilla sessions (the driver contract) load it too."""
+
     def __init__(self, options: dict):
         # comma-separated source specs; frames-per-partition for splitting
         self.specs = options.get("path", "").split(",")
         self.frames_per_partition = int(options.get("framesPerPartition", "1000"))
         self._camera_filter: set | None = None  # None = all cameras
         self._frame_filter: set | None = None  # None = all frames
+
+    def pushFilters(self, filters):
+        for f in filters:
+            if isinstance(f, EqualTo) and f.attribute == ("camera_id",):
+                self._narrow({f.value})
+            elif isinstance(f, In) and f.attribute == ("camera_id",):
+                self._narrow(set(f.value))  # In.value is the tuple of values
+            elif isinstance(f, EqualTo) and f.attribute == ("frame_number",):
+                self._narrow_frames({f.value})
+            elif isinstance(f, In) and f.attribute == ("frame_number",):
+                self._narrow_frames(set(f.value))
+            else:
+                yield f
+
+    def _narrow(self, cameras: set) -> None:
+        # Intersect, don't overwrite: if Catalyst ever pushes two camera_id
+        # conjuncts (EqualTo + In), both constraints must hold — assignment
+        # would silently drop the first consumed filter.
+        self._camera_filter = (
+            cameras if self._camera_filter is None else self._camera_filter & cameras
+        )
+
+    def _narrow_frames(self, frames: set) -> None:
+        frames = {int(f) for f in frames}
+        self._frame_filter = (
+            frames if self._frame_filter is None else self._frame_filter & frames
+        )
 
     def partitions(self):
         parts = []
@@ -263,56 +314,7 @@ class VideoBatchReader(DataSourceReader):
         return parts
 
     def read(self, partition: _VideoPartition):
-        dec = _open_decoder(partition.spec)
-        if partition.frames is not None:
-            for f in partition.frames:
-                yield from dec.read(f, f + 1)
-            return
-        yield from dec.read(partition.start, partition.end)
-
-
-class PushdownVideoBatchReader(VideoBatchReader):
-    """VideoBatchReader + filter pushdown (Spark 4 Python DataSource
-    API): camera_id equality/IN prunes WHOLE SOURCES before any decode —
-    the video analogue of partition pruning — and frame_number
-    equality/IN prunes to a sparse seek plan, so every-Nth decimation
-    expressed as an IN list decodes ONLY the keyframes (~1/30 of the
-    decode work at the reference's default interval). Both columns are
-    exact per row, so consumed filters are fully satisfied; everything
-    else is yielded back for Spark to evaluate.
-
-    Kept as an opt-in subclass (`.option("pushdown", "true")`): Spark
-    REFUSES any reader that merely defines pushFilters while
-    spark.sql.python.filterPushdown.enabled is false, and the engine must
-    stay loadable from vanilla sessions (the driver contract). The
-    engine's own session builder enables the conf."""
-
-    def pushFilters(self, filters):
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute == ("camera_id",):
-                self._narrow({f.value})
-            elif isinstance(f, In) and f.attribute == ("camera_id",):
-                self._narrow(set(f.value))  # In.value is the tuple of values
-            elif isinstance(f, EqualTo) and f.attribute == ("frame_number",):
-                self._narrow_frames({f.value})
-            elif isinstance(f, In) and f.attribute == ("frame_number",):
-                self._narrow_frames(set(f.value))
-            else:
-                yield f
-
-    def _narrow(self, cameras: set) -> None:
-        # Intersect, don't overwrite: if Catalyst ever pushes two camera_id
-        # conjuncts (EqualTo + In), both constraints must hold — assignment
-        # would silently drop the first consumed filter.
-        self._camera_filter = (
-            cameras if self._camera_filter is None else self._camera_filter & cameras
-        )
-
-    def _narrow_frames(self, frames: set) -> None:
-        frames = {int(f) for f in frames}
-        self._frame_filter = (
-            frames if self._frame_filter is None else self._frame_filter & frames
-        )
+        yield from _read_partition(partition)
 
 
 class VideoStreamReader(DataSourceStreamReader):
@@ -353,8 +355,7 @@ class VideoStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _VideoPartition):
-        dec = _open_decoder(partition.spec)
-        yield from dec.read(partition.start, partition.end)
+        yield from _read_partition(partition)
 
     def commit(self, end: dict):
         pass
@@ -374,8 +375,6 @@ class VideoDataSource(DataSource):
         return FRAME_DDL
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return PushdownVideoBatchReader(self.options)
         return VideoBatchReader(self.options)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
@@ -383,6 +382,10 @@ class VideoDataSource(DataSource):
 
 
 def register(spark) -> None:
+    # runtime conf, set on every call (a caller may have turned it off
+    # since): Spark refuses VideoBatchReader, which defines pushFilters,
+    # while it is false, and it is off by default in Spark 4.1
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # idempotent per session: re-registering re-pickles the class and logs a
     # replacement WARN on every query call (the registered source is
     # session-held state, not per-query)

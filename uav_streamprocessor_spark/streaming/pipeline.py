@@ -10,7 +10,7 @@ reference's driver-side mutable counters, uav/main.py:90-91).
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -181,19 +181,6 @@ def stream_stream_frame_detection_join(
         "f.frame_ts",
         "d.class_name",
         "d.confidence",
-    )
-
-
-def observed_stream(frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """df.observe() metrics — the zero-cost path for the reference's
-    per-100-frames progress logging (uav/main.py:144-146): metrics ride
-    the streaming query listener instead of a second aggregation."""
-    return frames.observe(
-        "frame_metrics",
-        F.count(F.lit(1)).alias("total_frames"),
-        F.sum(
-            (F.col("frame_number") % cfg.keyframe_interval == 0).cast("long")
-        ).alias("keyframes"),
     )
 
 

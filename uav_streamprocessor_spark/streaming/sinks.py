@@ -29,13 +29,19 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
+from uav_streamprocessor_spark.sources.avi import (
+    FOURCC_DIB,
+    FOURCC_MJPG,
+    AviFile,
+    AviStreamWriter,
+)
 
 
 def _default_post(url: str, image: bytes, metadata: str, timeout: float) -> int:
@@ -216,96 +222,90 @@ class _AviCameraWriter:
     the demuxer gave S2/S3 real container bytes; this gives K1 the same).
 
     Frames decode from the engine raw-tensor buffer (pixel.decode_image)
-    and mux as uncompressed BI_RGB (DIB) chunks via sources/avi
-    .AviStreamWriter — pure container arithmetic, no cv2, no codec; the
-    output is a spec-correct AVI any player or the engine's own
-    `uav_video` DataSource reads back pixel-exactly. Same segment
-    protocol as the other writers: `{cam}.b{batch:06d}.avi`, truncate on
-    open, replayed batches overwrite their own segment. Frames stream
-    through one at a time (AviStreamWriter patches the header on close),
-    so memory stays one-frame-bounded like the cv2 path."""
+    and mux via sources/avi.AviStreamWriter — pure container arithmetic,
+    no cv2, no native codec; the output is a spec-correct AVI any player
+    or the engine's own `uav_video` DataSource reads back. The fourcc
+    picks the lane:
+
+    - DIB (fmt="avi"): uncompressed BI_RGB chunks, pixel-exact round trip.
+    - MJPG (fmt="mjpeg"): each frame encodes to a real baseline JPEG
+      (operators/jpeg.py, q=90 4:2:0) — the engine's analogue of the
+      reference's compressed MP4 output (frame_processing.py:142-159),
+      typically ~10-25x smaller than DIB; decodes back to pixels through
+      operators/jpeg.decode_jpeg. reassemble_segments' chunk-level remux
+      is fourcc-agnostic and stays LOSSLESS (the JPEG bytes pass through
+      verbatim; the only loss is the original encode, like the cv2 mp4
+      writer's).
+
+    Same segment protocol as the other writers: `{cam}.b{batch:06d}.avi`
+    for both lanes, truncate on open, replayed batches overwrite their
+    own segment. Frames stream through one at a time (AviStreamWriter
+    patches the header on close), so memory stays one-frame-bounded like
+    the cv2 path."""
+
+    quality = 90  # JPEG quality of the MJPG lane
 
     def __init__(self, out: Path, cam: str, batch_id: int, w: int, h: int,
-                 fps: float):
+                 fps: float, fourcc: str = FOURCC_DIB):
         _check_camera_id(cam)
         from uav_streamprocessor_spark.operators.pixel import decode_image
-        from uav_streamprocessor_spark.sources.avi import AviStreamWriter
 
         self._decode = decode_image
-        self._wr = AviStreamWriter(
-            out / f"{cam}.b{batch_id:06d}.avi", w, h, fps=fps or 25.0
-        )
-
-    def write(self, row) -> None:
-        self._wr.write_frame(self._decode(row["image"]))
-
-    def close(self) -> None:
-        self._wr.close()
-
-
-class _MjpegAviCameraWriter:
-    """COMPRESSED codec-free video recorder — the engine's analogue of
-    the reference's compressed MP4 output (frame_processing.py:142-159),
-    with zero native dependencies: each frame encodes to a real baseline
-    JPEG (operators/jpeg.py, q=90 4:2:0) and muxes as an MJPG chunk into
-    the same AVI segment protocol as fmt="avi". Typically ~10-25× smaller
-    than the uncompressed DIB lane; playable by any player; decodes back
-    to pixels through the engine's own uav_video DataSource (the MJPG
-    lane re-enters operators/jpeg.decode_jpeg). Segments share the
-    `.avi` extension — reassemble_segments' chunk-level remux is
-    fourcc-agnostic and stays LOSSLESS (the JPEG bytes pass through
-    verbatim; the only loss is the original encode, exactly like the
-    cv2 mp4 writer's)."""
-
-    quality = 90
-
-    def __init__(self, out: Path, cam: str, batch_id: int, w: int, h: int,
-                 fps: float):
-        _check_camera_id(cam)
-        from uav_streamprocessor_spark.operators.pixel import decode_image
-        from uav_streamprocessor_spark.sources.avi import (
-            FOURCC_MJPG,
-            AviStreamWriter,
-        )
-
-        self._decode = decode_image
+        self._mjpg = fourcc == FOURCC_MJPG
         self._wr = AviStreamWriter(
             out / f"{cam}.b{batch_id:06d}.avi", w, h, fps=fps or 25.0,
-            fourcc=FOURCC_MJPG,
+            fourcc=fourcc,
         )
 
     def write(self, row) -> None:
-        from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
+        frame = self._decode(row["image"])
+        if self._mjpg:
+            from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
 
-        self._wr.write_frame(
-            encode_jpeg(
-                self._decode(row["image"]), quality=self.quality,
-                subsampling="4:2:0",
-            )
-        )
+            frame = encode_jpeg(frame, quality=self.quality, subsampling="4:2:0")
+        self._wr.write_frame(frame)
 
     def close(self) -> None:
         self._wr.close()
 
 
-_CAMERA_WRITERS = {
-    "jsonl": _JsonlCameraWriter,
-    "mp4": _Mp4CameraWriter,
-    "avi": _AviCameraWriter,
-    "mjpeg": _MjpegAviCameraWriter,
-}
+class _RecorderFormat(NamedTuple):
+    writer: Callable  # (out, cam, batch_id, w, h, fps) -> camera writer
+    ext: str  # on-disk segment extension
+    carries_image: bool  # the writer reads the frame's image bytes
 
-# recorder fmt → on-disk segment extension ("mjpeg" shares the .avi
-# container with the DIB lane; only the fourcc differs)
-_FMT_EXT = {"jsonl": "jsonl", "mp4": "mp4", "avi": "avi", "mjpeg": "avi"}
+
+# OrderedRecorderSink's fmt values. "mjpeg" shares the .avi container
+# with the DIB lane; only the fourcc differs.
+_FORMATS = {
+    "jsonl": _RecorderFormat(_JsonlCameraWriter, "jsonl", False),
+    "mp4": _RecorderFormat(_Mp4CameraWriter, "mp4", True),
+    "avi": _RecorderFormat(_AviCameraWriter, "avi", True),
+    "mjpeg": _RecorderFormat(
+        partial(_AviCameraWriter, fourcc=FOURCC_MJPG), "avi", True
+    ),
+}
+DEFAULT_FMT = "jsonl"
+
+
+def recorder_columns(fmt: str) -> list[str]:
+    """The columns `fmt`'s camera writer reads. The image bytes ride
+    along ONLY for the video formats — the jsonl metadata recorder must
+    not drag pixel payloads through its shuffle."""
+    cols = ["camera_id", "frame_number", "width", "height", "fps"]
+    return cols + ["image"] if _FORMATS[fmt].carries_image else cols
+
 
 # `{cam}.b{batch:06d}.{ext}` — the per-micro-batch segment naming shared
-# by both camera writers. Camera ids ENDING in a literal ".bNNNNNN" are
+# by every camera writer. Camera ids ENDING in a literal ".bNNNNNN" are
 # reserved and rejected at writer construction (ADVICE r11): a camera
 # named 'camA.b000001' would produce a reassembled deliverable
 # 'camA.b000001.jsonl' that a SECOND reassemble pass matches as a
 # segment of camera 'camA' and concatenates into the wrong file.
-_SEGMENT_RE = re.compile(r"^(?P<cam>.+)\.b(?P<batch>\d{6})\.(?P<ext>jsonl|mp4|avi)$")
+_SEGMENT_RE = re.compile(
+    r"^(?P<cam>.+)\.b(?P<batch>\d{6})\.(?P<ext>%s)$"
+    % "|".join(sorted({f.ext for f in _FORMATS.values()}))
+)
 _RESERVED_CAM_RE = re.compile(r"\.b\d{6}$")
 
 
@@ -320,7 +320,7 @@ def _check_camera_id(cam: str) -> str:
 
 
 def reassemble_segments(
-    out_dir: str, fmt: str = "jsonl", keep_segments: bool = True
+    out_dir: str, fmt: str = DEFAULT_FMT, keep_segments: bool = True
 ) -> dict:
     """Recover the reference's single-file-per-camera deliverable
     (uav/frame_processing.py:142-159 writes ONE mp4 per source) from the
@@ -347,7 +347,7 @@ def reassemble_segments(
     "fps_fallback" only flags an avi whose segment-0 header carries
     fps == 0.
     """
-    ext = _FMT_EXT.get(fmt, fmt)
+    ext = _FORMATS[fmt].ext
     out = Path(out_dir)
     by_cam: dict = {}
     for p in sorted(out.iterdir()):
@@ -382,8 +382,6 @@ def _remux_avi(segments: list, dest: Path) -> dict:
     the demuxer's seek index and appended verbatim to one AviStreamWriter
     under segment 0's latched fourcc/size/fps (all segments of one
     camera share the writer's latched config, same invariant as mp4)."""
-    from uav_streamprocessor_spark.sources.avi import AviFile, AviStreamWriter
-
     first = AviFile(str(segments[0]))
     wr = AviStreamWriter(
         str(dest), first.width, first.height,
@@ -448,7 +446,7 @@ def _remux_mp4(segments: list, dest: Path) -> dict:
 
 
 def _record_partition(
-    rows, out_dir: str, fallback_fps: float, skipped_acc, fmt: str = "jsonl",
+    rows, out_dir: str, fallback_fps: float, skipped_acc, fmt: str = DEFAULT_FMT,
     batch_id: int = 0,
 ) -> None:
     """Executor-side per-partition writer for OrderedRecorderSink.
@@ -460,7 +458,7 @@ def _record_partition(
     """
     import os
 
-    writer_cls = _CAMERA_WRITERS[fmt]
+    writer_cls = _FORMATS[fmt].writer
     out = Path(out_dir)
     latch_dir = out / "_latch"
     latch_dir.mkdir(parents=True, exist_ok=True)
@@ -526,20 +524,20 @@ class OrderedRecorderSink:
 
     out_dir: str
     cfg: PipelineConfig = field(default_factory=lambda: DEFAULT_CONFIG)
-    # "jsonl" (codec-free metadata recorder), "avi" (codec-free REAL
-    # video: pure-Python DIB mux, playable output, pixel-exact round-trip
-    # through the uav_video DataSource), "mjpeg" (codec-free COMPRESSED
-    # video: real baseline JPEGs in MJPG-AVI segments — the engine's
-    # analogue of the reference's compressed output), or "mp4"
-    # (cv2.VideoWriter mux — requires a codec on the executors). The
-    # video formats carry the
-    # image bytes through the camera repartition, which is the
-    # reference's own data motion: every frame reaches its writer. ALL
-    # formats emit one segment per micro-batch ({cam}.b{batch_id:06d}
-    # .{ext}) so a replayed batch overwrites its own segment
-    # (at-least-once → idempotent); `reassemble_segments` recovers the
-    # single-file deliverable — see the _*CameraWriter classes.
-    fmt: str = "jsonl"
+    # a _FORMATS key: "jsonl" (codec-free metadata recorder), "avi"
+    # (codec-free REAL video: pure-Python DIB mux, playable output,
+    # pixel-exact round-trip through the uav_video DataSource), "mjpeg"
+    # (codec-free COMPRESSED video: real baseline JPEGs in MJPG-AVI
+    # segments — the engine's analogue of the reference's compressed
+    # output), or "mp4" (cv2.VideoWriter mux — requires a codec on the
+    # executors). The video formats carry the image bytes through the
+    # camera repartition, which is the reference's own data motion:
+    # every frame reaches its writer. ALL formats emit one segment per
+    # micro-batch ({cam}.b{batch_id:06d}.{ext}) so a replayed batch
+    # overwrites its own segment (at-least-once → idempotent);
+    # `reassemble_segments` recovers the single-file deliverable — see
+    # the _*CameraWriter classes.
+    fmt: str = DEFAULT_FMT
     _skipped_acc: object = field(default=None, repr=False)
 
     @property
@@ -552,11 +550,8 @@ class OrderedRecorderSink:
             self._skipped_acc = batch.sparkSession.sparkContext.accumulator(0)
         out_dir, fallback_fps, fmt = self.out_dir, self.cfg.fallback_fps, self.fmt
         acc = self._skipped_acc
-        cols = ["camera_id", "frame_number", "width", "height", "fps"]
-        if fmt in ("mp4", "avi", "mjpeg"):
-            cols.append("image")
         (
-            batch.select(*cols)
+            batch.select(*recorder_columns(fmt))
             .repartition("camera_id")
             .sortWithinPartitions("camera_id", "frame_number")
             .foreachPartition(
@@ -594,17 +589,3 @@ class IdempotentBatchSink:
             return
         self.inner(batch, batch_id)
         marker.touch()
-
-
-def parquet_sink(df: DataFrame, path: str, checkpoint: str, partition_by: list[str] | None = None):
-    """The canonical at-scale sink: checkpointed parquet append,
-    partitioned (e.g. by camera_id/date) so downstream scans prune."""
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    return w

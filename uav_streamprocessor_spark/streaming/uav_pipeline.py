@@ -19,8 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
-from uav_streamprocessor_spark.plans.pipeline import recorder_rows, sender_payloads
-from uav_streamprocessor_spark.streaming.sinks import HttpSenderSink, OrderedRecorderSink
+from uav_streamprocessor_spark.plans.pipeline import sender_payloads
+from uav_streamprocessor_spark.streaming.sinks import (
+    DEFAULT_FMT,
+    HttpSenderSink,
+    OrderedRecorderSink,
+    recorder_columns,
+)
 
 
 def stream_frames(spark: SparkSession, source_spec: str, frames_per_batch: int = 30) -> DataFrame:
@@ -44,7 +49,7 @@ def run_streaming_pipeline(
     sender: HttpSenderSink | None = None,
     frames_per_batch: int = 30,
     timeout_s: float = 120.0,
-    record_fmt: str = "jsonl",
+    record_fmt: str = DEFAULT_FMT,
 ) -> dict:
     """Run both branches with availableNow triggers (complete drain of
     the source — latestOffset reports EOF, so no frames are truncated
@@ -89,18 +94,12 @@ def run_streaming_pipeline(
 def recorder_rows_stream(
     frames: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    fmt: str = "jsonl",
+    fmt: str = DEFAULT_FMT,
 ) -> DataFrame:
     """K1 row prep for streams: the batch recorder_rows uses a window to
     latch first-frame config (plans/pipeline.py); on a stream that state
     lives in the sink's per-camera `_latch/{cam}.json` files — mirroring
     the reference's lazy writer init, frame_processing.py:147-159), so the
-    stream side just projects. The image bytes ride along ONLY for the
-    video formats (avi/mp4) — the jsonl metadata recorder must not drag
-    pixel payloads through its shuffle."""
-    from pyspark.sql import functions as F
-
-    cols = ["camera_id", "frame_number", "width", "height", F.col("fps")]
-    if fmt in ("mp4", "avi", "mjpeg"):
-        cols.append("image")
-    return frames.select(*cols)
+    stream side just projects the columns the fmt's writer reads
+    (sinks.recorder_columns)."""
+    return frames.select(*recorder_columns(fmt))
