@@ -4,6 +4,18 @@
 Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
+    python bench.py                 # headline (+ rotation when
+                                    #   SPARK_GRAFT_BENCH_FULL=1) + streaming
+    python bench.py --streaming     # the streaming stores alone
+
+Every run also writes ONE new record,
+bench_runs/<UTC time>_<source>_c<cpus>_sf<sf>[_streaming].json, opened
+write-once: no run rewrites or merges into another run's record. Its
+"stamp" says how the reading was taken (cores, scale factor, runs per
+query, warm pass, methodology version, git sha, Spark/Python/Java
+versions), and compare(base, new) refuses two records whose stamps differ
+in cores, scale factor, warm pass or method.
+
 Each query is timed over a full execution (collect of a bounded result —
 aggregates/top-k, so driver transfer is negligible). A warmup query runs
 first so JVM/codegen startup isn't attributed to the first measurement.
@@ -28,16 +40,36 @@ runs far more than three times per session.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import platform
+import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
+
+from py4j.protocol import Py4JError
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from uav_streamprocessor_spark import registry
 from uav_streamprocessor_spark.session import get_spark
+from uav_streamprocessor_spark.streaming.ann_stream import run_incremental_ann_index
+from uav_streamprocessor_spark.streaming.anomaly_stream import anomaly_stream
+from uav_streamprocessor_spark.streaming.cms_stream import cms_stream
+from uav_streamprocessor_spark.streaming.curation_stream import run_incremental_curation
+from uav_streamprocessor_spark.streaming.dedup_stream import run_incremental_neardup
+from uav_streamprocessor_spark.streaming.ewma_stream import ewma_stream
+from uav_streamprocessor_spark.streaming.kll_stream import run_incremental_kll
+from uav_streamprocessor_spark.streaming.packing_stream import packed_stream
+from uav_streamprocessor_spark.streaming.rate_limit_stream import rate_limited_stream
+from uav_streamprocessor_spark.streaming.session_stream import session_stream
+from uav_streamprocessor_spark.streaming.sketch_stream import run_incremental_sketches
+from uav_streamprocessor_spark.streaming.topk_stream import topk_stream
 
 # headline set: the flagship + one representative per operator family
 HEADLINE = [
@@ -206,7 +238,7 @@ def _canary_fingerprints(rec: dict) -> tuple[float | None, float | None]:
     """(jvm_canary_total, udf_canary) box fingerprints of one bench
     record — the five plan-frozen JVM trivia vs the Python-UDF-lane
     pixel canary (the two lanes drift independently, r14). The JVM
-    fingerprint requires ALL five members (ADVICE r15): a ledger
+    fingerprint requires ALL five members (ADVICE r15): a record
     carrying only a subset would produce a silently partial total that
     skews every normalized ratio compared against a full-total run —
     None makes the caller's 'unnormalized' fallback engage instead."""
@@ -222,111 +254,124 @@ def _canary_fingerprints(rec: dict) -> tuple[float | None, float | None]:
     )
 
 
-def _source_canaries(rec: dict) -> dict[str, tuple[float | None, float | None]]:
-    """Per-source (jvm, udf) canary fingerprints of a merged artifact,
-    derived from the runs_by_source ledgers (every canary member is a
-    HEADLINE query, so each source's ledger carries its own readings)."""
-    out: dict[str, tuple[float | None, float | None]] = {}
-    sources = rec.get("runs_by_source")
-    if isinstance(sources, dict):
-        for src, qd in sources.items():
-            if isinstance(qd, dict):
-                out[src] = _canary_fingerprints(
-                    {"canary": {k: qd[k] for k in CANARY if k in qd}}
-                )
-    return out
+# Two records are comparable only when their stamps agree on these
+# fields: a reading from 8 cores divided by one from 32 measures the core
+# count, not the code, and the lane canaries cannot correct for it (they
+# are per-job-floor bound, so they scale ≈1 with cores).
+COMPARABLE = ("cpus", "sf", "warm", "method")
+
+# Methodology versions. 1: a query's timing covers building its plan and
+# collecting its bounded result (after one untimed pass when `warm`).
+# 2, the streaming stores: each store's feed files are written before the
+# clock starts, so a timing covers only the micro-batch loop (method-1
+# streaming readings, up to r18, also covered writing the feed).
+QUERY_METHOD = 1
+STREAM_METHOD = 2
+
+ROOT = Path(__file__).resolve().parent
+RECORD_DIR = ROOT / "bench_runs"
 
 
-def _source_consistent_reading(
-    rec: dict, q: str
-) -> tuple[float | None, float | None, float | None, str]:
-    """(value, jvm_canary, udf_canary, source) for query q in a merged
-    artifact, pairing the value with the box fingerprint of the RUN THAT
-    MEASURED IT. Driver first: its values win the merge, so the
-    top-level number for a common query IS the driver's. Falls back to
-    the top-level queries/canary when no per-source ledger carries q."""
-    src_canaries = _source_canaries(rec)
-    sources = rec.get("runs_by_source") or {}
-    for src in ("driver", *sorted(src_canaries)):
-        qd = sources.get(src)
-        if isinstance(qd, dict) and isinstance(qd.get(q), (int, float)):
-            pj, pu = src_canaries.get(src, (None, None))
-            return qd[q], pj, pu, src
-    top_jvm, top_udf = _canary_fingerprints(rec)
-    return (rec.get("queries") or {}).get(q), top_jvm, top_udf, "merged"
+def stamp(spark, sf: float, runs_per_query: int, warm: bool, method: int) -> dict:
+    """The setup a reading was taken under; see COMPARABLE."""
+    sha = subprocess.run(
+        ["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True, text=True
+    ).stdout.strip()
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "sf": sf,
+        "runs_per_query": runs_per_query,
+        "warm": warm,
+        "method": method,
+        "git_sha": sha or None,
+        "spark": spark.version,
+        "python": platform.python_version(),
+        "java": spark.sparkContext._jvm.System.getProperty("java.version"),
+    }
 
 
-def _normalized_ratios(out: dict, measured: dict, full_path: Path) -> None:
-    """Mechanical per-lane canary-normalized round-over-round table
-    (VERDICT r14 #4 — BASELINE.md's manual rule turned into code): for
-    every query THIS run measured that the previous round's artifact
-    also carries, record raw = cur/prev and normalized =
-    (cur/cur_canary) / (prev/prev_canary) with the canary chosen by
-    lane (UDF-heavy vs uav_pixel_detections, JVM vs the 5-query total).
+def record_path(rec: dict) -> Path:
+    """bench_runs/<UTC time>_<source>_c<cpus>_sf<sf>[_streaming].json"""
+    s = rec["stamp"]
+    utc = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+    kind = "_streaming" if s["method"] == STREAM_METHOD else ""
+    return RECORD_DIR / f"{utc}_{rec['source']}_c{s['cpus']}_sf{s['sf']:g}{kind}.json"
 
-    SOURCE-CONSISTENT denominators: the prev artifact is a MERGE —
-    headline values are typically the driver's end-of-round run,
-    rotation values the builder's FULL run, and their box fingerprints
-    can differ by 1.2x+ (r13: the driver box read ~1.23x the builder's
-    on identical code). Each prev value is
-    therefore normalized by the lane canary of the RUN THAT MEASURED IT
-    (runs_by_source, driver preferred where both ran since it wins the
-    merge), falling back to the top-level canary only when no
-    per-source ledger carries the query.
 
-    A fuse opens only on the NORMALIZED ratio > 1.5 (canary members and
-    sub-0.2s trivia excluded — a 0.05s jitter is not a fuse); when a
-    side lacks the lane canary the raw ratio decides, flagged
-    "unnormalized". Retained (merged-in) queries are skipped: they were
-    measured under another run's box fingerprint."""
-    import re
+def write_record(rec: dict, path: Path) -> None:
+    """Write one run's record. Mode "x" raises FileExistsError on an
+    existing path, so no run can rewrite another run's record."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with open(path, "x") as f:
+        f.write(json.dumps(rec, indent=1) + "\n")
 
-    m = re.fullmatch(r"BENCH_full_r(\d+)", full_path.stem)
-    if m is None:
-        return
-    prev_path = full_path.parent / f"BENCH_full_r{int(m.group(1)) - 1:02d}.json"
-    if not prev_path.exists():
-        return
-    try:
-        prev = json.loads(prev_path.read_text())
-    except (OSError, json.JSONDecodeError):
-        return
-    prev_q = prev.get("queries")
-    if not isinstance(prev_q, dict):
-        return
-    cur_jvm, cur_udf = _canary_fingerprints(out)
-    src_canaries = _source_canaries(prev)
+
+def check_comparable(base: dict, new: dict) -> None:
+    """Raise ValueError unless both records carry a stamp and the stamps
+    agree on every COMPARABLE field."""
+    stamps = []
+    for rec in (base, new):
+        s = rec.get("stamp")
+        if not isinstance(s, dict) or any(s.get(k) is None for k in COMPARABLE):
+            raise ValueError(f"bench record has no stamp with {COMPARABLE}")
+        stamps.append(s)
+    diff = {
+        k: (stamps[0][k], stamps[1][k])
+        for k in COMPARABLE
+        if stamps[0][k] != stamps[1][k]
+    }
+    if diff:
+        raise ValueError(f"bench records are not comparable (base, new): {diff}")
+
+
+def compare(base: dict, new: dict) -> dict:
+    """Per-lane canary-normalized ratios of two comparable records
+    (check_comparable raises otherwise).
+
+    For each query both records measured: raw = new/base and normalized
+    = (new/new_canary) / (base/base_canary), with the canary chosen by
+    lane — UDF-lane queries (_udf_lane) against uav_pixel_detections, the
+    rest against the 5-query JVM canary total, because the two lanes
+    drift independently (r14). When a side lacks the lane canary the raw
+    ratio stands in, flagged "unnormalized". A fuse opens above 1.5,
+    except for canary members and pairs whose readings are both under
+    0.2 s (jitter, not a fuse)."""
+    check_comparable(base, new)
+    base_jvm, base_udf = _canary_fingerprints(base)
+    new_jvm, new_udf = _canary_fingerprints(new)
+    base_q = base.get("queries") or {}
     ratios: dict[str, dict] = {}
     fuses: list[str] = []
-    for q, cur in measured.items():
-        prevv, prev_jvm, prev_udf, prev_src = _source_consistent_reading(
-            prev, q
-        )
-        if not isinstance(prevv, (int, float)) or prevv <= 0 or cur <= 0:
+    for q, cur in (new.get("queries") or {}).items():
+        prev = base_q.get(q)
+        if not isinstance(prev, (int, float)) or prev <= 0 or cur <= 0:
             continue
         lane = "udf" if _udf_lane(q) else "jvm"
-        cc, pc = (cur_udf, prev_udf) if lane == "udf" else (cur_jvm, prev_jvm)
-        raw = round(cur / prevv, 3)
-        entry: dict = {"raw": raw, "lane": lane, "prev_source": prev_src}
-        if cc and pc:
-            norm = round((cur / cc) / (prevv / pc), 3)
-            entry["normalized"] = norm
+        nc, bc = (new_udf, base_udf) if lane == "udf" else (new_jvm, base_jvm)
+        entry: dict = {"raw": round(cur / prev, 3), "lane": lane}
+        if nc and bc:
+            entry["normalized"] = round((cur / nc) / (prev / bc), 3)
         else:
-            norm = raw
             entry["unnormalized"] = True
-        if norm > 1.5 and q not in CANARY and max(cur, prevv) >= 0.2:
+        ratio = entry.get("normalized", entry["raw"])
+        if ratio > 1.5 and q not in CANARY and max(cur, prev) >= 0.2:
             fuses.append(q)
         ratios[q] = entry
-    out["normalized_ratios"] = ratios
-    out["normalized_fuses"] = sorted(fuses)
-    out["normalization_canaries"] = {
-        "cur": {"jvm": cur_jvm, "udf": cur_udf},
-        "prev_by_source": {
-            s: {"jvm": c[0], "udf": c[1]} for s, c in src_canaries.items()
-        }
-        or {"merged": dict(zip(("jvm", "udf"), _canary_fingerprints(prev)))},
-        "prev_artifact": prev_path.name,
+    return {
+        "ratios": ratios,
+        "fuses": sorted(fuses),
+        "canaries": {
+            "base": {"jvm": base_jvm, "udf": base_udf},
+            "new": {"jvm": new_jvm, "udf": new_udf},
+        },
     }
+
+
+def _odd(n: int) -> int:
+    """Round an even run count up, so the median of the runs is a true
+    median and never the lower middle value (ADVICE r10)."""
+    return n + 1 if n % 2 == 0 else n
+
 
 N_STREAM_BATCHES = 4
 
@@ -364,344 +409,154 @@ def _runs_for(name: str, default: int) -> int:
                     n = max(1, int(v))
                 except ValueError:
                     pass  # malformed entry: ignore, keep the computed N
-    return n + 1 if n % 2 == 0 else n
+    return _odd(n)
 
 
-def bench_streaming(spark, sf_dir: str) -> dict[str, dict]:
-    """Throughput for the streaming-state paths (VERDICT r4 #6): each
-    feed is split into N_STREAM_BATCHES files and ingested with
-    maxFilesPerTrigger=1 under availableNow — wall time covers the whole
-    micro-batch loop (per-batch joins/state writes included), reported
-    as rows-ingested / wall-sec plus per-batch latency. The equivalence
-    suites prove these paths CORRECT; this records how fast the state
-    maintenance runs at bench scale."""
-    import shutil
-    import tempfile
+def _memory_sink(transform):
+    """start() for a stateful store whose output rows go to a memory sink."""
 
-    from uav_streamprocessor_spark.streaming.ann_stream import (
-        run_incremental_ann_index,
-    )
-    from uav_streamprocessor_spark.streaming.curation_stream import (
-        run_incremental_curation,
-    )
-    from uav_streamprocessor_spark.streaming.dedup_stream import (
-        run_incremental_neardup,
-    )
-    from uav_streamprocessor_spark.streaming.anomaly_stream import (
-        anomaly_stream,
-    )
-    from uav_streamprocessor_spark.streaming.ewma_stream import ewma_stream
-    from uav_streamprocessor_spark.streaming.packing_stream import (
-        packed_stream,
-    )
-    from uav_streamprocessor_spark.streaming.rate_limit_stream import (
-        rate_limited_stream,
-    )
-    from uav_streamprocessor_spark.streaming.session_stream import (
-        session_stream,
-    )
-    from uav_streamprocessor_spark.streaming.sketch_stream import (
-        run_incremental_sketches,
-    )
-    from uav_streamprocessor_spark.streaming.kll_stream import (
-        run_incremental_kll,
-    )
-    from uav_streamprocessor_spark.streaming.cms_stream import cms_stream
-    from uav_streamprocessor_spark.streaming.topk_stream import topk_stream
-
-    base = Path(tempfile.mkdtemp(prefix="bench_stream_"))
-    work = base / "run0"
-    results: dict[str, dict] = {}
-
-    def feed(df, name: str, schema: str, ordered_by=None):
-        """Write df as N time/hash-split files, return a file stream."""
-        src = work / f"src_{name}"
-        if ordered_by is not None:
-            # time-range split (sequential-state contract: per-key ts
-            # order must hold across batches)
-            from pyspark.sql import Window
-
-            import pyspark.sql.functions as _F
-
-            total = df.count()
-            per = -(-total // N_STREAM_BATCHES)
-            ranked = df.withColumn(
-                "_rn", _F.row_number().over(Window.orderBy(*ordered_by))
-            )
-            for i in range(N_STREAM_BATCHES):
-                ranked.filter(
-                    (_F.col("_rn") > i * per) & (_F.col("_rn") <= (i + 1) * per)
-                ).drop("_rn").coalesce(1).write.parquet(str(src / f"f{i}"))
-        else:
-            for i in range(N_STREAM_BATCHES):
-                df.filter(
-                    (df[df.columns[0]] % N_STREAM_BATCHES) == i
-                ).coalesce(1).write.parquet(str(src / f"f{i}"))
+    def start(stream, work: Path):
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src) + "/*")
+            transform(stream)
+            .writeStream.format("memory")
+            .queryName(f"bench_{work.parent.name}")
+            .outputMode("append")
+            .option("checkpointLocation", str(work / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
 
-    # Median-of-3 per store BY DEFAULT (VERDICT r11 #6): single readings
-    # were exactly the condition that produced the r10 false fuse on the
-    # query side (run 2 read 3-4× on byte-identical code), and BASELINE.md
-    # prescribes N=3 adjudication for the streaming section. A run
-    # re-ingests the whole feed, so N runs cost N× the section —
-    # $SPARK_GRAFT_BENCH_STREAM_RUNS=1 remains the opt-out for quick
-    # local iterations. Runner factories build a FRESH query + checkpoint
-    # per run so replays don't no-op against committed offsets.
-    n_stream_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_STREAM_RUNS", "3")))
-    # force ODD N: with even N the lower median is the MINIMUM for N=2,
-    # biasing the headline fast while the artifact calls it a median
-    # (ADVICE r10) — round up so 'median' always means the true median
-    if n_stream_runs % 2 == 0:
-        n_stream_runs += 1
+    return start
 
-    def record(name: str, rows: int, runner) -> None:
-        nonlocal work
-        secs = []
-        for i in range(n_stream_runs):
-            # every runner resolves `work` at CALL time (feed src,
-            # store, checkpoint all live under it), so rebinding it per
-            # run gives each run a fresh checkpoint — without this, run
-            # 2+ would no-op against run 1's committed availableNow
-            # offsets and time ~0
-            work = base / f"{name}_run{i}"
-            t0 = time.perf_counter()
-            runner()
-            secs.append(round(time.perf_counter() - t0, 3))
-        # true median — N is forced odd above, so this index is exact
-        sec = sorted(secs)[(len(secs) - 1) // 2]
-        results[name] = {
-            "rows": rows,
-            "batches": N_STREAM_BATCHES,
-            "sec": sec,
-            "rows_per_sec": round(rows / sec, 1),
-            "sec_per_batch": round(sec / N_STREAM_BATCHES, 3),
-        }
-        if n_stream_runs > 1:
-            results[name]["runs"] = secs
-            results[name]["stat"] = "median"
-        print(
-            f"# streaming {name}: {rows} rows / {sec}s "
-            f"= {results[name]['rows_per_sec']} rows/s",
-            file=sys.stderr,
-        )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    n_docs = docs.count()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n_vec = emb.count()
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    n_ev = ev.count()
+_EVENTS = "event_id long, ts timestamp, user_id long, event_type string"
+_VALUES = "event_id long, ts timestamp, user_id long, value double"
+_TS_ORDER = ("ts", "event_id")
 
-    record(
-        "dedup_lsh_index",
-        n_docs,
-        lambda: run_incremental_neardup(
-            feed(docs, "dedup", "doc_id long, text string"),
-            index_dir=str(work / "dedup_index"),
-            pairs_dir=str(work / "dedup_pairs"),
-            checkpoint_dir=str(work / "ckpt_dedup"),
-        ).awaitTermination(600),
-    )
-    record(
-        "curation_store",
-        n_docs,
-        lambda: run_incremental_curation(
-            feed(docs, "curation", "doc_id long, text string"),
-            store_dir=str(work / "curation_store"),
-            checkpoint_dir=str(work / "ckpt_curation"),
-        ).awaitTermination(600),
-    )
-    record(
-        "ann_index",
-        n_vec,
-        lambda: run_incremental_ann_index(
-            feed(emb, "ann", "vec_id long, embedding array<float>, label int"),
-            index_dir=str(work / "ann_index"),
-            checkpoint_dir=str(work / "ckpt_ann"),
-        ).awaitTermination(600),
-    )
-    record(
-        "hll_sketch_store",
-        n_ev,
-        lambda: run_incremental_sketches(
-            feed(ev, "sketch", "event_id long, ts timestamp, user_id long, event_type string"),
-            sketch_dir=str(work / "sketch_store"),
-            checkpoint_dir=str(work / "ckpt_sketch"),
-        ).awaitTermination(600),
-    )
-    import pyspark.sql.functions as _F2
+# One row per streaming store: (store, input table, feed schema,
+# ordered_by, start). The feed is the table's schema columns split into
+# N_STREAM_BATCHES files; start(stream, work) starts the store's
+# availableNow query over that file stream, writing under `work`.
+STREAM_STORES = [
+    ("dedup_lsh_index", "documents", "doc_id long, text string", None,
+     lambda s, w: run_incremental_neardup(
+         s, index_dir=str(w / "index"), pairs_dir=str(w / "pairs"),
+         checkpoint_dir=str(w / "ckpt"))),
+    ("curation_store", "documents", "doc_id long, text string", None,
+     lambda s, w: run_incremental_curation(
+         s, store_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+    ("ann_index", "embeddings",
+     "vec_id long, embedding array<float>, label int", None,
+     lambda s, w: run_incremental_ann_index(
+         s, index_dir=str(w / "index"), checkpoint_dir=str(w / "ckpt"))),
+    ("hll_sketch_store", "events", _EVENTS, None,
+     lambda s, w: run_incremental_sketches(
+         s, sketch_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+    ("kll_sketch_store", "events",
+     "event_id long, ts timestamp, event_type string, value double", None,
+     lambda s, w: run_incremental_kll(
+         s, store_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+    ("rate_limit_state", "events", _EVENTS, _TS_ORDER,
+     _memory_sink(rate_limited_stream)),
+    ("packing_state", "documents",
+     "doc_id long, text string, lang string, source string, n_chars long",
+     ("doc_id",), _memory_sink(packed_stream)),
+    ("ewma_state", "events", _VALUES, _TS_ORDER, _memory_sink(ewma_stream)),
+    ("anomaly_state", "events", _VALUES, _TS_ORDER,
+     _memory_sink(anomaly_stream)),
+    ("session_state", "events", _VALUES, _TS_ORDER,
+     _memory_sink(session_stream)),
+    ("topk_state", "events", _EVENTS, _TS_ORDER, _memory_sink(topk_stream)),
+    ("cms_state", "events", _EVENTS, _TS_ORDER, _memory_sink(cms_stream)),
+]
 
-    ev_kll = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "event_type",
-        _F2.col("value").cast("double").alias("value"),
+
+def _feed(spark, df, src: Path, schema: str, ordered_by):
+    """Write df as N_STREAM_BATCHES parquet files under src and return a
+    file stream that reads one file per micro-batch. With ordered_by the
+    split is by time range (the sequential-state stores need per-key ts
+    order to hold across batches); otherwise by the first column's hash."""
+    n = N_STREAM_BATCHES
+    if ordered_by is not None:
+        per = -(-df.count() // n)
+        ranked = df.withColumn("_rn", F.row_number().over(Window.orderBy(*ordered_by)))
+        parts = [
+            ranked.filter((F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per))
+            .drop("_rn")
+            for i in range(n)
+        ]
+    else:
+        parts = [df.filter(df[df.columns[0]] % n == i) for i in range(n)]
+    for i, part in enumerate(parts):
+        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src) + "/*")
     )
-    record(
-        "kll_sketch_store",
-        n_ev,
-        lambda: run_incremental_kll(
-            feed(ev_kll, "kll", "event_id long, ts timestamp, event_type string, value double"),
-            store_dir=str(work / "kll_store"),
-            checkpoint_dir=str(work / "ckpt_kll"),
-        ).awaitTermination(600),
-    )
-    record(
-        "rate_limit_state",
-        n_ev,
-        lambda: rate_limited_stream(
-            feed(
-                ev,
-                "ratelimit",
-                "event_id long, ts timestamp, user_id long, event_type string",
-                ordered_by=("ts", "event_id"),
+
+
+def bench_streaming(spark, sf_dir: str, n_runs: int) -> dict[str, dict]:
+    """Throughput of the streaming state stores (VERDICT r4 #6), method
+    STREAM_METHOD: each store's feed is written before the clock starts,
+    then ingested with maxFilesPerTrigger=1 under availableNow, so a
+    timing covers the whole micro-batch loop (per-batch joins and state
+    writes included) and nothing else. Reported as rows-ingested /
+    wall-sec plus per-batch latency; the equivalence suites prove these
+    paths correct, this records how fast the state maintenance runs.
+
+    Each store reports the median of n_runs runs (VERDICT r11 #6: single
+    readings produced the r10 false fuse). Every run gets its own
+    checkpoint and store directories, so runs 2+ do not no-op against
+    run 1's committed availableNow offsets."""
+    results: dict[str, dict] = {}
+    with tempfile.TemporaryDirectory(prefix="bench_stream_") as tmp:
+        for store, table, schema, ordered_by, start in STREAM_STORES:
+            df = spark.read.schema(schema).parquet(f"{sf_dir}/{table}.parquet")
+            rows = df.count()
+            stream = _feed(spark, df, Path(tmp) / store / "src", schema, ordered_by)
+            secs = []
+            for i in range(n_runs):
+                t0 = time.perf_counter()
+                start(stream, Path(tmp) / store / f"run{i}").awaitTermination(600)
+                secs.append(round(time.perf_counter() - t0, 3))
+            sec = sorted(secs)[n_runs // 2]
+            results[store] = {
+                "rows": rows,
+                "batches": N_STREAM_BATCHES,
+                "sec": sec,
+                "rows_per_sec": round(rows / sec, 1),
+                "sec_per_batch": round(sec / N_STREAM_BATCHES, 3),
+            }
+            if n_runs > 1:
+                results[store]["runs"] = secs
+                results[store]["stat"] = "median"
+            print(
+                f"# streaming {store}: {rows} rows / {sec}s "
+                f"= {results[store]['rows_per_sec']} rows/s",
+                file=sys.stderr,
             )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_rate_limit")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_ratelimit"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    full_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    record(
-        "packing_state",
-        n_docs,
-        lambda: packed_stream(
-            feed(
-                full_docs,
-                "packing",
-                "doc_id long, text string, lang string, source string, "
-                "n_chars long",
-                ordered_by=("doc_id",),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_packing")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_packing"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    ev_val = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    record(
-        "ewma_state",
-        n_ev,
-        lambda: ewma_stream(
-            feed(
-                ev_val,
-                "ewma",
-                "event_id long, ts timestamp, user_id long, value double",
-                ordered_by=("ts", "event_id"),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_ewma")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_ewma"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    record(
-        "anomaly_state",
-        n_ev,
-        lambda: anomaly_stream(
-            feed(
-                ev_val,
-                "anomaly",
-                "event_id long, ts timestamp, user_id long, value double",
-                ordered_by=("ts", "event_id"),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_anomaly")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_anomaly"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    record(
-        "session_state",
-        n_ev,
-        lambda: session_stream(
-            feed(
-                ev_val,
-                "session",
-                "event_id long, ts timestamp, user_id long, value double",
-                ordered_by=("ts", "event_id"),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_session")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_session"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    ev_type = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    record(
-        "topk_state",
-        n_ev,
-        lambda: topk_stream(
-            feed(
-                ev_type,
-                "topk",
-                "event_id long, ts timestamp, user_id long, event_type string",
-                ordered_by=("ts", "event_id"),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_topk")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_topk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    record(
-        "cms_state",
-        n_ev,
-        lambda: cms_stream(
-            feed(
-                ev_type,
-                "cms",
-                "event_id long, ts timestamp, user_id long, event_type string",
-                ordered_by=("ts", "event_id"),
-            )
-        )
-        .writeStream.format("memory")
-        .queryName("bench_cms")
-        .outputMode("append")
-        .option("checkpointLocation", str(work / "ckpt_cms"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600),
-    )
-
-    shutil.rmtree(base, ignore_errors=True)
     return results
+
+
+def _session_hygiene(spark) -> dict:
+    """Clear what a loaded session can clear before the next section and
+    report what the block manager still holds. After the headline load,
+    localCheckpoint blocks stay pinned (r14: 232 MB across 5 RDDs
+    survived an explicit GC), and readings taken in such a session drift
+    1.2-9x above dedicated-session medians (r14 streaming, r15 rotation)."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(2)
+    try:
+        rdds = list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    except Py4JError:
+        return {}  # diagnostic only: must not fail a bench
+    return {
+        "cached_rdds": len(rdds),
+        "cached_mb": round(sum(i.memSize() for i in rdds) / 1e6, 1),
+    }
 
 
 def _bench_one(qmap, spark, sf_dir, name, n_runs, warm, timings, spread):
@@ -733,59 +588,33 @@ def _bench_one(qmap, spark, sf_dir, name, n_runs, warm, timings, spread):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.removeprefix("sf") or "0.1")
+    # provenance (VERDICT r13 #2): the builder labels its runs with
+    # SPARK_GRAFT_BENCH_SOURCE=builder; an unlabeled run is the driver's
+    source = os.environ.get("SPARK_GRAFT_BENCH_SOURCE", "driver")
+    stream_runs = _odd(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_STREAM_RUNS", "3"))))
     spark = get_spark(app_name="bench")
 
     if "--streaming" in sys.argv:
-        streaming = bench_streaming(spark, sf_dir)
-        # a dedicated --streaming session is the AUTHORITATIVE streaming
-        # reading (r14): stores measured after the 70-query headline load
-        # in the same session read 3-9x their dedicated-session medians on
-        # identical code (accumulated stages/GC, the r13 in-session drift
-        # pattern) — so the dedicated session now writes the round
-        # artifact's streaming section, and _merge_full_artifact keeps it
-        # over any later full run's in-session reading (which lands in
-        # "streaming_in_session" for comparison).
-        full_path = _full_artifact_path(sf)
-        if full_path is not None:
-            art: dict | None = None
-            if full_path.exists():
-                try:
-                    art = json.loads(full_path.read_text())
-                except (OSError, json.JSONDecodeError):
-                    art = None
-            if not isinstance(art, dict):
-                # ADVICE r14 #1: a dedicated session that runs BEFORE any
-                # full run must still persist — seed a minimal artifact so
-                # _merge_full_artifact's dedicated-session precedence rule
-                # protects this reading regardless of run order (a later
-                # full run's polluted in-session numbers land in
-                # streaming_in_session, not here)
-                art = {"metric": "streaming_only_seed", "sf": sf}
-            if not art.get("streaming_dedicated_session") and isinstance(
-                art.get("streaming"), dict
-            ):
-                art["streaming_in_session"] = art["streaming"]
-            art["streaming"] = streaming
-            art["streaming_dedicated_session"] = True
-            art["streaming_source"] = os.environ.get(
-                "SPARK_GRAFT_BENCH_SOURCE", "driver"
-            )
-            full_path.write_text(json.dumps(art, indent=1) + "\n")
-            print(
-                f"# streaming section updated in {full_path}",
-                file=sys.stderr,
-            )
-        print(
-            json.dumps(
-                {
-                    "metric": "streaming_ingest",
-                    "value": round(sum(s["sec"] for s in streaming.values()), 3),
-                    "unit": "sec",
-                    "streaming": streaming,
-                    "sf": sf,
-                }
-            )
-        )
+        # a dedicated session is the authoritative streaming reading (r14:
+        # stores measured after the headline load in the same session read
+        # 3-9x their dedicated-session medians on identical code)
+        streaming = bench_streaming(spark, sf_dir, stream_runs)
+        compact = {
+            "metric": "streaming_ingest",
+            "value": round(sum(s["sec"] for s in streaming.values()), 3),
+            "unit": "sec",
+            "streaming": streaming,
+            "sf": sf,
+        }
+        rec = {
+            **compact,
+            "source": source,
+            "stamp": stamp(spark, sf, stream_runs, False, STREAM_METHOD),
+        }
+        path = record_path(rec)
+        write_record(rec, path)
+        print(f"# bench record: {path}", file=sys.stderr)
+        print(json.dumps(compact))
         return
 
     qmap = registry.queries()
@@ -795,58 +624,21 @@ def main() -> None:
     qmap["uav_class_stats"](spark, sf_dir).collect()
     qmap["uav_pixel_detections"](spark, sf_dir).collect()
 
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    if n_runs % 2 == 0:  # keep 'median' exact (ADVICE r10)
-        n_runs += 1
-    sections = [("headline", HEADLINE)]
-    if os.environ.get("SPARK_GRAFT_BENCH_FULL") == "1":
-        sections.append(("rotation", ROTATION))
+    n_runs = _odd(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))))
     warm = os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0"
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    section_hygiene: dict[str, dict] = {}
-    for section, names in sections:
-        if section != "headline":
-            # session hygiene between sections (r15): the r15 FULL run
-            # read 19 mid/heavy queries 1.2-2x their dedicated medians —
-            # the same load-accumulation drift the r14 streaming fix
-            # measured (pinned localCheckpoint blocks + GC debt after
-            # the 38-query headline load). Apply the identical remedy
-            # before the rotation section and record the residual so
-            # the artifact shows how polluted the session still was.
-            import gc as _gc
-
-            spark.catalog.clearCache()
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(2)
-            info = {}
-            try:
-                rdds = list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-                info = {
-                    "cached_rdds": len(rdds),
-                    "cached_mb": round(
-                        sum(i.memSize() for i in rdds) / 1e6, 1
-                    ),
-                }
-            except Exception:
-                pass  # diagnostic only
-            section_hygiene[section] = info
-        for name in names:
-            _bench_one(
-                qmap, spark, sf_dir, name, n_runs, warm, timings, spread
-            )
-    total = round(sum(timings.values()), 3)
-    # provenance (VERDICT r13 #2): the builder labels its runs with
-    # SPARK_GRAFT_BENCH_SOURCE=builder; an unlabeled run is the driver's
-    # end-of-round measurement (the driver does not set the env var).
-    # Recorded per run AND per query (runs_by_source, merged across the
-    # round's runs) so round-over-round medians can be computed same-box.
-    source = os.environ.get("SPARK_GRAFT_BENCH_SOURCE", "driver")
+    hygiene: dict[str, dict] = {}
+    for name in HEADLINE:
+        _bench_one(qmap, spark, sf_dir, name, n_runs, warm, timings, spread)
+    if os.environ.get("SPARK_GRAFT_BENCH_FULL") == "1":
+        hygiene["rotation"] = _session_hygiene(spark)
+        for name in ROTATION:
+            _bench_one(qmap, spark, sf_dir, name, n_runs, warm, timings, spread)
     canary = {q: timings[q] for q in CANARY if q in timings}
     out = {
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "spread": spread,
@@ -855,76 +647,24 @@ def main() -> None:
         "source": source,
         "canary": canary,
         "canary_total_sec": round(sum(canary.values()), 3),
-        "runs_by_source": {source: dict(timings)},
-        "canary_by_source": {source: round(sum(canary.values()), 3)},
+        "stamp": stamp(spark, sf, n_runs, warm, QUERY_METHOD),
     }
-    if section_hygiene:
-        out["section_hygiene"] = section_hygiene
-    # streaming-state throughput section (VERDICT r4 #6) — single-shot
-    # wall timings, not medians (each run re-ingests the whole feed);
+    # streaming-state throughput section (VERDICT r4 #6);
     # SPARK_GRAFT_BENCH_STREAMING=0 skips it
     if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0":
-        # session hygiene before the streaming section (r14): the 70-query
-        # headline load leaves localCheckpoint blocks pinned in the block
-        # manager (measured: 232 MB across 5 RDDs survives even an
-        # explicit GC after SIX queries; the full run checkpoints
-        # hundreds of times) — one suspected contributor to the 3-9x
-        # in-session streaming drift. Clear what can be cleared and give
-        # the ContextCleaner a GC cycle; the residual is reported so the
-        # artifact records how polluted the session still was. The
-        # DEDICATED --streaming session remains the authoritative
-        # reading either way (see the --streaming branch).
-        import gc as _gc
-
-        spark.catalog.clearCache()
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2)
-        try:
-            rdd_info = list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-            out["pre_streaming_cached_rdds"] = len(rdd_info)
-            out["pre_streaming_cached_mb"] = round(
-                sum(i.memSize() for i in rdd_info) / 1e6, 1
-            )
-        except Exception:
-            pass  # diagnostic only — API differences must not fail a bench
-        out["streaming"] = bench_streaming(spark, sf_dir)
+        hygiene["streaming"] = _session_hygiene(spark)
+        out["streaming"] = bench_streaming(spark, sf_dir, stream_runs)
+        out["stamp"]["streaming_method"] = STREAM_METHOD
+        out["stamp"]["streaming_runs"] = stream_runs
+    if hygiene:
+        out["section_hygiene"] = hygiene
+    path = record_path(out)
+    write_record(out, path)
+    print(f"# bench record: {path}", file=sys.stderr)
 
     # VERDICT r5 #2/#3: the driver records only the LAST 2000 chars of
-    # stdout, and the full dict (36+ queries + spreads + streaming) no
-    # longer fits — r5's medians were unrecoverable from BENCH_r05.json.
-    # So: the full artifact goes to a committed per-round file, and stdout
-    # carries ONE compact medians-only line (~1.2 KB) that always parses.
-    full_path = _full_artifact_path(sf)
-    if full_path is not None:
-        # same-round ratio entries from a prior run survive the rewrite:
-        # they were normalized under THAT run's box fingerprint, which
-        # this run cannot reproduce
-        prior_ratios: dict = {}
-        prior_fuses: list = []
-        if full_path.exists():
-            try:
-                _prior = json.loads(full_path.read_text())
-                prior_ratios = _prior.get("normalized_ratios") or {}
-                prior_fuses = _prior.get("normalized_fuses") or []
-            except (OSError, json.JSONDecodeError):
-                pass
-        _merge_full_artifact(full_path, out)
-        _normalized_ratios(out, timings, full_path)
-        nr = out.get("normalized_ratios")
-        if nr is not None and prior_ratios:
-            retained_r = {
-                q: {**e, "retained": True}
-                for q, e in prior_ratios.items()
-                if q not in nr
-            }
-            nr.update(retained_r)
-            out["normalized_fuses"] = sorted(
-                set(out.get("normalized_fuses", []))
-                | {q for q in prior_fuses if q in retained_r}
-            )
-        full_path.write_text(json.dumps(out, indent=1) + "\n")
-        print(f"# full bench artifact: {full_path}", file=sys.stderr)
+    # stdout, so the record file carries everything and stdout ONE
+    # compact medians-only line (~1.2 KB) that always parses
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -939,149 +679,19 @@ def main() -> None:
         compact["streaming_total_sec"] = round(
             sum(s["sec"] for s in out["streaming"].values()), 3
         )
-    if full_path is not None:
-        compact["full"] = full_path.name
-    # the driver captures only the last 2000 chars of stdout: if the
-    # per-query dict has grown past the budget (rotation + BENCH_FULL),
-    # drop it from the compact line — the totals still parse and the full
-    # artifact file carries every timing (r6 ADVICE)
+    rel = path.relative_to(ROOT)
+    if sf == 0.1:
+        # the driver-scale line names its record, the same key set the
+        # driver has always parsed at sf0.1
+        compact["full"] = str(rel)
+    # past the stdout budget (rotation + BENCH_FULL), drop the per-query
+    # dict from the compact line — the totals still parse and the record
+    # carries every timing (r6 ADVICE)
     line = json.dumps(compact)
     if len(line) > 1800:
-        compact["queries"] = {
-            "_elided": f"{len(timings)} timings in {full_path.name}"
-            if full_path is not None
-            else f"{len(timings)} timings elided (stdout budget)"
-        }
+        compact["queries"] = {"_elided": f"{len(timings)} timings in {rel}"}
         line = json.dumps(compact)
     print(line)
-
-
-def _merge_full_artifact(full_path: Path, out: dict) -> None:
-    """Merge semantics for the one-file-per-round rule (VERDICT r12 #1):
-    the r12 driver run, which measures only HEADLINE, overwrote the
-    builder's BENCH_FULL=1 artifact and silently dropped 32 rotation-
-    query medians from the round's record. Now a run that did NOT
-    measure a query RETAINS the prior run's reading for it instead of
-    deleting it: this run's measurements always override common queries
-    (the last full measurement still wins where both ran), queries only
-    the prior artifact measured are kept and listed in
-    "retained_queries", and "value" stays the sum of THIS run's
-    queries (the round-over-round headline total) while
-    "value_all_queries" carries the merged sum."""
-    if not full_path.exists():
-        return
-    try:
-        prev = json.loads(full_path.read_text())
-    except (OSError, json.JSONDecodeError):
-        return
-    # per-source ledgers merge FIRST (VERDICT r13 #2) — they must survive
-    # even when the top-level queries dict has nothing to retain: this
-    # run's source section absorbs this run's timings on top of its own
-    # prior entries; other sources' sections pass through untouched, so
-    # the committed artifact always carries the same-round builder
-    # reading next to the driver's.
-    if isinstance(out.get("runs_by_source"), dict) and out["runs_by_source"]:
-        this_src = next(iter(out["runs_by_source"]))
-        prev_rbs = prev.get("runs_by_source")
-        if isinstance(prev_rbs, dict):
-            merged_rbs = {
-                k: dict(v) for k, v in prev_rbs.items() if isinstance(v, dict)
-            }
-            merged_rbs[this_src] = {
-                **merged_rbs.get(this_src, {}),
-                **out["runs_by_source"][this_src],
-            }
-            out["runs_by_source"] = merged_rbs
-        prev_cbs = prev.get("canary_by_source")
-        if isinstance(prev_cbs, dict):
-            out["canary_by_source"] = {
-                **prev_cbs,
-                **out.get("canary_by_source", {}),
-            }
-    # a streaming section from the prior run survives a --no-streaming run
-    if "streaming" not in out and isinstance(prev.get("streaming"), dict):
-        out["streaming"] = prev["streaming"]
-        out["streaming_retained"] = True
-        if prev.get("streaming_dedicated_session"):
-            out["streaming_dedicated_session"] = True
-            out["streaming_source"] = prev.get("streaming_source")
-    # a DEDICATED --streaming session's reading stays authoritative over
-    # this run's in-session one (r14: loaded-session stores read 3-9x
-    # their dedicated medians on identical code); the in-session reading
-    # is preserved next to it for drift comparison
-    elif (
-        isinstance(prev.get("streaming"), dict)
-        and prev.get("streaming_dedicated_session")
-        and isinstance(out.get("streaming"), dict)
-        and not out.get("streaming_dedicated_session")
-    ):
-        out["streaming_in_session"] = out["streaming"]
-        out["streaming"] = prev["streaming"]
-        out["streaming_dedicated_session"] = True
-        out["streaming_source"] = prev.get("streaming_source")
-    # adjudication records survive later rewrites: a dedicated median-of-9
-    # session's repair of a sick-session reading (r14) must not vanish
-    # when the driver's end-of-round run rewrites the file
-    for key in ("adjudicated_queries", "repair_note"):
-        if key not in out and key in prev:
-            out[key] = prev[key]
-    prev_q = prev.get("queries")
-    if not isinstance(prev_q, dict):
-        return
-    retained = {
-        k: v for k, v in prev_q.items()
-        if k not in out["queries"] and isinstance(v, (int, float))
-    }
-    if not retained:
-        return
-    out["queries"] = {**retained, **out["queries"]}
-    prev_spread = prev.get("spread") or {}
-    out["spread"] = {
-        **{k: prev_spread[k] for k in retained if k in prev_spread},
-        **out["spread"],
-    }
-    out["retained_queries"] = sorted(retained)
-    out["value_all_queries"] = round(sum(out["queries"].values()), 3)
-
-
-def _full_artifact_path(sf: float) -> Path | None:
-    """Committed per-round artifact path: BENCH_full_r{N}.json. N comes
-    from $SPARK_GRAFT_ROUND when set (authoritative — glob inference
-    mislabels a re-run made AFTER the driver records the current round's
-    BENCH_r{N}.json, r6 ADVICE); otherwise it is inferred as one past the
-    newest driver-recorded BENCH_r*.json. Returns None when the repo
-    root isn't writable (e.g. a sandboxed run).
-
-    ONE file per round (VERDICT r10 #2): every sf0.1 run — builder
-    iteration or the driver's end-of-round measurement — writes the
-    same file. Since r13 the write MERGES (see _merge_full_artifact):
-    this run's measurements override common queries, but queries only a
-    prior run measured are retained, so the driver's headline-only run
-    no longer deletes the builder's rotation medians (VERDICT r12 #1).
-    The driver's run is always last in a round and commits its
-    modification, so the committed file carries the driver's numbers
-    for every headline query: the AUTHORITATIVE reading for
-    round-over-round deltas. (This retires the r8 freeze-redirect to
-    BENCH_full_r{N}_driver.json, which made every round a two-file
-    provenance puzzle — BASELINE.md r10 caveat.)"""
-    import re
-
-    root = Path(__file__).resolve().parent
-    if sf != 0.1:
-        return None  # only the driver-scale run is the round artifact
-    env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    if env_round and env_round.isdigit():
-        n = int(env_round)
-    else:
-        rounds = [
-            int(m.group(1))
-            for p in root.glob("BENCH_r*.json")
-            if (m := re.fullmatch(r"BENCH_r(\d+)", p.stem))
-        ]
-        n = (max(rounds) + 1) if rounds else 1
-    if not os.access(root, os.W_OK):
-        return None
-    return root / f"BENCH_full_r{n:02d}.json"
 
 
 if __name__ == "__main__":

@@ -4,19 +4,17 @@ the queries under adjudication — no other bench load in the session.
 
     python scripts/adjudicate_bench.py dedup_winnowing=9 text_ngram_novelty=9
 
-Since r15 the canary-normalized fuse rule (BASELINE.md) is applied
-MECHANICALLY (VERDICT r14 #4): the session also times the 6-query
-CANARY set to fingerprint this box, loads a reference round artifact
-($SPARK_GRAFT_REF_BENCH, default the newest BENCH_full_r*.json), and
-emits per query raw + lane-normalized ratios and an open/closed fuse
-verdict — UDF-lane queries normalize against uav_pixel_detections,
-JVM queries against the 5-query JVM canary total, because the two
-lanes provably drift independently (r14 same-day excursion).
+The session also times the 6-query CANARY set to fingerprint this box
+and applies `bench.compare` against a reference record
+($SPARK_GRAFT_REF_BENCH, any stamped bench record; default the newest
+non-streaming bench_runs/*.json): per query raw + lane-normalized ratios
+and an open/closed fuse verdict. `compare` raises when the reference was
+taken at another core count, scale factor or methodology, so that check
+runs before any timing.
 
-Prints one JSON line {"query": {"median": s, "runs": [...],
-"raw_ratio": r, "normalized_ratio": n, "lane": ..., "fuse": bool},
-"_canary": {...}} suitable for pasting into the BASELINE.md
-adjudication table."""
+Prints one JSON line {"query": {"median": s, "runs": [...], "raw": r,
+"normalized": n, "lane": ..., "fuse": bool}, "_canary": {...}} suitable
+for pasting into the BASELINE.md adjudication table."""
 
 from __future__ import annotations
 
@@ -34,8 +32,7 @@ from uav_streamprocessor_spark.session import get_spark
 
 
 def _median_runs(qmap, spark, sf_dir, name: str, n: int) -> dict:
-    if n % 2 == 0:
-        n += 1
+    n = bench_mod._odd(n)
     qmap[name](spark, sf_dir).collect()  # per-query untimed warmup
     runs: list[float] = []
     for _ in range(n):
@@ -46,19 +43,15 @@ def _median_runs(qmap, spark, sf_dir, name: str, n: int) -> dict:
     return {"median": srt[n // 2], "min": srt[0], "max": srt[-1], "runs": runs}
 
 
-def _reference_artifact() -> tuple[dict, str] | tuple[None, None]:
+def _reference_path() -> Path | None:
     env = os.environ.get("SPARK_GRAFT_REF_BENCH")
-    root = Path(__file__).resolve().parent.parent
-    path = Path(env) if env else None
-    if path is None:
-        candidates = sorted(root.glob("BENCH_full_r*.json"))
-        path = candidates[-1] if candidates else None
-    if path is None or not path.exists():
-        return None, None
-    try:
-        return json.loads(path.read_text()), path.name
-    except (OSError, json.JSONDecodeError):
-        return None, None
+    if env:
+        return Path(env)
+    runs = [
+        p for p in sorted(bench_mod.RECORD_DIR.glob("*.json"))
+        if not p.stem.endswith("_streaming")
+    ]
+    return runs[-1] if runs else None
 
 
 def main() -> None:
@@ -70,68 +63,42 @@ def main() -> None:
         raise SystemExit("usage: adjudicate_bench.py query=N [query=N ...]")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(Path(sf_dir).name.removeprefix("sf") or "0.1")
     spark = get_spark(app_name="adjudicate")
+    ref_path = _reference_path()
+    ref = json.loads(ref_path.read_text()) if ref_path else None
+    # canaries run median-of-3; canaries and targets get one warm pass
+    cur = {"stamp": bench_mod.stamp(spark, sf, 3, True, bench_mod.QUERY_METHOD)}
+    if ref is not None:
+        bench_mod.check_comparable(ref, cur)
+
     qmap = registry.queries()
     # the bench's standard warmup: views + flagship + one pixel pass
     qmap["uav_class_stats"](spark, sf_dir).collect()
     qmap["uav_pixel_detections"](spark, sf_dir).collect()
 
     # box fingerprint: median-of-3 canary timings for this session
-    canary: dict[str, float] = {}
+    cur["canary"] = {}
     for name in bench_mod.CANARY:
-        canary[name] = _median_runs(qmap, spark, sf_dir, name, 3)["median"]
-        print(f"# canary {name}: {canary[name]}s", file=sys.stderr)
-    cur_jvm, cur_udf = bench_mod._canary_fingerprints({"canary": canary})
+        cur["canary"][name] = _median_runs(qmap, spark, sf_dir, name, 3)["median"]
+        print(f"# canary {name}: {cur['canary'][name]}s", file=sys.stderr)
 
-    ref, ref_name = _reference_artifact()
-
-    out: dict[str, dict] = {}
-    for name, n in targets.items():
-        rec = _median_runs(qmap, spark, sf_dir, name, n)
-        refv, ref_jvm, ref_udf, ref_src = (
-            bench_mod._source_consistent_reading(ref, name)
-            if ref
-            else (None, None, None, None)
-        )
-        if isinstance(refv, (int, float)) and refv > 0 and rec["median"] > 0:
-            rec["ref_source"] = ref_src
-            lane = "udf" if bench_mod._udf_lane(name) else "jvm"
-            cc, pc = (cur_udf, ref_udf) if lane == "udf" else (cur_jvm, ref_jvm)
-            rec["lane"] = lane
-            rec["ref"] = refv
-            rec["raw_ratio"] = round(rec["median"] / refv, 3)
-            if cc and pc:
-                rec["normalized_ratio"] = round(
-                    (rec["median"] / cc) / (refv / pc), 3
-                )
-            else:
-                rec["unnormalized"] = True
-            eff = rec.get("normalized_ratio", rec["raw_ratio"])
-            rec["fuse"] = bool(
-                eff > 1.5 and max(rec["median"], refv) >= 0.2
+    out = {name: _median_runs(qmap, spark, sf_dir, name, n) for name, n in targets.items()}
+    cur["queries"] = {name: rec["median"] for name, rec in out.items()}
+    table = bench_mod.compare(ref, cur) if ref is not None else None
+    for name, rec in out.items():
+        line = f"# {name}: median {rec['median']}s [{rec['min']}..{rec['max']}, n={len(rec['runs'])}]"
+        if table and name in table["ratios"]:
+            rec.update(table["ratios"][name], ref=ref["queries"][name], fuse=name in table["fuses"])
+            line += (
+                f" raw {rec['raw']}x norm {rec.get('normalized', 'n/a')}x vs "
+                f"{ref_path.name} -> {'FUSE OPEN' if rec['fuse'] else 'closed'}"
             )
-        print(
-            f"# {name}: median {rec['median']}s "
-            f"[{rec['min']}..{rec['max']}, n={len(rec['runs'])}]"
-            + (
-                f" raw {rec.get('raw_ratio')}x norm "
-                f"{rec.get('normalized_ratio', 'n/a')}x vs {ref_name} -> "
-                + ("FUSE OPEN" if rec.get("fuse") else "closed")
-                if "raw_ratio" in rec
-                else ""
-            ),
-            file=sys.stderr,
-        )
-        out[name] = rec
-    ref_by_source = bench_mod._source_canaries(ref) if ref else {}
+        print(line, file=sys.stderr)
     out["_canary"] = {
-        "timings": canary,
-        "jvm": cur_jvm,
-        "udf": cur_udf,
-        "ref_artifact": ref_name,
-        "ref_by_source": {
-            s: {"jvm": c[0], "udf": c[1]} for s, c in ref_by_source.items()
-        },
+        "timings": cur["canary"],
+        "ref_record": ref_path.name if ref_path else None,
+        **(table["canaries"] if table else {}),
     }
     print(json.dumps(out))
 

@@ -1,7 +1,7 @@
-"""Round-12 additions: the ADVICE r11 hardening fixes (bench run-count
-arithmetic, reserved camera-id rejection, degenerate-letterbox clamp,
-exact-regime guard, remux degradation flags) plus the new oracled
-promotions' single-engine semantics.
+"""Round-12 additions: the ADVICE r11 hardening fixes (reserved camera-id
+rejection, degenerate-letterbox clamp, exact-regime guard, remux
+degradation flags) plus the new oracled promotions' single-engine
+semantics.
 """
 
 from __future__ import annotations
@@ -16,28 +16,6 @@ from uav_streamprocessor_spark import registry
 
 def _q(name, spark, sf=SF_SMALL):
     return registry.queries()[name](spark, sf)
-
-
-def test_runs_for_override_tolerates_garbage_and_respects_global(monkeypatch):
-    """ADVICE r11 bench.py: a malformed RUNS_OVERRIDE entry must not
-    crash the whole bench, and EXTRA_RUNS is a floor — a global N above
-    the boost wins (the adjudication-session case)."""
-    import bench
-
-    monkeypatch.setenv(
-        "SPARK_GRAFT_BENCH_RUNS_OVERRIDE", "dedup_winnowing=oops,tpch_q1_pricing=4"
-    )
-    # malformed value ignored → EXTRA_RUNS floor (7) survives
-    assert bench._runs_for("dedup_winnowing", 3) == 7
-    # valid even override rounds up to odd
-    assert bench._runs_for("tpch_q1_pricing", 3) == 5
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_RUNS_OVERRIDE")
-    # global ask above the boost is honored, not pinned back to 7
-    assert bench._runs_for("dedup_winnowing", 9) == 9
-    # boost still floors a smaller global default
-    assert bench._runs_for("dedup_winnowing", 3) == 7
-    # unboosted query follows the global default (odd-forced)
-    assert bench._runs_for("tpch_q1_pricing", 2) == 3
 
 
 def test_reserved_camera_id_rejected_at_writer_construction(tmp_path):

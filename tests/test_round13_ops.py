@@ -1,70 +1,7 @@
-"""Round-13 harness fixes: the full-bench artifact MERGE semantics
-(VERDICT r12 #1 — the driver's headline-only run must not delete the
-builder's rotation medians) and the EXTRA_RUNS widening for
-text_ngram_novelty (VERDICT r12 #4)."""
+"""Round-13 additions: the pixel path over real MJPG AVI containers
+(VERDICT r12 #7)."""
 
 from __future__ import annotations
-
-import json
-
-import bench
-
-
-def test_merge_full_artifact_retains_unmeasured_queries(tmp_path):
-    prior = {
-        "value": 10.0,
-        "queries": {"a": 1.0, "b": 2.0, "rot_only": 7.0},
-        "spread": {"a": [0.9, 1.1], "rot_only": [6.5, 7.5]},
-        "streaming": {"store": {"sec": 3.0}},
-    }
-    p = tmp_path / "BENCH_full_rXX.json"
-    p.write_text(json.dumps(prior))
-
-    out = {
-        "value": 4.0,
-        "queries": {"a": 1.5, "b": 2.5},
-        "spread": {"a": [1.4, 1.6], "b": [2.4, 2.6]},
-    }
-    bench._merge_full_artifact(p, out)
-    # this run overrides common queries; the rotation row survives
-    assert out["queries"] == {"a": 1.5, "b": 2.5, "rot_only": 7.0}
-    assert out["spread"]["rot_only"] == [6.5, 7.5]
-    assert out["spread"]["a"] == [1.4, 1.6]
-    assert out["retained_queries"] == ["rot_only"]
-    # headline total stays THIS run's sum; merged sum is separate
-    assert out["value"] == 4.0
-    assert out["value_all_queries"] == 11.0
-    # a prior streaming section survives a no-streaming run, flagged
-    assert out["streaming"] == {"store": {"sec": 3.0}}
-    assert out["streaming_retained"] is True
-
-
-def test_merge_full_artifact_noops_without_prior_or_on_garbage(tmp_path):
-    out = {"value": 1.0, "queries": {"a": 1.0}, "spread": {"a": [1, 1]}}
-    ref = dict(out)
-    bench._merge_full_artifact(tmp_path / "missing.json", out)
-    assert out == ref
-    bad = tmp_path / "bad.json"
-    bad.write_text("{not json")
-    bench._merge_full_artifact(bad, out)
-    assert out == ref
-    # a prior file measuring a SUBSET adds nothing and sets no keys
-    sub = tmp_path / "sub.json"
-    sub.write_text(json.dumps({"queries": {"a": 0.5}}))
-    bench._merge_full_artifact(sub, out)
-    assert out == ref and "retained_queries" not in out
-
-
-def test_ngram_novelty_on_wide_median_list():
-    assert bench.EXTRA_RUNS["text_ngram_novelty"] == 7
-    assert bench._runs_for("text_ngram_novelty", 3) == 7
-
-
-def test_repaired_r12_artifact_carries_both_sets():
-    d = json.load(open("BENCH_full_r12.json"))
-    assert len(d["queries"]) == 69
-    assert len(d["retained_queries"]) == 32
-    assert "repair_note" in d
 
 
 def test_mjpeg_pixel_query_matches_synthetic_twin_schema(spark):

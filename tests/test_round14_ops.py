@@ -152,128 +152,6 @@ def test_absorption_iterate_matches_linear_solve():
 
 
 # ---------------------------------------------------------------------------
-# bench drift-robustness (VERDICT r13 #2): per-source ledgers + canary
-# ---------------------------------------------------------------------------
-
-def test_merge_full_artifact_keeps_per_source_ledgers(tmp_path):
-    """The r13 driver box read ~1.23x the builder's on identical code and
-    its verbatim override opened three phantom TPC-H fuses. The merged
-    artifact must now carry BOTH boxes' readings (runs_by_source) and
-    both canary fingerprints, so round-over-round medians can be
-    computed same-box and normalized."""
-    import json
-
-    import bench
-
-    prior = {
-        "queries": {"a": 1.0, "rot_only": 7.0},
-        "spread": {},
-        "runs_by_source": {"builder": {"a": 1.0, "rot_only": 7.0}},
-        "canary_by_source": {"builder": 0.8},
-    }
-    p = tmp_path / "BENCH_full_rXX.json"
-    p.write_text(json.dumps(prior))
-    out = {
-        "queries": {"a": 1.3},
-        "spread": {"a": [1.2, 1.4]},
-        "runs_by_source": {"driver": {"a": 1.3}},
-        "canary_by_source": {"driver": 1.0},
-    }
-    bench._merge_full_artifact(p, out)
-    # driver overrides the shared view, but the builder ledger survives
-    assert out["queries"] == {"a": 1.3, "rot_only": 7.0}
-    assert out["runs_by_source"]["builder"] == {"a": 1.0, "rot_only": 7.0}
-    assert out["runs_by_source"]["driver"] == {"a": 1.3}
-    assert out["canary_by_source"] == {"builder": 0.8, "driver": 1.0}
-    # same-source re-run folds into its own ledger
-    p.write_text(json.dumps(out))
-    out2 = {
-        "queries": {"b": 2.0},
-        "spread": {},
-        "runs_by_source": {"driver": {"b": 2.0}},
-        "canary_by_source": {"driver": 0.9},
-    }
-    bench._merge_full_artifact(p, out2)
-    assert out2["runs_by_source"]["driver"] == {"a": 1.3, "b": 2.0}
-    assert out2["canary_by_source"]["driver"] == 0.9
-
-
-def test_dedicated_streaming_section_wins_the_merge(tmp_path):
-    """A dedicated --streaming session's medians are the authoritative
-    streaming record (r14: stores measured after the 70-query headline
-    load in the same session read 3-9x their dedicated-session medians
-    on identical code). A later full run must NOT clobber them — its
-    in-session reading lands in streaming_in_session instead."""
-    import json
-
-    import bench
-
-    prior = {
-        "queries": {"a": 1.0},
-        "spread": {},
-        "streaming": {"store": {"sec": 5.0}},
-        "streaming_dedicated_session": True,
-        "streaming_source": "builder",
-    }
-    p = tmp_path / "BENCH_full_rXX.json"
-    p.write_text(json.dumps(prior))
-    out = {
-        "queries": {"a": 1.1},
-        "spread": {},
-        "streaming": {"store": {"sec": 40.0}},  # loaded-session reading
-    }
-    bench._merge_full_artifact(p, out)
-    assert out["streaming"] == {"store": {"sec": 5.0}}
-    assert out["streaming_in_session"] == {"store": {"sec": 40.0}}
-    assert out["streaming_dedicated_session"] is True
-    assert out["streaming_source"] == "builder"
-    # and a dedicated flag on THIS run keeps its own numbers
-    out2 = {
-        "queries": {"a": 1.2},
-        "spread": {},
-        "streaming": {"store": {"sec": 4.8}},
-        "streaming_dedicated_session": True,
-    }
-    bench._merge_full_artifact(p, out2)
-    assert out2["streaming"] == {"store": {"sec": 4.8}}
-
-
-def test_merge_preserves_adjudication_records(tmp_path):
-    """A dedicated median-of-9 repair (adjudicated_queries/repair_note)
-    must survive the driver's end-of-round artifact rewrite."""
-    import json
-
-    import bench
-
-    prior = {
-        "queries": {"a": 1.0},
-        "spread": {},
-        "adjudicated_queries": {"a": {"adjudicated_median_of_9": 1.0}},
-        "repair_note": "r14 session excursion",
-    }
-    p = tmp_path / "BENCH_full_rXX.json"
-    p.write_text(json.dumps(prior))
-    out = {"queries": {"a": 1.2, "b": 0.5}, "spread": {}}
-    bench._merge_full_artifact(p, out)
-    assert out["adjudicated_queries"] == prior["adjudicated_queries"]
-    assert out["repair_note"] == "r14 session excursion"
-
-
-def test_canary_queries_are_headline_members():
-    """The canary set must cost nothing: every member is already in
-    HEADLINE so the driver's headline-only run records it too."""
-    import bench
-
-    assert len(bench.CANARY) == 6
-    for q in bench.CANARY:
-        assert q in bench.HEADLINE
-    # the Python-UDF lane drifts independently of the JVM lane (r14
-    # session-excursion adjudication) — the canary set must fingerprint
-    # both: at least one Arrow/UDF-path member
-    assert "uav_pixel_detections" in bench.CANARY
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r13: signature-plane corpus contract + IVF exactness witness
 # ---------------------------------------------------------------------------
 

@@ -294,6 +294,25 @@ def test_ivfpq_candidates_come_from_probed_cells_and_recall(spark):
     assert recall_full >= 0.2
 
 
+def test_ivfpq_model_build_jobs_keep_callers_job_group(spark):
+    """The three model-build collects run on a driver thread pool. A
+    plain pool thread has no job group, so its jobs would escape the
+    caller's cancellation, scheduler pool and tagging; every job the
+    query launches must carry the caller's group."""
+    from uav_streamprocessor_spark import registry
+
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("ivfpq_job_group", "emb_ivfpq_topk")
+    try:
+        registry.queries()["emb_ivfpq_topk"](spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("ivfpq_job_group")
+
+
 # ---------------------------------------------------------------------------
 # ev_cusum_changepoints
 # ---------------------------------------------------------------------------

@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from uav_streamprocessor_spark.config import PipelineConfig
+from uav_streamprocessor_spark.operators.uav_core import keyframes
 from uav_streamprocessor_spark.streaming.pipeline import (
     session_event_counts,
     sliding_event_counts,
     stateful_frame_counters,
     streaming_dedup,
-    streaming_keyframes,
     windowed_event_counts,
 )
 from uav_streamprocessor_spark.streaming.sinks import (
@@ -137,7 +137,7 @@ def test_streaming_keyframe_decimation(spark, tmp_path):
     src = tmp_path / "frames_dec"
     frames.coalesce(1).write.parquet(str(src))
     sdf = spark.readStream.schema("camera_id string, frame_number long").parquet(str(src))
-    _run_to_memory(streaming_keyframes(sdf), "kf_stream", tmp_path)
+    _run_to_memory(keyframes(sdf), "kf_stream", tmp_path)
     nums = sorted(
         r["frame_number"] for r in spark.sql("SELECT * FROM kf_stream").collect()
     )

@@ -16,9 +16,11 @@ ties break on vec_id.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1488,9 +1490,11 @@ def ivfpq_topk(
     # queries ~0.14 s measured at sf0.1); submitting them from a small
     # driver thread pool hides the two small jobs under the centroid
     # job's tail. Each closure is an independent action on an immutable
-    # plan, so results are unchanged by construction.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # plan, so results are unchanged by construction. Each closure is
+    # wrapped in inheritable_thread_target(spark), so its jobs carry the
+    # caller's job group, job tags and scheduler pool: a pool thread
+    # starts with none of them.
+    @inheritable_thread_target(spark)
     def _collect_cents():
         return normed.select(
             "label", F.posexplode("nvec").alias("pos", "x")
@@ -1500,6 +1504,7 @@ def ivfpq_topk(
             F.array_sort(F.collect_list(F.struct("pos", "x"))).alias("sx")
         ).select("label", F.col("sx.x").alias("centroid")).collect()
 
+    @inheritable_thread_target(spark)
     def _collect_sample():
         # codebook training rows: deterministic md5-order draw (the
         # FAISS sample-not-corpus recipe; O(n_train·dim) collect)
@@ -1510,6 +1515,7 @@ def ivfpq_topk(
             .collect()
         )
 
+    @inheritable_thread_target(spark)
     def _collect_queries():
         return normed.filter(F.col("vec_id") < n_queries).collect()
 

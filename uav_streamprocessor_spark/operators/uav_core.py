@@ -15,10 +15,13 @@ from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 # --- F1: keyframe decimation (uav/main.py:116, default N=30 main.py:52) ---
 def keyframes(frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Every-Nth-frame filter. A pure predicate → pushed to the parquet scan
-    by Catalyst; at 100 TB this prunes ~29/30 of rows before any UDF runs
-    (the reference applies the same predicate before resize/detect,
-    uav/main.py:116-139)."""
+    """Every-Nth-frame filter, on batch and streaming frames alike (the
+    reference applies the same predicate before resize/detect,
+    uav/main.py:116-139). The modulo is not a parquet pushed filter:
+    `explain` shows only `IsNotNull(frame_number)` in PushedFilters and
+    the modulo in DataFilters, so the scan still reads every frame. Only
+    an EqualTo/In on frame_number, which the `uav_video` source accepts,
+    prunes frames at the source."""
     return frames.filter(F.col("frame_number") % cfg.keyframe_interval == 0)
 
 

@@ -19,14 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
-
-
-def streaming_keyframes(
-    frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """F1 decimation on an unbounded stream — stateless filter, identical
-    expression to the batch operator (uav/main.py:116)."""
-    return frames.filter(F.col("frame_number") % cfg.keyframe_interval == 0)
+from uav_streamprocessor_spark.operators.uav_core import keyframes
 
 
 def windowed_event_counts(
@@ -142,7 +135,7 @@ def stream_static_enriched_keyframes(
     executors, so dimension updates between batches are picked up and
     nothing accumulates. The stateless complement to the stream-stream
     join below."""
-    return streaming_keyframes(frames_stream, cfg).join(
+    return keyframes(frames_stream, cfg).join(
         F.broadcast(camera_dim), "camera_id"
     )
 
