@@ -51,8 +51,6 @@ import time
 from pathlib import Path
 
 from py4j.protocol import Py4JError
-from pyspark.sql import Window
-from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -68,7 +66,9 @@ from uav_streamprocessor_spark.streaming.kll_stream import run_incremental_kll
 from uav_streamprocessor_spark.streaming.packing_stream import packed_stream
 from uav_streamprocessor_spark.streaming.rate_limit_stream import rate_limited_stream
 from uav_streamprocessor_spark.streaming.session_stream import session_stream
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
 from uav_streamprocessor_spark.streaming.sketch_stream import run_incremental_sketches
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 from uav_streamprocessor_spark.streaming.topk_stream import topk_stream
 
 # headline set: the flagship + one representative per operator family
@@ -416,14 +416,8 @@ def _memory_sink(transform):
     """start() for a stateful store whose output rows go to a memory sink."""
 
     def start(stream, work: Path):
-        return (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(f"bench_{work.parent.name}")
-            .outputMode("append")
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return start_memory_sink(
+            transform(stream), f"bench_{work.parent.name}", work / "ckpt"
         )
 
     return start
@@ -471,31 +465,6 @@ STREAM_STORES = [
 ]
 
 
-def _feed(spark, df, src: Path, schema: str, ordered_by):
-    """Write df as N_STREAM_BATCHES parquet files under src and return a
-    file stream that reads one file per micro-batch. With ordered_by the
-    split is by time range (the sequential-state stores need per-key ts
-    order to hold across batches); otherwise by the first column's hash."""
-    n = N_STREAM_BATCHES
-    if ordered_by is not None:
-        per = -(-df.count() // n)
-        ranked = df.withColumn("_rn", F.row_number().over(Window.orderBy(*ordered_by)))
-        parts = [
-            ranked.filter((F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per))
-            .drop("_rn")
-            for i in range(n)
-        ]
-    else:
-        parts = [df.filter(df[df.columns[0]] % n == i) for i in range(n)]
-    for i, part in enumerate(parts):
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-
-
 def bench_streaming(spark, sf_dir: str, n_runs: int) -> dict[str, dict]:
     """Throughput of the streaming state stores (VERDICT r4 #6), method
     STREAM_METHOD: each store's feed is written before the clock starts,
@@ -514,7 +483,14 @@ def bench_streaming(spark, sf_dir: str, n_runs: int) -> dict[str, dict]:
         for store, table, schema, ordered_by, start in STREAM_STORES:
             df = spark.read.schema(schema).parquet(f"{sf_dir}/{table}.parquet")
             rows = df.count()
-            stream = _feed(spark, df, Path(tmp) / store / "src", schema, ordered_by)
+            # N_STREAM_BATCHES files, by time range where the store needs
+            # per-key order across batches, else by the first column mod n
+            n = N_STREAM_BATCHES
+            if ordered_by is not None:
+                parts = ordered_slices(df, n, ordered_by)
+            else:
+                parts = [df.filter(df[df.columns[0]] % n == i) for i in range(n)]
+            stream = file_stream(spark, parts, Path(tmp) / store / "src", schema)
             secs = []
             for i in range(n_runs):
                 t0 = time.perf_counter()

@@ -1,10 +1,10 @@
 """Merge the 4 sf0.1 chunk reports into PARITY_sf0.1_full.json.
 
-The `note` names the generating round via $SPARK_GRAFT_ROUND (ADVICE/
-VERDICT r15 nit: a hardcoded round description goes stale the moment a
-later sweep reuses the template)."""
+The `note` names the commit the sweep ran on (`git rev-parse HEAD`), so
+a later sweep that reuses the template never inherits a stale label."""
 import json
-import os
+import subprocess
+from pathlib import Path
 
 queries, fails = {}, []
 n_ok = n_rows_only = 0
@@ -14,7 +14,10 @@ for i in range(4):
     fails += d["fails"]
     n_ok += d["n_oracle_matched"]
     n_rows_only += d["n_rows_only"]
-rnd = os.environ.get("SPARK_GRAFT_ROUND", "unknown")
+sha = subprocess.run(
+    ["git", "rev-parse", "HEAD"], cwd=Path(__file__).resolve().parents[1],
+    capture_output=True, text=True,
+).stdout.strip() or "unknown"
 out = {
     "sf_dir": "/root/testdata/sf0.1",
     "n_queries": len(queries),
@@ -22,7 +25,7 @@ out = {
     "n_rows_only": n_rows_only,
     "fails": fails,
     "note": (
-        f"round-{rnd} FULL-registry sweep at 10x the driver scale factor "
+        f"commit-{sha} FULL-registry sweep at 10x the sf0.01 gate scale "
         f"over the registry state at sweep time ({len(queries)} queries), "
         "run in 4 back-to-back single-session chunks "
         "(scripts/sweep_sf01_full.sh)."

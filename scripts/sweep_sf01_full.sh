@@ -1,20 +1,11 @@
 #!/bin/bash
 # Full-registry parity sweep at sf0.1 in 4 PARITY_SUBSET chunks
 # (one Spark session per chunk keeps peak memory bounded), merged into
-# PARITY_sf0.1_full.json by merge_parity_chunks.py.
+# PARITY_sf0.1_full.json by merge_parity_chunks.py, which stamps the
+# note with the commit the sweep ran on.
 set -u
 cd /root/repo
 CHUNKS=4
-# Stamp the generating round into the merged note (ADVICE r17: the r17
-# sweep ran without $SPARK_GRAFT_ROUND and recorded "round-unknown",
-# losing the provenance the merge/repair protocol relies on). Default:
-# the newest round-numbered bench artifact in the repo.
-if [ -z "${SPARK_GRAFT_ROUND:-}" ]; then
-  SPARK_GRAFT_ROUND=$(ls BENCH_full_r*.json 2>/dev/null \
-    | sed 's/.*_r0*\([0-9]*\)\.json/\1/' | sort -n | tail -1)
-  export SPARK_GRAFT_ROUND=${SPARK_GRAFT_ROUND:-unknown}
-fi
-echo "SPARK_GRAFT_ROUND=$SPARK_GRAFT_ROUND"
 python - <<'EOF'
 import importlib.util, json
 spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")

@@ -9,26 +9,18 @@ from uav_streamprocessor_spark.streaming.ann_stream import (
     index_topk,
     run_incremental_ann_index,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
+_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
 def _run_stream(spark, tmp_path, tag):
-    src = tmp_path / f"vec_src_{tag}"
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     # three files -> three micro-batches; ids interleave so every batch
     # contributes candidates for every query
-    for m in range(3):
-        emb.filter(f"vec_id % 3 = {m}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / f"f{m}"))
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
+    parts = [emb.filter(f"vec_id % 3 = {m}") for m in range(3)]
+    stream = file_stream(spark, parts, tmp_path / f"vec_src_{tag}", _SCHEMA)
     q = run_incremental_ann_index(
         stream,
         index_dir=str(tmp_path / "index"),
@@ -81,15 +73,8 @@ def test_cross_batch_redelivery_dedups_at_read(spark, tmp_path):
     emb.filter("vec_id % 3 = 0").coalesce(1).write.mode("overwrite").parquet(
         str(src / "f3_redelivered")
     )
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
     q = run_incremental_ann_index(
-        stream,
+        file_stream(spark, [], src, _SCHEMA),
         index_dir=str(tmp_path / "index"),
         checkpoint_dir=str(tmp_path / "ckpt_run1"),
     )

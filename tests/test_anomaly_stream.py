@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.fixtures import register_uav_views
@@ -19,6 +17,8 @@ from uav_streamprocessor_spark.streaming.anomaly_stream import (
     anomaly_batch_reference,
     anomaly_stream,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, value double"
@@ -30,19 +30,11 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+def _feed(spark, src, n_files, scramble_within=False):
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
 def _key(r):
@@ -56,22 +48,10 @@ def _row_tuple(r):
     )
 
 
-def _run_stream(spark, src, tmp_path, name):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        anomaly_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name):
+    start_memory_sink(
+        anomaly_stream(stream), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return {_key(r): _row_tuple(r) for r in spark.table(name).collect()}
 
 
@@ -89,19 +69,15 @@ def test_stream_equals_batch_across_splits_and_order(spark, tmp_path):
         (4, False, "anom_four"),
         (3, True, "anom_scrambled"),
     ]:
-        src = tmp_path / f"feed_{name}"
-        src.mkdir()
-        _write_feed(spark, src, n_files, scramble_within=scramble)
-        got = _run_stream(spark, src, tmp_path, name)
+        stream = _feed(spark, tmp_path / f"feed_{name}", n_files, scramble)
+        got = _run_stream(spark, stream, tmp_path, name)
         assert got == expected, f"{name}: stream != sequential batch"
 
 
 def test_stream_replay_idempotent(spark, tmp_path):
-    src = tmp_path / "feed_replay"
-    src.mkdir()
-    _write_feed(spark, src, 2)
-    first = _run_stream(spark, src, tmp_path, "anom_replay_a")
-    again = _run_stream(spark, src, tmp_path, "anom_replay_b")
+    stream = _feed(spark, tmp_path / "feed_replay", 2)
+    first = _run_stream(spark, stream, tmp_path, "anom_replay_a")
+    again = _run_stream(spark, stream, tmp_path, "anom_replay_b")
     assert first == again
 
 

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.streaming.cms_stream import (
@@ -18,6 +16,9 @@ from uav_streamprocessor_spark.streaming.cms_stream import (
     latest_estimates,
     make_cms_processor,
 )
+from uav_streamprocessor_spark.streaming.replay import _NoState
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -29,37 +30,17 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+def _feed(spark, src, n_files, scramble_within=False):
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
-def _run_stream(spark, src, tmp_path, name):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        cms_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name):
+    start_memory_sink(
+        cms_stream(stream), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return {
         (r["event_type"], r["user_id"]): r["est_count"]
         for r in latest_estimates(spark.table(name)).collect()
@@ -81,10 +62,8 @@ def test_estimates_one_sided_and_match_batch_reference(spark, tmp_path):
     and the final snapshot equals the one-pass batch reference EXACTLY
     — additivity makes the sketch order-independent, so unlike the
     eviction-based stores no sequencing caveat is needed."""
-    src = tmp_path / "feed"
-    src.mkdir()
-    _write_feed(spark, src, n_files=4)
-    got = _run_stream(spark, src, tmp_path, "cms_a")
+    stream = _feed(spark, tmp_path / "feed", n_files=4)
+    got = _run_stream(spark, stream, tmp_path, "cms_a")
     true = _true_counts(spark)
     assert got  # non-empty
     for k, est in got.items():
@@ -99,10 +78,8 @@ def test_estimates_one_sided_and_match_batch_reference(spark, tmp_path):
 def test_scrambled_batch_boundaries_irrelevant(spark, tmp_path):
     """2 files vs 4 scrambled files: identical final estimates — the
     sketch is a function of the event multiset alone."""
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    _write_feed(spark, a, n_files=2)
-    _write_feed(spark, b, n_files=4, scramble_within=True)
+    a = _feed(spark, tmp_path / "a", n_files=2)
+    b = _feed(spark, tmp_path / "b", n_files=4, scramble_within=True)
     assert _run_stream(spark, a, tmp_path, "cms_b1") == _run_stream(
         spark, b, tmp_path, "cms_b2"
     )
@@ -113,20 +90,10 @@ def test_replay_idempotent(spark, tmp_path):
     the same estimates bit-for-bit (the house replay-determinism
     contract; the memory sink cannot recover a checkpoint, so recovery
     itself is covered by the shared streaming suites)."""
-    src = tmp_path / "feed"
-    src.mkdir()
-    _write_feed(spark, src, n_files=3)
-    assert _run_stream(spark, src, tmp_path, "cms_r1") == _run_stream(
-        spark, src, tmp_path, "cms_r2"
+    stream = _feed(spark, tmp_path / "feed", n_files=3)
+    assert _run_stream(spark, stream, tmp_path, "cms_r1") == _run_stream(
+        spark, stream, tmp_path, "cms_r2"
     )
-
-
-class _NoState:
-    exists = False
-    get = None
-
-    def update(self, _):
-        pass
 
 
 def _estimate(proc_out, uid):

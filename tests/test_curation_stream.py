@@ -21,6 +21,7 @@ from uav_streamprocessor_spark.streaming.curation_stream import (
     curation_stream_report,
     run_incremental_curation,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
 _COPY_OFFSET = 100_000  # 100000 % 3 == 1: a copy of id≡0 lands in file ≡1
@@ -73,16 +74,10 @@ def _batch_expected(aug):
 
 
 def _run(spark, aug, tmp_path, tag, mods):
-    src = tmp_path / f"docs_{tag}"
     docs = aug.select("doc_id", "text")
-    for i, m in enumerate(mods):
-        docs.filter(f"doc_id % 3 = {m}").coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
+    parts = [docs.filter(f"doc_id % 3 = {m}") for m in mods]
+    stream = file_stream(
+        spark, parts, tmp_path / f"docs_{tag}", "doc_id long, text string"
     )
     q = run_incremental_curation(
         stream,

@@ -9,23 +9,20 @@ from uav_streamprocessor_spark.operators.dedup import minhash_candidates
 from uav_streamprocessor_spark.streaming.dedup_stream import (
     run_incremental_neardup,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
 
 
 def _run_stream(spark, tmp_path, tag):
-    src = tmp_path / f"docs_src_{tag}"
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text"
     )
-    # two files -> two micro-batches (maxFilesPerTrigger=1); split leaves
-    # near-dup pairs on BOTH sides of the batch boundary (ids interleave)
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(str(src / "f1"))
-    docs.filter("doc_id % 2 = 1").coalesce(1).write.parquet(str(src / "f2"))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
+    # two files -> two micro-batches; split leaves near-dup pairs on
+    # BOTH sides of the batch boundary (ids interleave)
+    parts = [docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")]
+    stream = file_stream(
+        spark, parts, tmp_path / f"docs_src_{tag}", "doc_id long, text string"
     )
     q = run_incremental_neardup(
         stream,

@@ -16,6 +16,9 @@ from uav_streamprocessor_spark.streaming.ewma_stream import (
     ewma_stream,
     make_ewma_processor,
 )
+from uav_streamprocessor_spark.streaming.replay import _NoState
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, value double"
@@ -29,19 +32,11 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+def _feed(spark, src, n_files, scramble_within=False):
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
 def _key(r):
@@ -56,22 +51,10 @@ def _row_tuple(r):
     )
 
 
-def _run_stream(spark, src, tmp_path, name):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        ewma_stream(stream, alpha=_ALPHA)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name):
+    start_memory_sink(
+        ewma_stream(stream, alpha=_ALPHA), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return {_key(r): _row_tuple(r) for r in spark.table(name).collect()}
 
 
@@ -91,29 +74,21 @@ def test_stream_equals_batch_and_boundaries_irrelevant(spark, tmp_path):
     assert n_null == n_users
     for n_files, scramble in ((1, False), (3, False), (5, True)):
         src = tmp_path / f"feed_{n_files}_{scramble}"
-        _write_feed(spark, src, n_files, scramble_within=scramble)
+        stream = _feed(spark, src, n_files, scramble)
         tag = f"ewma_{n_files}_{scramble}"
-        assert _run_stream(spark, src, tmp_path, tag) == expected, tag
+        assert _run_stream(spark, stream, tmp_path, tag) == expected, tag
 
 
 def test_replay_idempotent(spark, tmp_path):
-    src = tmp_path / "feed"
-    _write_feed(spark, src, 3)
-    first = _run_stream(spark, src, tmp_path, "ewma_replay_a")
-    again = _run_stream(spark, src, tmp_path, "ewma_replay_b")
+    stream = _feed(spark, tmp_path / "feed", 3)
+    first = _run_stream(spark, stream, tmp_path, "ewma_replay_a")
+    again = _run_stream(spark, stream, tmp_path, "ewma_replay_b")
     assert first == again
 
 
 def test_recursion_matches_python_reference():
     """The processor's per-row arithmetic is the textbook recursion."""
     import pandas as pd
-
-    class _NoState:
-        exists = False
-        get = None
-
-        def update(self, _):
-            pass
 
     xs = [5.0, 1.0, 4.0, 4.0, 0.0, 10.0]
     pdf = pd.DataFrame(

@@ -204,6 +204,28 @@ def test_scan_with_missing_tables_raises_format_error():
         decode_jpeg(bytes(buf))
 
 
+def test_crafted_dht_overrun_past_pad_raises_format_error():
+    """The decoder's zero pad covers an Annex K block, not a crafted one.
+    Both DHT tables are rewritten to one 16-bit code whose symbol demands
+    the longest value read (DC category 11; AC run 0 / size 15), and the
+    scan is cut to one byte: the single block's 63 AC symbols of 31 bits
+    each read ~248 bytes, past the 224-byte pad. That must surface as
+    JpegFormatError, never a bare IndexError."""
+    buf = encode_jpeg(np.full((8, 8), 9, np.uint8))  # one gray block
+    one_16bit_code = bytes(15) + b"\x01"
+    dht = b"\x00" + one_16bit_code + b"\x0b" + b"\x10" + one_16bit_code + b"\x0f"
+    head = buf[: buf.index(b"\xff\xc4")]
+    sos = buf.index(b"\xff\xda")
+    sos_seg = buf[sos : sos + 2 + int.from_bytes(buf[sos + 2 : sos + 4], "big")]
+    crafted = (
+        head
+        + b"\xff\xc4" + (2 + len(dht)).to_bytes(2, "big") + dht
+        + sos_seg + b"\x00" + b"\xff\xd9"
+    )
+    with pytest.raises(JpegFormatError):
+        decode_jpeg(crafted)
+
+
 # ---------------------------------------------------------------------------
 # Spec-golden decode (ADVICE r12): every fidelity test above is an
 # encoder→decoder self-roundtrip, so a compensating bug shared by both

@@ -12,8 +12,10 @@ from uav_streamprocessor_spark.streaming.kll_stream import (
     run_incremental_kll,
     running_quantiles,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
+_SCHEMA = "event_id long, ts timestamp, event_type string, value double"
 # k=200 one-sided rank error ~1.65%; assert a looser 5% like the batch
 # KLL tests so the gate is stable across sketch library versions
 _RANK_TOL = 0.05
@@ -30,18 +32,9 @@ def _events(spark):
 
 
 def _run_stream(spark, tmp_path, tag, n_files=4):
-    src = tmp_path / f"src_{tag}"
     ev = _events(spark)
-    for i in range(n_files):
-        ev.filter((F.col("event_id") % n_files) == i).coalesce(1) \
-            .write.mode("overwrite").parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
+    parts = [ev.filter((F.col("event_id") % n_files) == i) for i in range(n_files)]
+    stream = file_stream(spark, parts, tmp_path / f"src_{tag}", _SCHEMA)
     q = run_incremental_kll(
         stream,
         store_dir=str(tmp_path / f"store_{tag}"),
@@ -85,16 +78,9 @@ def test_replay_overwrites_not_doubles(spark, tmp_path):
     bit-identical."""
     a = _run_stream(spark, tmp_path, "replay")
     store_dir = str(tmp_path / "store_replay")
-    src = tmp_path / "src_replay"
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
     q = run_incremental_kll(
-        stream, store_dir=store_dir,
+        file_stream(spark, [], tmp_path / "src_replay", _SCHEMA),
+        store_dir=store_dir,
         checkpoint_dir=str(tmp_path / "ckpt_replay2"),  # fresh -> full replay
     )
     q.awaitTermination(180)

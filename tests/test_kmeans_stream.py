@@ -20,36 +20,23 @@ from uav_streamprocessor_spark.streaming.kmeans_stream import (
     run_incremental_kmeans,
     streaming_lloyd_round,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
 K = 5
 ITERS = 3
 
 
-def _feed_dir(spark, tmp_path):
-    """Split the embeddings corpus into 3 files -> 3 micro-batches
-    (maxFilesPerTrigger=1); vec_ids interleave so every batch touches
-    every generating region."""
-    src = tmp_path / "vec_src"
+def _feed(spark, tmp_path):
+    """Split the embeddings corpus into 3 files -> 3 micro-batches;
+    vec_ids interleave so every batch touches every generating region."""
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    for m in range(3):
-        emb.filter(f"vec_id % 3 = {m}").coalesce(1).write.parquet(
-            str(src / f"f{m}")
-        )
-    return src
-
-
-def _make_stream(spark, src):
-    def make():
-        return (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src) + "/*")
-        )
-
-    return make
+    parts = [emb.filter(f"vec_id % 3 = {m}") for m in range(3)]
+    return file_stream(
+        spark, parts, tmp_path / "vec_src", "vec_id long, embedding array<float>"
+    )
 
 
 def _seed_centroids(spark):
@@ -73,13 +60,14 @@ def test_streaming_rounds_equal_batch_lloyd_and_replay_idempotent(
     spark, tmp_path
 ):
     register_uav_views(spark, SF_SMALL)
-    src = _feed_dir(spark, tmp_path)
-    make = _make_stream(spark, src)
+    stream = _feed(spark, tmp_path)
     work = str(tmp_path / "work")
 
     centroids = _seed_centroids(spark)
     for r in range(ITERS):
-        centroids = streaming_lloyd_round(spark, make, work, r, centroids)
+        centroids = streaming_lloyd_round(
+            spark, lambda: stream, work, r, centroids
+        )
         # model checkpoint is readable and exact
         assert load_centroids(f"{work}/centroids_r{r}.json") == centroids
 
@@ -111,7 +99,7 @@ def test_streaming_rounds_equal_batch_lloyd_and_replay_idempotent(
     # so the merged update is unchanged
     seed = _seed_centroids(spark)
     q = run_incremental_kmeans(
-        make(), f"{work}/partials_r0", str(tmp_path / "ckpt_replay"), seed
+        stream, f"{work}/partials_r0", str(tmp_path / "ckpt_replay"), seed
     )
     q.awaitTermination(180)
     replay_update = merged_centroid_update(spark, f"{work}/partials_r0", seed)

@@ -6,7 +6,6 @@ conservation holds row-by-row."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.operators.packing import (
@@ -14,52 +13,34 @@ from uav_streamprocessor_spark.operators.packing import (
     sequence_packing,
 )
 from uav_streamprocessor_spark.streaming.packing_stream import packed_stream
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
+def _feed(spark, src, n_files, scramble_within=False):
     """Split documents into n doc_id-range files (per-shard doc_id order
     holds across batches — the module's ordering contract); optionally
     scramble row order WITHIN files."""
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    total = docs.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("doc_id")
-    ranked = docs.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("doc_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+    parts = ordered_slices(docs, n_files, ("doc_id",))
+    if scramble_within:
+        parts = [p.orderBy(F.col("doc_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
-def _run(spark, src, tmp_path, name):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        packed_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run(spark, stream, tmp_path, name):
+    start_memory_sink(
+        packed_stream(stream), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return spark.table(name)
 
 
 def test_streaming_packing_equals_batch_and_conserves_budget(spark, tmp_path):
-    src = tmp_path / "feed"
-    _write_feed(spark, src, 3)
-    staged = _run(spark, src, tmp_path, "pack_run1")
+    stream = _feed(spark, tmp_path / "feed", 3)
+    staged = _run(spark, stream, tmp_path, "pack_run1")
 
     got = {tuple(r) for r in pack_summary(staged).collect()}
     spark.read.parquet(f"{SF_SMALL}/documents.parquet").createOrReplaceTempView(
@@ -81,7 +62,7 @@ def test_streaming_packing_equals_batch_and_conserves_budget(spark, tmp_path):
         cum[r["shard"]] = c
 
     # full replay (fresh checkpoint, same feed): identical assignments
-    replay = _run(spark, src, tmp_path, "pack_replay")
+    replay = _run(spark, stream, tmp_path, "pack_replay")
     assert {tuple(r) for r in replay.collect()} == {
         tuple(r) for r in staged.collect()
     }
@@ -91,10 +72,8 @@ def test_streaming_packing_order_rotation(spark, tmp_path):
     """Different batch boundaries AND scrambled intra-batch order give
     the identical summary — only the cross-batch doc_id contract
     matters."""
-    src_a = tmp_path / "feed_a"
-    src_b = tmp_path / "feed_b"
-    _write_feed(spark, src_a, 2)
-    _write_feed(spark, src_b, 5, scramble_within=True)
-    sa = pack_summary(_run(spark, src_a, tmp_path, "pack_a"))
-    sb = pack_summary(_run(spark, src_b, tmp_path, "pack_b"))
+    stream_a = _feed(spark, tmp_path / "feed_a", 2)
+    stream_b = _feed(spark, tmp_path / "feed_b", 5, scramble_within=True)
+    sa = pack_summary(_run(spark, stream_a, tmp_path, "pack_a"))
+    sb = pack_summary(_run(spark, stream_b, tmp_path, "pack_b"))
     assert {tuple(r) for r in sa.collect()} == {tuple(r) for r in sb.collect()}

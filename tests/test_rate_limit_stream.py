@@ -15,6 +15,8 @@ from uav_streamprocessor_spark.streaming.rate_limit_stream import (
     rate_limit_batch_reference,
     rate_limited_stream,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -27,40 +29,22 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
+def _feed(spark, src, n_files, scramble_within=False):
     """Split the feed into n time-range files (per-key ts order holds
     across batches — the module's ordering contract); optionally scramble
     row order WITHIN each file to prove intra-batch order is irrelevant."""
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
-def _run_stream(spark, src, tmp_path, name, mode):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        rate_limited_stream(stream, window_minutes=_WINDOW_MIN, mode=mode)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name, mode):
+    start_memory_sink(
+        rate_limited_stream(stream, window_minutes=_WINDOW_MIN, mode=mode),
+        name,
+        tmp_path / f"ckpt_{name}",
+    ).awaitTermination(180)
     return {
         (r["user_id"], r["event_type"], r["event_id"]): r["kept"]
         for r in spark.table(name).collect()
@@ -88,17 +72,16 @@ def test_throttle_stream_equals_batch_and_boundaries_irrelevant(
     got = {}
     for n_files, scramble in ((1, False), (3, False), (5, True)):
         src = tmp_path / f"feed_{n_files}_{scramble}"
-        _write_feed(spark, src, n_files, scramble_within=scramble)
+        stream = _feed(spark, src, n_files, scramble)
         tag = f"throttle_{n_files}_{scramble}"
-        got[tag] = _run_stream(spark, src, tmp_path, tag, "throttle")
+        got[tag] = _run_stream(spark, stream, tmp_path, tag, "throttle")
         assert got[tag] == expected, tag
 
 
 def test_replay_idempotent(spark, tmp_path):
-    src = tmp_path / "feed"
-    _write_feed(spark, src, 3)
-    first = _run_stream(spark, src, tmp_path, "replay_a", "throttle")
-    again = _run_stream(spark, src, tmp_path, "replay_b", "throttle")
+    stream = _feed(spark, tmp_path / "feed", 3)
+    first = _run_stream(spark, stream, tmp_path, "replay_a", "throttle")
+    again = _run_stream(spark, stream, tmp_path, "replay_b", "throttle")
     assert first == again
     assert first == _batch_flags(spark, "throttle")
 
@@ -118,9 +101,8 @@ def test_debounce_mode_equals_relational_lag_rule(spark, tmp_path):
             (gap.isNull() | (gap > _WINDOW_MIN * 60 * 1_000_000)).cast("int"),
         ).collect()
     }
-    src = tmp_path / "feed"
-    _write_feed(spark, src, 3)
-    streamed = _run_stream(spark, src, tmp_path, "debounce_eq", "debounce")
+    stream = _feed(spark, tmp_path / "feed", 3)
+    streamed = _run_stream(spark, stream, tmp_path, "debounce_eq", "debounce")
     assert streamed == relational
     assert rate_limit_batch_reference(
         ev, window_minutes=_WINDOW_MIN, mode="debounce"

@@ -15,6 +15,8 @@ from uav_streamprocessor_spark.streaming.session_stream import (
     fold_session_store,
     session_stream,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
@@ -36,7 +38,6 @@ def rocksdb_conf(spark):
 
 
 def _feed(spark, tmp_path):
-    src = tmp_path / "src"
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -44,59 +45,38 @@ def _feed(spark, tmp_path):
         F.col("value").cast("double").alias("value"),
     )
     # two time-ordered files -> two micro-batches with cross-batch state
-    from pyspark.sql import Window
-
-    ranked = ev.withColumn(
-        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    )
-    half = ev.count() // 2
-    ranked.filter(F.col("rn") <= half).drop("rn").coalesce(1) \
-        .write.parquet(str(src / "f0"))
-    ranked.filter(F.col("rn") > half).drop("rn").coalesce(1) \
-        .write.parquet(str(src / "f1"))
-    return src
+    parts = ordered_slices(ev, 2, ("ts", "event_id"))
+    return file_stream(spark, parts, tmp_path / "src", _SCHEMA)
 
 
-def _run(spark, src, tmp_path, name, builder):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        builder(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run(spark, stream, tmp_path, name, transform):
+    start_memory_sink(
+        transform(stream), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return spark.table(name)
 
 
 def test_session_store_identical_on_rocksdb(spark, tmp_path, rocksdb_conf):
-    src = _feed(spark, tmp_path)
+    stream = _feed(spark, tmp_path)
     assert spark.conf.get(_PROVIDER_KEY) == _ROCKSDB
     rocks = {
         (r["user_id"], r["session_seq"]): (r["n_events"], r["total_value"])
         for r in fold_session_store(
-            _run(spark, src, tmp_path, "rocks_sess", session_stream)
+            _run(spark, stream, tmp_path, "rocks_sess", session_stream)
         ).collect()
     }
     spark.conf.unset(_PROVIDER_KEY)  # default provider for the twin
     hdfs = {
         (r["user_id"], r["session_seq"]): (r["n_events"], r["total_value"])
         for r in fold_session_store(
-            _run(spark, src, tmp_path, "hdfs_sess", session_stream)
+            _run(spark, stream, tmp_path, "hdfs_sess", session_stream)
         ).collect()
     }
     assert rocks == hdfs and len(rocks) > 0
 
 
 def test_ewma_store_identical_on_rocksdb(spark, tmp_path, rocksdb_conf):
-    src = _feed(spark, tmp_path)
+    stream = _feed(spark, tmp_path)
 
     def snap(df):
         return {
@@ -106,7 +86,7 @@ def test_ewma_store_identical_on_rocksdb(spark, tmp_path, rocksdb_conf):
             for r in df.collect()
         }
 
-    rocks = snap(_run(spark, src, tmp_path, "rocks_ewma", ewma_stream))
+    rocks = snap(_run(spark, stream, tmp_path, "rocks_ewma", ewma_stream))
     spark.conf.unset(_PROVIDER_KEY)
-    hdfs = snap(_run(spark, src, tmp_path, "hdfs_ewma", ewma_stream))
+    hdfs = snap(_run(spark, stream, tmp_path, "hdfs_ewma", ewma_stream))
     assert rocks == hdfs and len(rocks) > 0

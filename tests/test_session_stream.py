@@ -7,7 +7,6 @@ gap-knob perturbation control proving the boundary rule bites."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.streaming.session_stream import (
@@ -15,6 +14,8 @@ from uav_streamprocessor_spark.streaming.session_stream import (
     make_session_processor,
     session_stream,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, value double"
@@ -26,37 +27,19 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+def _feed(spark, src, n_files, scramble_within=False):
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
-def _run_stream(spark, src, tmp_path, name, gap_minutes=30):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        session_stream(stream, gap_minutes=gap_minutes)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name, gap_minutes=30):
+    start_memory_sink(
+        session_stream(stream, gap_minutes=gap_minutes),
+        name,
+        tmp_path / f"ckpt_{name}",
+    ).awaitTermination(180)
     folded = fold_session_store(spark.table(name))
     return {
         (r["user_id"], r["session_seq"]): (
@@ -94,16 +77,15 @@ def test_stream_equals_batch_and_boundaries_irrelevant(spark, tmp_path):
     assert sum(v[0] for v in expected.values()) == n_events_total
     for n_files, scramble in ((1, False), (4, False), (7, True)):
         src = tmp_path / f"feed_{n_files}_{scramble}"
-        _write_feed(spark, src, n_files, scramble_within=scramble)
+        stream = _feed(spark, src, n_files, scramble)
         tag = f"sess_{n_files}_{scramble}"
-        assert _run_stream(spark, src, tmp_path, tag) == expected, tag
+        assert _run_stream(spark, stream, tmp_path, tag) == expected, tag
 
 
 def test_replay_idempotent(spark, tmp_path):
-    src = tmp_path / "feed"
-    _write_feed(spark, src, 4)
-    first = _run_stream(spark, src, tmp_path, "sess_replay_a")
-    again = _run_stream(spark, src, tmp_path, "sess_replay_b")
+    stream = _feed(spark, tmp_path / "feed", 4)
+    first = _run_stream(spark, stream, tmp_path, "sess_replay_a")
+    again = _run_stream(spark, stream, tmp_path, "sess_replay_b")
     assert first == again
 
 
@@ -117,9 +99,8 @@ def test_gap_knob_bites(spark, tmp_path):
     assert sum(v[0] for v in expected_tight.values()) == sum(
         v[0] for v in expected_wide.values()
     )
-    src = tmp_path / "feed_tight"
-    _write_feed(spark, src, 3)
-    got = _run_stream(spark, src, tmp_path, "sess_tight", gap_minutes=1)
+    stream = _feed(spark, tmp_path / "feed_tight", 3)
+    got = _run_stream(spark, stream, tmp_path, "sess_tight", gap_minutes=1)
     assert got == expected_tight
 
 
@@ -173,22 +154,12 @@ def test_processor_splits_and_carries_state_across_batches():
 # evict=True: watermark-driven state eviction (r7)
 # ---------------------------------------------------------------------------
 
-def _run_evicting(spark, src, tmp_path, name, gap_minutes=30):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        session_stream(stream, gap_minutes=gap_minutes, evict=True)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_evicting(spark, stream, tmp_path, name, gap_minutes=30):
+    start_memory_sink(
+        session_stream(stream, gap_minutes=gap_minutes, evict=True),
+        name,
+        tmp_path / f"ckpt_{name}",
+    ).awaitTermination(180)
     return spark.table(name)
 
 
@@ -212,24 +183,13 @@ def test_evicting_mode_matches_unbounded_results(spark, tmp_path):
     (user, start_epoch)-keyed fold of the evicting run must equal the
     unbounded run's — timeouts only finalize sessions the gap rule had
     already sealed."""
-    src = tmp_path / "feed_evict_eq"
-    _write_feed(spark, src, 4)
-    evicting = _by_start(_run_evicting(spark, src, tmp_path, "sess_evict"))
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        session_stream(stream)  # unbounded twin
-        .writeStream.format("memory")
-        .queryName("sess_unbounded_twin")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_unb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    stream = _feed(spark, tmp_path / "feed_evict_eq", 4)
+    evicting = _by_start(_run_evicting(spark, stream, tmp_path, "sess_evict"))
+    start_memory_sink(
+        session_stream(stream),  # unbounded twin
+        "sess_unbounded_twin",
+        tmp_path / "ckpt_unb",
+    ).awaitTermination(180)
     unbounded = _by_start(spark.table("sess_unbounded_twin"))
     assert evicting == unbounded
     assert len(evicting) > 0
@@ -250,14 +210,13 @@ def test_eviction_fires_and_emits_final_without_new_events(spark, tmp_path):
         (3, "2099-01-02 10:00:00", 2, 1.0),
         (4, "2099-01-02 10:01:00", 2, 1.0),
     ]
-    src = tmp_path / "feed_evict_fire"
     df = spark.createDataFrame(
         rows, "event_id long, ts_s string, user_id long, value double"
     ).select("event_id", F.col("ts_s").cast("timestamp").alias("ts"),
              "user_id", "value")
-    df.filter("event_id <= 2").coalesce(1).write.parquet(str(src / "f0"))
-    df.filter("event_id > 2").coalesce(1).write.parquet(str(src / "f1"))
-    raw = _run_evicting(spark, src, tmp_path, "sess_evict_fire", gap_minutes=30)
+    parts = [df.filter("event_id <= 2"), df.filter("event_id > 2")]
+    stream = file_stream(spark, parts, tmp_path / "feed_evict_fire", _SCHEMA)
+    raw = _run_evicting(spark, stream, tmp_path, "sess_evict_fire", gap_minutes=30)
     u1 = [r for r in raw.collect() if r["user_id"] == 1]
     # batch-1 partial + timeout-final = 2 emissions for the silent user
     assert len(u1) == 2

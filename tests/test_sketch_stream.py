@@ -9,6 +9,7 @@ from uav_streamprocessor_spark.streaming.sketch_stream import (
     run_incremental_sketches,
     running_distinct_users,
 )
+from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -25,25 +26,18 @@ def _ts_as_timestamp(df):
 
 
 def _run_stream(spark, tmp_path, tag):
-    src = tmp_path / f"ev_src_{tag}"
     raw = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     ev = raw.select(
         "event_id", _ts_as_timestamp(raw), "user_id", "event_type"
     )
     # two files -> two micro-batches; users appear on BOTH sides of the
     # split so the merge genuinely unions overlapping sketches
-    ev.filter("event_id % 2 = 0").coalesce(1).write.mode("overwrite").parquet(
-        str(src / "f1")
-    )
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("overwrite").parquet(
-        str(src / "f2")
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
+    parts = [ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")]
+    stream = file_stream(
+        spark,
+        parts,
+        tmp_path / f"ev_src_{tag}",
+        "event_id long, ts timestamp, user_id long, event_type string",
     )
     q = run_incremental_sketches(
         stream,

@@ -26,6 +26,7 @@ from uav_streamprocessor_spark.streaming.sinks import (
     OrderedRecorderSink,
 )
 from uav_streamprocessor_spark.streaming.sources import (
+    ordered_slices,
     prepare_event_stream_dir,
     stream_events,
 )
@@ -57,6 +58,28 @@ def test_file_stream_replays_all_events(spark, stream_dir, tmp_path):
     total = spark.read.parquet(f"{stream_dir}").count()
     assert n == total
     assert q.lastProgress is not None
+
+
+def test_ordered_slices_partition_the_feed_in_order(spark):
+    """The cross-batch contract of every sequential-store feed: the n
+    parts of ordered_slices are disjoint, their union is the input, and
+    each part's last (ts, event_id) precedes the next part's first. An
+    odd row count leaves the last part short."""
+    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").select("event_id", "ts")
+    ev = ev.filter(F.col("event_id") != ev.agg(F.min("event_id")).first()[0])
+    n_rows = ev.count()
+    assert n_rows % 2 == 1
+    parts = [
+        sorted((r["ts"], r["event_id"]) for r in p.collect())
+        for p in ordered_slices(ev, 4, ("ts", "event_id"))
+    ]
+    per = -(-n_rows // 4)
+    assert [len(p) for p in parts] == [per, per, per, n_rows - 3 * per]
+    every = [k for p in parts for k in p]
+    assert len(set(every)) == len(every)  # disjoint
+    assert set(every) == {(r["ts"], r["event_id"]) for r in ev.collect()}
+    for a, b in zip(parts, parts[1:]):
+        assert a[-1] < b[0]
 
 
 def test_windowed_counts_match_batch(spark, stream_dir, tmp_path):

@@ -16,6 +16,9 @@ from uav_streamprocessor_spark.streaming.topk_stream import (
     topk_batch_reference,
     topk_stream,
 )
+from uav_streamprocessor_spark.streaming.replay import _NoState
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 
 SF_SMALL = "/root/testdata/sf0.001"
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -27,37 +30,17 @@ def _events(spark):
     )
 
 
-def _write_feed(spark, src, n_files, scramble_within=False):
-    ev = _events(spark)
-    total = ev.count()
-    per = -(-total // n_files)
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w))
-    for i in range(n_files):
-        part = ranked.filter(
-            (F.col("rn") > i * per) & (F.col("rn") <= (i + 1) * per)
-        ).drop("rn")
-        if scramble_within:
-            part = part.orderBy(F.col("event_id").desc())
-        part.coalesce(1).write.parquet(str(src / f"f{i}"))
+def _feed(spark, src, n_files, scramble_within=False):
+    parts = ordered_slices(_events(spark), n_files, ("ts", "event_id"))
+    if scramble_within:
+        parts = [p.orderBy(F.col("event_id").desc()) for p in parts]
+    return file_stream(spark, parts, src, _SCHEMA)
 
 
-def _run_stream(spark, src, tmp_path, name, capacity):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        topk_stream(stream, capacity=capacity)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+def _run_stream(spark, stream, tmp_path, name, capacity):
+    start_memory_sink(
+        topk_stream(stream, capacity=capacity), name, tmp_path / f"ckpt_{name}"
+    ).awaitTermination(180)
     return _summary_set(latest_snapshot(spark.table(name)))
 
 
@@ -71,9 +54,8 @@ def _summary_set(df):
 def test_exact_at_large_capacity(spark, tmp_path):
     """Capacity ≥ distinct users ⇒ no evictions: the final summary IS the
     exact per-(type, user) count with zero error."""
-    src = tmp_path / "feed_exact"
-    _write_feed(spark, src, 3)
-    got = _run_stream(spark, src, tmp_path, "topk_exact", capacity=10_000)
+    stream = _feed(spark, tmp_path / "feed_exact", 3)
+    got = _run_stream(spark, stream, tmp_path, "topk_exact", capacity=10_000)
     truth = {
         (r["event_type"], r["user_id"], r["n"], 0, r["tot"])
         for r in _events(spark)
@@ -94,17 +76,16 @@ def test_stream_equals_sequential_reference_under_eviction(spark, tmp_path):
     expected = _summary_set(topk_batch_reference(_events(spark), capacity=8))
     for n_files, scramble in ((1, False), (4, False), (5, True)):
         src = tmp_path / f"feed_{n_files}_{scramble}"
-        _write_feed(spark, src, n_files, scramble_within=scramble)
+        stream = _feed(spark, src, n_files, scramble)
         tag = f"topk_{n_files}_{scramble}"
-        got = _run_stream(spark, src, tmp_path, tag, capacity=8)
+        got = _run_stream(spark, stream, tmp_path, tag, capacity=8)
         assert got == expected, tag
 
 
 def test_replay_idempotent(spark, tmp_path):
-    src = tmp_path / "feed_replay"
-    _write_feed(spark, src, 3)
-    a = _run_stream(spark, src, tmp_path, "topk_replay_a", capacity=8)
-    b = _run_stream(spark, src, tmp_path, "topk_replay_b", capacity=8)
+    stream = _feed(spark, tmp_path / "feed_replay", 3)
+    a = _run_stream(spark, stream, tmp_path, "topk_replay_a", capacity=8)
+    b = _run_stream(spark, stream, tmp_path, "topk_replay_b", capacity=8)
     assert a == b
 
 
@@ -112,13 +93,6 @@ def test_heavy_hitter_guarantee_on_planted_whale():
     """Pure-processor check: a whale with frequency > n/m survives any
     eviction pressure and its bounds bracket the true count; minor items
     carry honest error."""
-
-    class _NoState:
-        exists = False
-        get = None
-
-        def update(self, _):
-            pass
 
     # 60 whale events + 40 spread over 20 minor users, capacity 4
     uids = []

@@ -28,6 +28,7 @@ from uav_streamprocessor_spark.streaming.ewma_stream import (
     ewma_stream_tws,
     make_ewma_processor,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
 
 _ALPHA = 0.4
 
@@ -150,16 +151,9 @@ def test_tws_stream_equals_batch_reference(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = (
-        ewma_stream_tws(stream, alpha=_ALPHA)
-        .writeStream.format("memory")
-        .queryName("ewma_tws")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    start_memory_sink(
+        ewma_stream_tws(stream, alpha=_ALPHA), "ewma_tws", tmp_path / "ckpt"
+    ).awaitTermination(180)
     got = {
         (r["user_id"], r["event_id"]): (r["value"], r["ewma_prev"], r["deviation"])
         for r in spark.table("ewma_tws").collect()

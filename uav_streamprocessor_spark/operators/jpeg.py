@@ -1015,12 +1015,15 @@ def _decode_scan(
     flat_val: list[list[int]] = [[] for _ in scan]
     n_comps = len(scan)
 
-    # Refills read from a zero-padded copy of the segment (224 pad
-    # bytes bound the worst single-block overrun: 64 coefficients x ~27
-    # bits + slack), which removes the per-refill bounds test; `loaded`
-    # counts every bit shifted in, so consumed = loaded - acc_bits and
-    # the per-symbol `pos` bookkeeping collapses into the block-end
-    # exhaustion check. Pad bits are zeros = the old virtual fill.
+    # Refills read from a zero-padded copy of the segment, which removes
+    # the per-refill bounds test; `loaded` counts every bit shifted in,
+    # so consumed = loaded - acc_bits and the per-symbol `pos`
+    # bookkeeping collapses into the block-end exhaustion check. Pad
+    # bits are zeros = the old virtual fill. The 224 pad bytes cover the
+    # worst block under the Annex K tables (63 x 26 + 20 bits), not
+    # every block: a crafted DHT (16-bit codes with long value reads)
+    # over a truncated scan can read past the pad. That read raises IndexError, which decode_jpeg turns into
+    # JpegFormatError, so the caller still sees a format error.
     _PAD = b"\x00" * 224
     seg_idx = 0
     data = segs[0] + _PAD

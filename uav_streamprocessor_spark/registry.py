@@ -2270,90 +2270,109 @@ def _keyframe_numbers(n_frames: int) -> list[int]:
     return list(range(0, n_frames, DEFAULT_CONFIG.keyframe_interval))
 
 
-def _mjpeg_fixture_paths(spark) -> list[str]:
-    """Build-once MJPEG AVI bench fixture (VERDICT r12 #7): the SAME
-    synthetic frames _pixel_pipeline reads (seeds 40/41, 640x360) are
-    JPEG-encoded on executors (q=85 4:2:0) and muxed into one MJPG AVI
-    per camera under a versioned tmp dir, so the mjpeg pixel query pays
-    the TRUE S2 cost — RIFF demux + entropy decode per frame — instead
-    of the raw-tensor synthetic source. Cached on disk per box (atomic
-    rename; a concurrent builder loses the race harmlessly). 60
-    frames/cam keeps the pure-numpy decode lane (~0.39s per 640x360
-    frame single-core) a bench-sized workload; with a native codec on
-    the seam the same fixture runs ~100x faster."""
+def _build_once(name: str, files: list[str], write) -> list[str]:
+    """Build-once fixture directory `name` under the temp dir, cached on
+    disk per box: write(tmp) fills a pid-private directory that is then
+    renamed into place atomically, so a concurrent build loses the
+    race harmlessly. Returns the paths of `files` inside it."""
     import os
     import shutil
     import tempfile
     from pathlib import Path
 
-    from uav_streamprocessor_spark.sources import video_source
-
-    n_cams, n_frames, w, h, q = _MJPEG_FIXTURE_GEOMETRY
-    base = Path(tempfile.gettempdir()) / (
-        f"uav_spark_mjpeg_fixture_v1_{n_cams}x{n_frames}_{w}x{h}_q{q}"
-    )
-    paths = [str(base / f"bench{i}.avi") for i in range(n_cams)]
+    base = Path(tempfile.gettempdir()) / name
+    paths = [str(base / f) for f in files]
     if base.exists():
         return paths
-
-    video_source.register(spark)
-    spec = ",".join(
-        f"synthetic://bench{i}?frames={n_frames}&w={w}&h={h}&seed={40 + i}"
-        for i in range(n_cams)
-    )
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", spec)
-        .option("framesPerPartition", "4")
-        .load()
-        .select("camera_id", "frame_number", "image")
-    )
-
-    def enc(batches):
-        import pandas as pd
-
-        from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
-        from uav_streamprocessor_spark.operators.pixel import decode_image
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "camera_id": pdf["camera_id"],
-                    "frame_number": pdf["frame_number"],
-                    "jpg": [
-                        encode_jpeg(
-                            decode_image(bytes(b)), quality=q,
-                            subsampling="4:2:0",
-                        )
-                        for b in pdf["image"]
-                    ],
-                }
-            )
-
-    rows = frames.mapInPandas(
-        enc, schema="camera_id string, frame_number long, jpg binary"
-    ).collect()
-    by_cam: dict[str, list] = {}
-    for r in rows:
-        by_cam.setdefault(r["camera_id"], []).append(
-            (r["frame_number"], bytes(r["jpg"]))
-        )
-
-    from uav_streamprocessor_spark.sources.avi import FOURCC_MJPG, write_avi
-
     tmp = Path(str(base) + f".tmp{os.getpid()}")
     tmp.mkdir(parents=True, exist_ok=True)
-    for cam, fr in by_cam.items():
-        write_avi(
-            tmp / f"{cam}.avi",
-            [b for _, b in sorted(fr)],
-            fps=25.0, fourcc=FOURCC_MJPG, width=w, height=h,
-        )
+    write(tmp)
     try:
         os.rename(tmp, base)
     except OSError:  # lost a concurrent-build race: theirs is identical
         shutil.rmtree(tmp, ignore_errors=True)
     return paths
+
+
+def _mjpeg_avi_fixture(spark, geometry, prefix: str, cam: str, tail) -> list[str]:
+    """Build-once MJPG AVI fixture of geometry (n_cams, n_frames, w, h,
+    q): synthetic uav_video cameras `{cam}{i}` (the spec tail(i) picks
+    their frame generator) are JPEG-encoded on executors (q, 4:2:0) and
+    muxed into one MJPG AVI per camera."""
+    n_cams, n_frames, w, h, q = geometry
+
+    def write(tmp):
+        from uav_streamprocessor_spark.sources import video_source
+        from uav_streamprocessor_spark.sources.avi import FOURCC_MJPG, write_avi
+
+        video_source.register(spark)
+        spec = ",".join(
+            f"synthetic://{cam}{i}?frames={n_frames}&w={w}&h={h}&{tail(i)}"
+            for i in range(n_cams)
+        )
+        frames = (
+            spark.read.format("uav_video")
+            .option("path", spec)
+            .option("framesPerPartition", "4")
+            .load()
+            .select("camera_id", "frame_number", "image")
+        )
+
+        def enc(batches):
+            import pandas as pd
+
+            from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
+            from uav_streamprocessor_spark.operators.pixel import decode_image
+
+            for pdf in batches:
+                yield pd.DataFrame(
+                    {
+                        "camera_id": pdf["camera_id"],
+                        "frame_number": pdf["frame_number"],
+                        "jpg": [
+                            encode_jpeg(
+                                decode_image(bytes(b)), quality=q,
+                                subsampling="4:2:0",
+                            )
+                            for b in pdf["image"]
+                        ],
+                    }
+                )
+
+        rows = frames.mapInPandas(
+            enc, schema="camera_id string, frame_number long, jpg binary"
+        ).collect()
+        by_cam: dict[str, list] = {}
+        for r in rows:
+            by_cam.setdefault(r["camera_id"], []).append(
+                (r["frame_number"], bytes(r["jpg"]))
+            )
+        for c, fr in by_cam.items():
+            write_avi(
+                tmp / f"{c}.avi",
+                [b for _, b in sorted(fr)],
+                fps=25.0, fourcc=FOURCC_MJPG, width=w, height=h,
+            )
+
+    return _build_once(
+        f"{prefix}_{n_cams}x{n_frames}_{w}x{h}_q{q}",
+        [f"{cam}{i}.avi" for i in range(n_cams)],
+        write,
+    )
+
+
+def _mjpeg_fixture_paths(spark) -> list[str]:
+    """MJPEG AVI bench fixture (VERDICT r12 #7): the SAME synthetic
+    frames _pixel_pipeline reads (seeds 40/41, 640x360) at q=85, so the
+    mjpeg pixel query pays the TRUE S2 cost — RIFF demux + entropy
+    decode per frame — instead of the raw-tensor synthetic source. 60
+    frames/cam keeps the pure-numpy decode lane (~0.39s per 640x360
+    frame single-core) a bench-sized workload; with a native codec on
+    the seam the same fixture runs ~100x faster."""
+    return _mjpeg_avi_fixture(
+        spark, _MJPEG_FIXTURE_GEOMETRY, "uav_spark_mjpeg_fixture_v1", "bench",
+        lambda i: f"seed={40 + i}",
+    )
 
 
 def _pixel_pipeline_mjpeg(spark):
@@ -2535,84 +2554,13 @@ ORDER BY camera_id, frame_number
 
 
 def _mjpeg_md5_fixture_paths(spark) -> list[str]:
-    """Build-once MJPG AVI contract fixture (r16): md5-generated frames
-    (the uav_pixel_moments tags, so camera_id:frame_number regenerates
-    the pre-encode original inside the contract UDF) JPEG-encoded at
-    q=85 4:2:0 and muxed into one MJPG AVI per camera. Same atomic
-    build-and-rename protocol as _mjpeg_fixture_paths."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from uav_streamprocessor_spark.sources import video_source
-
-    n_cams, n_frames, w, h, q = _MJPEG_MD5_FIXTURE_GEOMETRY
-    base = Path(tempfile.gettempdir()) / (
-        f"uav_spark_mjpeg_md5_fixture_v1_{n_cams}x{n_frames}_{w}x{h}_q{q}"
+    """MJPG AVI contract fixture (r16): md5-generated frames (the
+    uav_pixel_moments tags, so camera_id:frame_number regenerates the
+    pre-encode original inside the contract UDF) at q=85."""
+    return _mjpeg_avi_fixture(
+        spark, _MJPEG_MD5_FIXTURE_GEOMETRY, "uav_spark_mjpeg_md5_fixture_v1",
+        "px", lambda i: "gen=md5",
     )
-    paths = [str(base / f"px{i}.avi") for i in range(n_cams)]
-    if base.exists():
-        return paths
-
-    video_source.register(spark)
-    spec = ",".join(
-        f"synthetic://px{i}?frames={n_frames}&w={w}&h={h}&gen=md5"
-        for i in range(n_cams)
-    )
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", spec)
-        .option("framesPerPartition", "4")
-        .load()
-        .select("camera_id", "frame_number", "image")
-    )
-
-    def enc(batches):
-        import pandas as pd
-
-        from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
-        from uav_streamprocessor_spark.operators.pixel import decode_image
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "camera_id": pdf["camera_id"],
-                    "frame_number": pdf["frame_number"],
-                    "jpg": [
-                        encode_jpeg(
-                            decode_image(bytes(b)), quality=q,
-                            subsampling="4:2:0",
-                        )
-                        for b in pdf["image"]
-                    ],
-                }
-            )
-
-    rows = frames.mapInPandas(
-        enc, schema="camera_id string, frame_number long, jpg binary"
-    ).collect()
-    by_cam: dict[str, list] = {}
-    for r in rows:
-        by_cam.setdefault(r["camera_id"], []).append(
-            (r["frame_number"], bytes(r["jpg"]))
-        )
-
-    from uav_streamprocessor_spark.sources.avi import FOURCC_MJPG, write_avi
-
-    tmp = Path(str(base) + f".tmp{os.getpid()}")
-    tmp.mkdir(parents=True, exist_ok=True)
-    for cam, fr in by_cam.items():
-        write_avi(
-            tmp / f"{cam}.avi",
-            [b for _, b in sorted(fr)],
-            fps=25.0, fourcc=FOURCC_MJPG, width=w, height=h,
-        )
-    try:
-        os.rename(tmp, base)
-    except OSError:  # lost a concurrent-build race: theirs is identical
-        shutil.rmtree(tmp, ignore_errors=True)
-    return paths
 
 
 def _pixel_moments_mjpeg(spark):
@@ -7839,32 +7787,22 @@ def _wav_md5_fixture_paths() -> list[str]:
     """Build-once REAL WAV fixture (r16): 4 PCM16 mono 16 kHz files of
     8000 samples each, bytes md5-derived ('w<k>' — SQL-replayable),
     written through sources/wav.write_wav. Driver-side pure-Python build
-    (16 KB per file); same atomic rename protocol as the AVI fixtures."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    (16 KB per file)."""
     from uav_streamprocessor_spark.operators.multimodal import _md5_noise
     from uav_streamprocessor_spark.sources.wav import write_wav
 
     n_files, n_samples, rate = 4, 8000, 16000
-    base = Path(tempfile.gettempdir()) / (
-        f"uav_spark_wav_md5_fixture_v1_{n_files}x{n_samples}_{rate}hz"
+
+    def write(tmp):
+        for k in range(n_files):
+            pcm = _md5_noise(f"w{k}", n_samples * 2).tobytes()
+            write_wav(tmp / f"w{k}.wav", pcm, sample_rate=rate)
+
+    return _build_once(
+        f"uav_spark_wav_md5_fixture_v1_{n_files}x{n_samples}_{rate}hz",
+        [f"w{k}.wav" for k in range(n_files)],
+        write,
     )
-    paths = [str(base / f"w{k}.wav") for k in range(n_files)]
-    if base.exists():
-        return paths
-    tmp = Path(str(base) + f".tmp{os.getpid()}")
-    tmp.mkdir(parents=True, exist_ok=True)
-    for k in range(n_files):
-        pcm = _md5_noise(f"w{k}", n_samples * 2).tobytes()
-        write_wav(tmp / f"w{k}.wav", pcm, sample_rate=rate)
-    try:
-        os.rename(tmp, base)
-    except OSError:  # lost a concurrent-build race: theirs is identical
-        shutil.rmtree(tmp, ignore_errors=True)
-    return paths
 
 
 _register(
@@ -7930,43 +7868,33 @@ def _wav_vad_fixture_paths() -> list[str]:
     ('vw<k>' md5 noise) with PLANTED digital silence — file k zeroes
     every (k+2)-th 400-sample window, so the four clips carry DIFFERENT
     activity cadences (50%, ~65%, 75%, 80% active) and the gate's
-    discrimination is ground-truthed, not vacuous. Same driver-side
-    atomic build as the feature fixture."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    discrimination is ground-truthed, not vacuous. Built in-process
+    like the feature fixture."""
     import numpy as np
 
     from uav_streamprocessor_spark.operators.multimodal import _md5_noise
     from uav_streamprocessor_spark.sources.wav import write_wav
 
     n_files, n_samples, rate, win = 4, 16000, 16000, 400
-    base = Path(tempfile.gettempdir()) / (
-        f"uav_spark_wav_vad_fixture_v1_{n_files}x{n_samples}_{rate}hz"
+
+    def write(tmp):
+        for k in range(n_files):
+            pcm = (
+                _md5_noise(f"vw{k}", n_samples * 2)
+                .view("<i2")
+                .astype(np.int16)
+                .copy()
+            )
+            for wdx in range(n_samples // win):
+                if wdx % (k + 2) == 0:
+                    pcm[wdx * win : (wdx + 1) * win] = 0
+            write_wav(tmp / f"vw{k}.wav", pcm.tobytes(), sample_rate=rate)
+
+    return _build_once(
+        f"uav_spark_wav_vad_fixture_v1_{n_files}x{n_samples}_{rate}hz",
+        [f"vw{k}.wav" for k in range(n_files)],
+        write,
     )
-    paths = [str(base / f"vw{k}.wav") for k in range(n_files)]
-    if base.exists():
-        return paths
-    tmp = Path(str(base) + f".tmp{os.getpid()}")
-    tmp.mkdir(parents=True, exist_ok=True)
-    for k in range(n_files):
-        pcm = (
-            _md5_noise(f"vw{k}", n_samples * 2)
-            .view("<i2")
-            .astype(np.int16)
-            .copy()
-        )
-        for wdx in range(n_samples // win):
-            if wdx % (k + 2) == 0:
-                pcm[wdx * win : (wdx + 1) * win] = 0
-        write_wav(tmp / f"vw{k}.wav", pcm.tobytes(), sample_rate=rate)
-    try:
-        os.rename(tmp, base)
-    except OSError:  # lost a concurrent-build race: theirs is identical
-        shutil.rmtree(tmp, ignore_errors=True)
-    return paths
 
 
 _register(

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from uav_streamprocessor_spark.streaming.replay import replay_batch
+
 _OUT_SCHEMA = (
     "user_id long, event_id long, ts_us long, value double, "
     "n_prior long, z double"
@@ -111,18 +113,6 @@ def anomaly_batch_reference(events: DataFrame) -> DataFrame:
     """Exactness reference: the same sequential scorer over a bounded
     DataFrame via applyInPandas (whole history per key, no incremental
     state) — the backfill form, and the equality target for the stream."""
-    proc = make_welford_processor()
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        class _NoState:
-            exists = False
-            get = None
-
-            def update(self, _):
-                pass
-
-        return next(proc(key, iter([pdf]), _NoState()))
-
-    return _prepared(events).groupBy("user_id").applyInPandas(
-        run, schema=_OUT_SCHEMA
+    return replay_batch(
+        _prepared(events), ["user_id"], make_welford_processor(), _OUT_SCHEMA
     )

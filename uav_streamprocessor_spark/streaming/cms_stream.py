@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from uav_streamprocessor_spark.streaming.replay import replay_batch
+
 _M64 = (1 << 64) - 1
 _MIX = 0x9E3779B97F4A7C15
 # fixed odd multipliers / offsets, one pair per sketch row
@@ -150,20 +152,9 @@ def cms_batch_reference(
     """One-pass reference over each key's whole history (the backfill
     form; exact equality target for the final stream snapshot — the
     sketch is order-independent, so no sequencing caveats)."""
-    proc = make_cms_processor(depth, width)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        class _NoState:
-            exists = False
-            get = None
-
-            def update(self, _):
-                pass
-
-        return next(proc(key, iter([pdf]), _NoState()))
-
-    return _prepared(events).groupBy("event_type").applyInPandas(
-        run, schema=_OUT_SCHEMA
+    return replay_batch(
+        _prepared(events), ["event_type"], make_cms_processor(depth, width),
+        _OUT_SCHEMA,
     )
 
 

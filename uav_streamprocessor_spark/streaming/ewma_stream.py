@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+from uav_streamprocessor_spark.streaming.replay import replay_batch
+
 _OUT_SCHEMA = (
     "user_id long, event_id long, ts_us long, value double, "
     "ewma_prev double, deviation double"
@@ -180,18 +182,6 @@ def ewma_batch_reference(events: DataFrame, alpha: float = 0.4) -> DataFrame:
     """Exactness reference: the same sequential recursion over a bounded
     DataFrame via applyInPandas (whole history per key, no incremental
     state) — the backfill form, and the equality target for the stream."""
-    proc = make_ewma_processor(alpha)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        class _NoState:
-            exists = False
-            get = None
-
-            def update(self, _):
-                pass
-
-        return next(proc(key, iter([pdf]), _NoState()))
-
-    return _prepared(events).groupBy("user_id").applyInPandas(
-        run, schema=_OUT_SCHEMA
+    return replay_batch(
+        _prepared(events), ["user_id"], make_ewma_processor(alpha), _OUT_SCHEMA
     )

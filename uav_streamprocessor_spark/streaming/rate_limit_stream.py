@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from uav_streamprocessor_spark.streaming.replay import replay_batch
+
 _OUT_SCHEMA = (
     "user_id long, event_type string, event_id long, ts_us long, kept int"
 )
@@ -128,20 +130,9 @@ def rate_limit_batch_reference(
     is the correctness proof; this is also the form a backfill job would
     run. Per-key sequential scans partition across the cluster; per-key
     history length is the only sequential bound (same as any limiter)."""
-    limiter = make_rate_limiter(window_minutes, mode)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        class _NoState:
-            exists = False
-            get = None
-
-            def update(self, _):
-                pass
-
-        return next(limiter(key, iter([pdf]), _NoState()))
-
-    return (
-        _prepared(events)
-        .groupBy("user_id", "event_type")
-        .applyInPandas(run, schema=_OUT_SCHEMA)
+    return replay_batch(
+        _prepared(events),
+        ["user_id", "event_type"],
+        make_rate_limiter(window_minutes, mode),
+        _OUT_SCHEMA,
     )

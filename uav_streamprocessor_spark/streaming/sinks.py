@@ -34,6 +34,7 @@ from pathlib import Path
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
 from uav_streamprocessor_spark.sources.avi import (
@@ -589,3 +590,18 @@ class IdempotentBatchSink:
             return
         self.inner(batch, batch_id)
         marker.touch()
+
+
+def start_memory_sink(df: DataFrame, name: str, checkpoint) -> StreamingQuery:
+    """Start df into the in-memory table `name` in append mode under an
+    availableNow trigger: the query drains every micro-batch available
+    at start, then stops. The state stores' tests and the streaming
+    bench read their output this way."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )

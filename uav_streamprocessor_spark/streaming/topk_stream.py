@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from uav_streamprocessor_spark.streaming.replay import replay_batch
+
 _OUT_SCHEMA = (
     "event_type string, user_id long, est_count long, error long, "
     "n_seen long, update_seq long"
@@ -147,20 +149,9 @@ def topk_batch_reference(
     """Sequential reference: the same processor over each key's whole
     history in one pass (the backfill form; equality target for the
     final stream snapshot)."""
-    proc = make_topk_processor(capacity)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        class _NoState:
-            exists = False
-            get = None
-
-            def update(self, _):
-                pass
-
-        return next(proc(key, iter([pdf]), _NoState()))
-
-    return _prepared(events).groupBy("event_type").applyInPandas(
-        run, schema=_OUT_SCHEMA
+    return replay_batch(
+        _prepared(events), ["event_type"], make_topk_processor(capacity),
+        _OUT_SCHEMA,
     )
 
 
