@@ -2,8 +2,9 @@
 # Round-gate test runner (VERDICT r12 #8 / r13 #6): the full suite, same
 # coverage as `python -m pytest tests/`, in HALF the wall-clock by
 # running two independent pytest processes concurrently — each with its
-# own SparkSession (local[16] × 2 on the 32-cpu box; peak memory well
-# inside the container).
+# own SparkSession (local[16] × 2 on the 32-cpu box) — when MemAvailable
+# covers two driver heaps; otherwise the two shards run one after the
+# other (the script prints which mode it chose).
 #
 # Shard A: the streaming/state/source/sink modules (availableNow
 #          micro-batch loops dominate their time, CPU-light).
@@ -78,15 +79,44 @@ for f in "${SHARD_A[@]}"; do IGNORES+=("--ignore=$f"); done
 LOG_A=$(mktemp /tmp/test_gate_shard_a.XXXXXX.log)
 LOG_B=$(mktemp /tmp/test_gate_shard_b.XXXXXX.log)
 
-start=$(date +%s)
-python -m pytest "${SHARD_A[@]}" -q "$@" > "$LOG_A" 2>&1 &
-PID_A=$!
-python -m pytest tests/ "${IGNORES[@]}" -q "$@" > "$LOG_B" 2>&1 &
-PID_B=$!
+# Two sessions at once only when the free memory covers both drivers
+# (SPARK_DRIVER_MEMORY, default 8g, as session.get_spark sets it) plus
+# 4 GiB for Python workers and pytest; otherwise the kernel OOM-killer
+# can take one shard's JVM half way through. Else: one after the other.
+to_kib() {
+  local v=${1,,}
+  v=${v%b}  # Spark also takes kb/mb/gb/tb
+  case $v in
+    *t) echo $(( ${v%t} * 1024 * 1024 * 1024 )) ;;
+    *g) echo $(( ${v%g} * 1024 * 1024 )) ;;
+    *m) echo $(( ${v%m} * 1024 )) ;;
+    *k) echo $(( ${v%k} )) ;;
+    *) echo $(( v / 1024 )) ;;
+  esac
+}
+DRIVER_KIB=$(to_kib "${SPARK_DRIVER_MEMORY:-8g}")
+NEED_KIB=$(( 2 * DRIVER_KIB + 4 * 1024 * 1024 ))
+AVAIL_KIB=$(awk '/^MemAvailable:/ {print $2}' /proc/meminfo)
+if [ "${AVAIL_KIB:-0}" -ge "$NEED_KIB" ]; then
+  MODE=concurrent
+else
+  MODE=serial
+fi
+echo "--- gate mode: $MODE (MemAvailable $((AVAIL_KIB / 1024)) MiB, two shards need $((NEED_KIB / 1024)) MiB) ---"
 
+start=$(date +%s)
 rc=0
-wait $PID_A || rc=1
-wait $PID_B || rc=1
+if [ "$MODE" = concurrent ]; then
+  python -m pytest "${SHARD_A[@]}" -q "$@" > "$LOG_A" 2>&1 &
+  PID_A=$!
+  python -m pytest tests/ "${IGNORES[@]}" -q "$@" > "$LOG_B" 2>&1 &
+  PID_B=$!
+  wait $PID_A || rc=1
+  wait $PID_B || rc=1
+else
+  python -m pytest "${SHARD_A[@]}" -q "$@" > "$LOG_A" 2>&1 || rc=1
+  python -m pytest tests/ "${IGNORES[@]}" -q "$@" > "$LOG_B" 2>&1 || rc=1
+fi
 end=$(date +%s)
 
 echo "--- shard A (streaming/sources/sinks): $LOG_A ---"

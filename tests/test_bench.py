@@ -9,6 +9,7 @@ import json
 import pytest
 
 import bench
+from tests.conftest import SF_SMALL
 
 STAMP = {"cpus": 32, "sf": 0.1, "runs_per_query": 3, "warm": True, "method": 1}
 
@@ -153,3 +154,20 @@ def test_write_record_never_overwrites(tmp_path):
     with pytest.raises(FileExistsError):
         bench.write_record({**rec, "queries": {"q": 2.0}}, target)
     assert target.read_bytes() == first
+
+
+def test_streaming_batches_are_counted_from_the_query(spark, monkeypatch):
+    """`batches` is the number of micro-batches that ingested rows, read
+    from the query's progress: a feed cut to 3 of its N_STREAM_BATCHES (4)
+    files reads 3."""
+    feed = bench.file_stream
+    monkeypatch.setattr(
+        bench, "STREAM_STORES", [s for s in bench.STREAM_STORES if s[0] == "cms_state"]
+    )
+    monkeypatch.setattr(
+        bench, "file_stream",
+        lambda spark, parts, src, schema: feed(spark, parts[:3], src, schema),
+    )
+    res = bench.bench_streaming(spark, SF_SMALL, 1)["cms_state"]
+    assert res["batches"] == 3
+    assert res["sec_per_batch"] == round(res["sec"] / 3, 3)

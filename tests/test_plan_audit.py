@@ -374,37 +374,28 @@ def test_kneser_ney_does_not_force_broadcast_vocab_sides(spark):
 
 def test_pixel_moments_pushdown_engages(spark):
     """uav_pixel_moments must run the SPARSE source plan: the
-    frame_number IN hint is consumed by the reader and only the 5
-    keyframes per camera are synthesized (4 planned partitions at
-    framesPerPartition=4), and the pipeline is ONE mapInPandas pass.
-    If the runtime pushdown conf or the IN hint silently stopped
+    frame_number IN list `load_keyframes` derives is consumed by the
+    reader and only the 5 keyframes per camera are synthesized (one
+    planned partition each), and the pipeline is ONE mapInPandas pass.
+    If the runtime pushdown conf or the IN list silently stopped
     engaging, the query would stay CORRECT but synthesize 242 frames
-    instead of 10 (62 partitions) — a 6x decode regression only this
-    partition-count gate catches."""
+    instead of 10 (242 partitions at framesPerPartition=1) — a 24x
+    decode regression only this partition-count gate catches."""
     df = _Q["uav_pixel_moments"](spark, SF_SMALL)
     assert df.rdd.getNumPartitions() == 1  # post-repartition(1) tail
     # the source-side sparse plan: count partitions before the exchange
-    from pyspark.sql import functions as F
+    from uav_streamprocessor_spark.sources.readers import load_keyframes
 
-    from uav_streamprocessor_spark.sources import video_source
-
-    video_source.register(spark)
-    src = (
-        spark.read.format("uav_video")
-        .option(
-            "path",
-            ",".join(
-                f"synthetic://px{i}?frames=121&w=640&h=360&gen=md5"
-                for i in range(2)
-            ),
-        )
-        .option("framesPerPartition", "4")
-        .load()
-        .filter(F.col("frame_number").isin([0, 30, 60, 90, 120]))
+    src = load_keyframes(
+        spark,
+        ",".join(
+            f"synthetic://px{i}?frames=121&w=640&h=360&gen=md5"
+            for i in range(2)
+        ),
     )
-    assert src.rdd.getNumPartitions() == 4, (
+    assert src.rdd.getNumPartitions() == 10, (
         "frame_number pushdown did not engage: expected the sparse "
-        "keyframe plan (2 cams x ceil(5/4) chunks), got the dense scan"
+        "keyframe plan (2 cams x 5 keyframes), got the dense scan"
     )
     plan = formatted_plan(df).split("== Initial Plan ==")[0]
     # ONE signature pass: a single MapInPandas node in the final tree
@@ -415,25 +406,15 @@ def test_pixel_moments_pushdown_engages(spark):
 
 def test_pixel_moments_mjpeg_pushdown_engages(spark):
     """Same gate for the MJPG contract twin: 2 keyframes per camera →
-    one sparse partition per camera; without pushdown the query would
+    one sparse partition per keyframe; without pushdown the query would
     entropy-decode 62 frames instead of 4 (~15x)."""
     df = _Q["uav_pixel_moments_mjpeg"](spark, SF_SMALL)
     tree = formatted_plan(df).split("(1)")[0]
     assert tree.count("MapInPandas") == 1, tree[:1500]
-    from pyspark.sql import functions as F
-
     from uav_streamprocessor_spark import registry as _reg
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.readers import load_keyframes
 
-    video_source.register(spark)
-    paths = _reg._mjpeg_md5_fixture_paths(spark)
-    src = (
-        spark.read.format("uav_video")
-        .option("path", ",".join(paths))
-        .option("framesPerPartition", "4")
-        .load()
-        .filter(F.col("frame_number").isin([0, 30]))
-    )
-    assert src.rdd.getNumPartitions() == 2, (
+    src = load_keyframes(spark, ",".join(_reg._mjpeg_md5_fixture_paths(spark)))
+    assert src.rdd.getNumPartitions() == 4, (
         "frame_number pushdown did not engage on the AVI lane"
     )

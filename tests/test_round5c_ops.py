@@ -309,7 +309,10 @@ def test_ivfpq_model_build_jobs_keep_callers_job_group(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    # no job joined the ungrouped set; the tracker keeps only the newest
+    # spark.ui.retainedJobs jobs, so older ungrouped ids may have been
+    # evicted while the query ran
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
     assert sc.statusTracker().getJobIdsForGroup("ivfpq_job_group")
 
 

@@ -1,13 +1,25 @@
 """Custom uav_video DataSource: batch partition planning + streaming
-offsets (S2/S3 adapter, SURVEY.md §7 'What's hard' #1)."""
+offsets (S2/S3 adapter, SURVEY.md §7 'What's hard' #1), and
+`readers.load_keyframes`, the keyframe read over it."""
 
 from __future__ import annotations
+
+import hashlib
+import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import REPO
+from uav_streamprocessor_spark.config import PipelineConfig
 from uav_streamprocessor_spark.operators.pixel import decode_image
+from uav_streamprocessor_spark.operators.uav_core import keyframes
+from uav_streamprocessor_spark.sources.readers import load_frames, load_keyframes
 from uav_streamprocessor_spark.sources.video_source import register
+from uav_streamprocessor_spark.storage import formatted_plan
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -200,3 +212,95 @@ def test_pipeline_over_video_source(spark):
     rows = flat.collect()
     assert {r["frame_number"] for r in rows} <= {0, 30, 60, 90}
     assert len({r["frame_number"] for r in rows}) == 4
+
+
+def _rows(df):
+    return sorted(
+        (r["camera_id"], r["frame_number"], hashlib.sha256(bytes(r["image"])).hexdigest())
+        for r in df.select("camera_id", "frame_number", "image").collect()
+    )
+
+
+def test_load_keyframes_synthetic_cameras_of_different_lengths(spark):
+    """Two cameras of 61 and 31 frames at interval 30: the keyframe list
+    runs to the longer camera, the shorter one drops 60, and each of the
+    5 keyframes is one partition of the sparse plan."""
+    src = (
+        "synthetic://camK?frames=61&w=64&h=36&seed=7,"
+        "synthetic://camL?frames=31&w=64&h=36&seed=8"
+    )
+    kf = load_keyframes(spark, src)
+    assert _rows(kf) == _rows(keyframes(load_frames(spark, src)))
+    assert [(c, f) for c, f, _ in _rows(kf)] == [
+        ("camK", 0), ("camK", 30), ("camK", 60), ("camL", 0), ("camL", 30)
+    ]
+    assert kf.rdd.getNumPartitions() == 5
+    plan = formatted_plan(kf)
+    assert "PushedFilters: [In(frame_number, [0,30,60])]" in plan, plan
+
+
+def test_load_keyframes_mjpeg_avi_cameras(spark, tmp_path):
+    """A 2-camera MJPG .avi source (5 and 3 frames) at interval 2: the
+    keyframes are entropy-decoded one per partition, nothing else."""
+    from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
+    from uav_streamprocessor_spark.operators.pixel import make_test_image
+    from uav_streamprocessor_spark.sources.avi import FOURCC_MJPG, write_avi
+
+    paths = []
+    for cam, n in (("camM", 5), ("camN", 3)):
+        jpegs = [
+            encode_jpeg(decode_image(make_test_image(i, 36, 64)), quality=85)
+            for i in range(n)
+        ]
+        paths.append(str(write_avi(
+            tmp_path / f"{cam}.avi", jpegs, fps=25.0, fourcc=FOURCC_MJPG,
+            width=64, height=36,
+        )))
+    src = ",".join(paths)
+    cfg = PipelineConfig(keyframe_interval=2)
+    kf = load_keyframes(spark, src, cfg)
+    assert _rows(kf) == _rows(keyframes(load_frames(spark, src), cfg))
+    assert [(c, f) for c, f, _ in _rows(kf)] == [
+        ("camM", 0), ("camM", 2), ("camM", 4), ("camN", 0), ("camN", 2)
+    ]
+    assert kf.rdd.getNumPartitions() == 5
+
+
+def test_load_keyframes_frames_parquet(spark, tmp_path):
+    """A frames parquet is read as `load_frames` reads it, with the
+    keyframe filter on top: same rows, same scan partitions."""
+    path = str(tmp_path / "frames.parquet")
+    spark.read.format("uav_video").option(
+        "path", "synthetic://camP?frames=61&w=64&h=36&seed=9"
+    ).load().write.parquet(path)
+    kf = load_keyframes(spark, path)
+    frames = load_frames(spark, path)
+    assert _rows(kf) == _rows(keyframes(frames))
+    assert [f for _, f, _ in _rows(kf)] == [0, 30, 60]
+    assert kf.rdd.getNumPartitions() == frames.rdd.getNumPartitions()
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver started outside the checkout, with only the driver's
+    sys.path pointing at it, still runs Python data-source and UDF
+    workers: the session hands the workers the package's location."""
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        from uav_streamprocessor_spark.operators.pixel import letterbox_and_detect
+        from uav_streamprocessor_spark.session import get_spark
+        from uav_streamprocessor_spark.sources.readers import load_frames
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        frames = load_frames(spark, "synthetic://cam0?frames=2&w=64&h=36")
+        print("rows", letterbox_and_detect(frames).count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 2" in out.stdout

@@ -26,12 +26,8 @@ class PipelineConfig:
     classes: tuple[str, ...] = ("car", "person")
     # fallback recording fps when source fps is null/0 (frame_processing.py:134,152)
     fallback_fps: float = 25.0
-    # JPEG egress quality (frame_processing.py:221)
-    jpeg_quality: int = 90
     # HTTP POST timeout seconds (frame_processing.py:205,251)
     http_timeout_s: float = 10.0
-    # progress log cadence in frames (uav/main.py:144-146)
-    progress_every: int = 100
 
     def __post_init__(self) -> None:
         # the reference's one validation rule (uav/main.py:69-70)

@@ -233,12 +233,3 @@ def frames_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_uav_views(spark, sf_dir)
     return spark.table("frames")
 
-
-def detections_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_uav_views(spark, sf_dir)
-    return spark.table("detections")
-
-
-def segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_uav_views(spark, sf_dir)
-    return spark.table("segments")

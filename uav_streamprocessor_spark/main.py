@@ -7,10 +7,12 @@ keyframe-process branch, run, report counters.
         --output-dir /tmp/uav_out --keyframe-interval 30 \
         --confidence 0.4 --classes car person
 
-The reference's per-frame loop becomes one DataFrame DAG with two sinks:
-recorded frames (K1 → parquet partitioned by camera) and processed
-keyframes (T1→T2→K2 payloads → parquet + metadata JSONL). Counters (A1)
-come from the written data, not driver-side mutation.
+The reference's per-frame loop becomes two sinks: recorded frames (K1 →
+parquet partitioned by camera, every frame from `load_frames`) and
+processed keyframes (T1→T2→K2 payloads → parquet + metadata JSONL, from
+`load_keyframes`, so a video source decodes only the keyframes for
+them). Counters (A1) come from the written data, not driver-side
+mutation.
 """
 
 from __future__ import annotations
@@ -51,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
         sender_payloads,
     )
     from uav_streamprocessor_spark.session import get_spark
-    from uav_streamprocessor_spark.sources.readers import load_frames
+    from uav_streamprocessor_spark.sources.readers import load_frames, load_keyframes
 
     args = parse_args(argv)
     cfg = PipelineConfig(
@@ -64,6 +66,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="uav_pipeline", master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus)
     frames = load_frames(spark, args.source)
+    # the keyframe branches read only the keyframes: a video source
+    # decodes no other frame for them
+    kf = load_keyframes(spark, args.source, cfg)
 
     out = Path(args.output_dir)
     # K1 record branch: every frame, partitioned by camera for pruned scans
@@ -72,13 +77,13 @@ def main(argv: list[str] | None = None) -> int:
     ).parquet(str(out / "recorded"))
 
     # F1→T1→T2 branch: flat detections table
-    det = keyframe_detections_flat(frames, cfg)
+    det = keyframe_detections_flat(kf, cfg)
     det.write.mode("overwrite").partitionBy("camera_id").parquet(
         str(out / "detections")
     )
 
     # K2 branch: sender payloads (POSTed if --target-url, else materialized)
-    payloads = sender_payloads(frames, cfg)
+    payloads = sender_payloads(kf, cfg)
     if args.target_url:
         from uav_streamprocessor_spark.streaming.sinks import HttpSenderSink
 
@@ -93,13 +98,13 @@ def main(argv: list[str] | None = None) -> int:
     # A1 counters from written data (uav/main.py:175-179's final report)
     per_cam = frame_counters(spark.read.parquet(str(out / "recorded")), cfg).collect()
     total = sum(r["total_frames"] for r in per_cam)
-    kf = sum(r["keyframes"] for r in per_cam)
+    n_kf = sum(r["keyframes"] for r in per_cam)
     ndet = spark.read.parquet(str(out / "detections")).filter(
         F.col("class_name").isNotNull()
     ).count()
     dt = time.time() - t0
     print(
-        f"frames={total} keyframes={kf} detections={ndet} "
+        f"frames={total} keyframes={n_kf} detections={ndet} "
         f"elapsed={dt:.1f}s fps={total / dt:.1f}"
     )
     return 0

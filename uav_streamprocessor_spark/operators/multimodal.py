@@ -26,21 +26,6 @@ from pyspark.sql import types as T
 from uav_streamprocessor_spark.operators.partitioning import spread_scan
 from uav_streamprocessor_spark.operators.pixel import decode_image, encode_image
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-_REAL_CODECS = False  # flips when cv2/PIL/soundfile are available
-
-
 def decode_real_media(payload: bytes, mime: str) -> np.ndarray:
     """Real-codec decode. r12: baseline JPEG decodes for REAL through the
     engine's pure-numpy codec (operators/jpeg.py) — no native library

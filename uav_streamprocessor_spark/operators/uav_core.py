@@ -7,22 +7,29 @@ pushdown/pruning. Scale notes are inline per operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 
 # --- F1: keyframe decimation (uav/main.py:116, default N=30 main.py:52) ---
+def is_keyframe(cfg: PipelineConfig = DEFAULT_CONFIG) -> Column:
+    """The reference's keyframe rule, `frame_count % keyframe_interval
+    == 0` (uav/main.py:116), as one Column for every filter and counter."""
+    return F.col("frame_number") % cfg.keyframe_interval == 0
+
+
 def keyframes(frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Every-Nth-frame filter, on batch and streaming frames alike (the
     reference applies the same predicate before resize/detect,
-    uav/main.py:116-139). The modulo is not a parquet pushed filter:
-    `explain` shows only `IsNotNull(frame_number)` in PushedFilters and
-    the modulo in DataFilters, so the scan still reads every frame. Only
-    an EqualTo/In on frame_number, which the `uav_video` source accepts,
-    prunes frames at the source."""
-    return frames.filter(F.col("frame_number") % cfg.keyframe_interval == 0)
+    uav/main.py:116-139). The modulo is not a pushed filter: on a parquet
+    scan `explain` shows only `IsNotNull(frame_number)` in PushedFilters
+    and the modulo in DataFilters, so the scan still reads every frame.
+    `sources.readers.load_keyframes` reads a source's keyframes with this
+    filter on top of the frame_number IN list the `uav_video` source
+    consumes, so only the keyframes are decoded."""
+    return frames.filter(is_keyframe(cfg))
 
 
 # --- T2 relational half: class whitelist + confidence threshold
@@ -65,7 +72,7 @@ def frame_counters(
     """The reference's driver-side mutable counters become one grouped
     aggregation: total frames and keyframes per camera (conditional sum =
     map-side combinable, no second pass)."""
-    is_kf = (F.col("frame_number") % cfg.keyframe_interval == 0).cast("long")
+    is_kf = is_keyframe(cfg).cast("long")
     return frames.groupBy("camera_id").agg(
         F.count(F.lit(1)).alias("total_frames"),
         F.sum(is_kf).alias("keyframes"),
@@ -83,7 +90,7 @@ def running_keyframe_counter(
         .orderBy("frame_number")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    is_kf = (F.col("frame_number") % cfg.keyframe_interval == 0).cast("long")
+    is_kf = is_keyframe(cfg).cast("long")
     return frames.select(
         "camera_id",
         "frame_number",

@@ -2250,24 +2250,15 @@ _register(
 )(_pixel_pipeline)
 
 
-# Fixture sizes shared by each fixture builder and the keyframe IN list
-# its query pushes into the uav_video source, so the two can never
-# disagree (a literal list silently drops keyframes once a fixture
-# grows; tests/test_r18_optimizations.py pins the tie).
+# Fixture sizes of the pixel lanes' sources. Their queries read the
+# keyframes with load_keyframes, which takes the keyframe list from the
+# sources' own frame counts.
 # (n_cams, n_frames, w, h, q) of the MJPG detections fixture
 _MJPEG_FIXTURE_GEOMETRY = (2, 60, 640, 360, 85)
 # (n_cams, n_frames, w, h, q) of the md5 MJPG contract fixture
 _MJPEG_MD5_FIXTURE_GEOMETRY = (2, 31, 640, 360, 85)
 # frames per camera of the md5 synthetic moments source
 _MOMENTS_FRAMES = 121
-
-
-def _keyframe_numbers(n_frames: int) -> list[int]:
-    """The frame numbers the production keyframes() modulo filter keeps
-    out of an n_frames-long source at the configured interval."""
-    from uav_streamprocessor_spark.config import DEFAULT_CONFIG
-
-    return list(range(0, n_frames, DEFAULT_CONFIG.keyframe_interval))
 
 
 def _build_once(name: str, files: list[str], write) -> list[str]:
@@ -2382,41 +2373,13 @@ def _pixel_pipeline_mjpeg(spark):
     letterbox+detect → explode plan as uav_pixel_detections. This is
     the S2 shape UAV cameras actually emit (cv2.VideoCapture in
     uav/frame_reader.py:63); the synthetic twin measures the detect
-    stages, this one adds the true decode cost."""
-    from pyspark.sql import functions as F
-
+    stages, this one adds the true decode cost. Only the keyframes are
+    entropy-decoded (load_keyframes): the sparse seek plan skips 58/60
+    of the T.81 work."""
     from uav_streamprocessor_spark.plans.pipeline import keyframe_detections_flat
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.readers import load_keyframes
 
-    video_source.register(spark)
-    paths = _mjpeg_fixture_paths(spark)
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", ",".join(paths))
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # r17 (guide §6, pushdown to the scan — the r16 moments-twin
-        # precedent applied to the detections lane): the keyframe
-        # decimation this plan applies anyway rides into the source as
-        # an IN list, so only the keyframes of each camera are
-        # entropy-decoded — the sparse seek plan skips 58/60 of the
-        # T.81 work; the production keyframes() modulo filter stays on
-        # top, semantics unchanged. r18: the list derives from the
-        # fixture geometry + configured interval instead of a literal
-        # [0, 30] (ADVICE r17 — a longer fixture would have silently
-        # dropped keyframes >= 60)
-        .filter(
-            F.col("frame_number").isin(
-                _keyframe_numbers(_MJPEG_FIXTURE_GEOMETRY[1])
-            )
-        )
-    )
+    frames = load_keyframes(spark, ",".join(_mjpeg_fixture_paths(spark)))
     return keyframe_detections_flat(frames)
 
 
@@ -2440,36 +2403,16 @@ def _pixel_moments(spark):
     (gen=md5) and collapsed to exact integer moments + detection sums
     (operators/pixel.content_signature) so every byte of the letterboxed
     payload AND every stub-detector output (frame_processing.py:60-115
-    contract) replays bit-for-bit in DuckDB."""
-    from pyspark.sql import functions as F
-
+    contract) replays bit-for-bit in DuckDB. Skipped frames are never
+    synthesized (load_keyframes)."""
     from uav_streamprocessor_spark.operators.pixel import content_signature
-    from uav_streamprocessor_spark.operators.uav_core import keyframes
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.readers import load_keyframes
 
-    video_source.register(spark)
     spec = ",".join(
         f"synthetic://px{i}?frames={_MOMENTS_FRAMES}&w=640&h=360&gen=md5"
         for i in range(2)
     )
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", spec)
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # bounded-decimation IN hint: consumed by the source's
-        # frame_number pushdown, so skipped frames are never synthesized
-        # (the keyframe analogue of row-group pruning); the production
-        # keyframes() modulo filter stays on top, semantics unchanged
-        .filter(F.col("frame_number").isin(_keyframe_numbers(_MOMENTS_FRAMES)))
-    )
-    return content_signature(keyframes(frames))
+    return content_signature(load_keyframes(spark, spec))
 
 
 _register(
@@ -2569,35 +2512,14 @@ def _pixel_moments_mjpeg(spark):
     demux + T.81 entropy decode, then per keyframe the verdict table —
     shape preserved, decode error vs the md5-regenerated original under
     the calibrated bound, letterbox padding exactly zero, detections
-    inside the stub contract (operators/pixel.roundtrip_contract)."""
-    from pyspark.sql import functions as F
-
+    inside the stub contract (operators/pixel.roundtrip_contract). Only
+    the keyframes are entropy-decoded (load_keyframes): the sparse seek
+    plan skips 29/31 of the T.81 work per camera."""
     from uav_streamprocessor_spark.operators.pixel import roundtrip_contract
-    from uav_streamprocessor_spark.operators.uav_core import keyframes
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.readers import load_keyframes
 
-    video_source.register(spark)
-    paths = _mjpeg_md5_fixture_paths(spark)
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", ",".join(paths))
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # decimation pushdown: only the keyframes are entropy-decoded —
-        # the sparse seek plan skips 29/31 of the T.81 work per camera
-        .filter(
-            F.col("frame_number").isin(
-                _keyframe_numbers(_MJPEG_MD5_FIXTURE_GEOMETRY[1])
-            )
-        )
-    )
-    return roundtrip_contract(keyframes(frames))
+    frames = load_keyframes(spark, ",".join(_mjpeg_md5_fixture_paths(spark)))
+    return roundtrip_contract(frames)
 
 
 _register(

@@ -47,46 +47,6 @@ BBOX_STRUCT = T.StructType(
     ]
 )
 
-DETECTION_SCHEMA = T.StructType(
-    [
-        T.StructField("det_id", T.LongType(), False),
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("frame_number", T.LongType(), False),
-        *BBOX_STRUCT.fields,
-    ]
-)
-
-SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("segment_id", T.IntegerType(), False),
-        T.StructField("start_frame", T.LongType(), False),
-        T.StructField("end_frame", T.LongType(), False),
-    ]
-)
-
-# the K2 HTTP sink's JSON metadata wire format
-# (uav/frame_processing.py:230-248)
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("frame_number", T.LongType(), False),
-        T.StructField(
-            "detections",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("class_name", T.StringType(), False),
-                        T.StructField("class_id", T.IntegerType(), False),
-                        T.StructField("confidence", T.DoubleType(), False),
-                        T.StructField("box", T.ArrayType(T.IntegerType()), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
 # driver-provided relational corpus (TESTDATA.md); names only — schemas come
 # from parquet footers.
 TESTDATA_TABLES = (

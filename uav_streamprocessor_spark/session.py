@@ -9,8 +9,19 @@ partition count, UTC session time.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+
+def _worker_pythonpath() -> str:
+    """The directory holding this package, ahead of any PYTHONPATH the
+    caller has: Python workers (data sources, UDFs) unpickle engine
+    classes, and without it they import the package only when the JVM
+    runs from the checkout."""
+    root = str(Path(__file__).resolve().parent.parent)
+    existing = os.environ.get("PYTHONPATH")
+    return os.pathsep.join([root, existing]) if existing else root
 
 
 def get_spark(
@@ -46,6 +57,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -13,6 +13,9 @@ by URI scheme, returning a batch or streaming DataFrame:
   edge adapter: S2's cv2.VideoCapture loop becomes an offline demux job
   writing this table)
 - rtsp:// / rate:// → Structured Streaming source (S3; tests use rate)
+
+`load_keyframes` returns only a source's keyframes (F1); on the video
+sources it decodes no other frame.
 """
 
 from __future__ import annotations
@@ -21,6 +24,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
+from uav_streamprocessor_spark.operators.uav_core import keyframes
 
 # the reference's suffix whitelist (uav/frame_reader.py:63)
 IMAGE_GLOB = "*.{png,jpg,jpeg,tiff,bmp}"
@@ -87,13 +93,17 @@ def read_stream(spark: SparkSession, url: str) -> DataFrame:
     )
 
 
+def _is_video(source: str) -> bool:
+    return source.startswith("synthetic://") or source.lower().endswith(".avi")
+
+
 def load_frames(spark: SparkSession, source: str) -> DataFrame:
     """S4 SourceReader dispatch (uav/frame_reader.py:209-221 semantics:
     scheme prefix → stream; video → uav_video; directory → images;
     file/table → frames)."""
     if source.startswith(("rtsp://", "rate://")):
         return read_stream(spark, source)
-    if source.startswith("synthetic://") or source.lower().endswith(".avi"):
+    if _is_video(source):
         from uav_streamprocessor_spark.sources import video_source
 
         video_source.register(spark)
@@ -104,3 +114,48 @@ def load_frames(spark: SparkSession, source: str) -> DataFrame:
     if source.endswith(".parquet") or p.exists():
         return read_frames_table(spark, source)
     raise ValueError(f"unsupported source: {source!r}")
+
+
+def load_keyframes(
+    spark: SparkSession, source: str, cfg: PipelineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Exactly the keyframes of `source` (uav/main.py:116-139's
+    `frame_count % keyframe_interval == 0`), decimated at the source where
+    the source can seek.
+
+    Video sources (synthetic:// / *.avi) are read with the keyframe
+    numbers as a frame_number IN list, which `uav_video` consumes as a
+    sparse seek plan: the skipped frames are never decoded. The list runs
+    to the longest spec's n_frames (each decoder is opened on the driver,
+    as `VideoBatchReader.partitions` does); the reader drops numbers past
+    a shorter spec's end. framesPerPartition=1 gives one keyframe per
+    partition: the sparse plan packs the requested frames into
+    framesPerPartition-sized chunks, so a larger value serializes a
+    camera's keyframe decodes in one task (MJPG detections A/B,
+    median of 5: 1.66 -> 1.25 s, rows identical; ADJUDICATION_r18).
+    Every other source is `load_frames` unchanged.
+
+    The `keyframes()` modulo filter goes on top in both cases, so the
+    rows never depend on the IN list. A caller that applies `keyframes()`
+    again (as `plans.pipeline` does) gets the same plan: Catalyst merges
+    the repeated modulo."""
+    if not _is_video(source):
+        return keyframes(load_frames(spark, source), cfg)
+    from uav_streamprocessor_spark.sources import video_source
+
+    video_source.register(spark)
+    n_frames = max(
+        video_source._open_decoder(s).n_frames for s in source.split(",")
+    )
+    frames = (
+        spark.read.format("uav_video")
+        .option("path", source)
+        .option("framesPerPartition", "1")
+        .load()
+        .filter(
+            F.col("frame_number").isin(
+                list(range(0, n_frames, cfg.keyframe_interval))
+            )
+        )
+    )
+    return keyframes(frames, cfg)
