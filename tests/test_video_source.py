@@ -132,6 +132,53 @@ def test_pushdown_conjuncts_intersect_not_overwrite():
     assert reader2.partitions() == []
 
 
+def test_fully_pruned_read_returns_no_rows(spark):
+    """Pushed filters that prune every source or every frame leave
+    `partitions()` empty; Spark then plans one None partition, which the
+    reader reads as nothing."""
+    df = (
+        spark.read.format("uav_video")
+        .option("path", "synthetic://camA?frames=4&w=16&h=16&seed=1")
+        .load()
+    )
+    assert df.filter(F.col("camera_id") == "nope").count() == 0
+    assert df.filter(F.col("frame_number").isin([99])).count() == 0
+
+
+def test_unreadable_specs_fail_with_their_own_message(tmp_path):
+    """A spec no decoder opens fails the caller's query with the decoder's
+    message, not with Spark's "partitions not implemented" fallback. Run
+    in a fresh session: `test_codec_seam` ships a cv2-shaped module to
+    the shared session's workers, which would open the `.mp4`."""
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        from uav_streamprocessor_spark.session import get_spark
+        from uav_streamprocessor_spark.sources.video_source import register
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        register(spark)
+        for path in ("/tmp/x.mp4", "", "synthetic://camA?frames=4,"):
+            try:
+                spark.read.format("uav_video").option("path", path).load().count()
+                print("no error", repr(path))
+            except Exception as e:
+                print("error", repr(path), str(e).replace("\\n", " "))
+    """))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith(("error", "no error"))]
+    assert len(lines) == 3, out.stdout
+    assert lines[0].startswith("error '/tmp/x.mp4'") and "no video codec" in lines[0]
+    for line in lines[1:]:
+        assert line.startswith("error") and "'path' option" in line, line
+
+
 def test_batch_read_deterministic(spark):
     opts = {"path": "synthetic://camA?frames=10&w=32&h=32&seed=9"}
     a = spark.read.format("uav_video").options(**opts).load().collect()

@@ -4,11 +4,26 @@ Local testing runs on local[N]; the configuration is written for the
 100 TB design point: AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), Arrow on (pandas-UDF pixel path), explicit shuffle
 partition count, UTC session time.
+
+Importing this module (the package ``__init__`` does) also installs one
+zip-directory hook per process, on Python < 3.13 only. Spark's Python
+worker calls ``importlib.invalidate_caches()`` before every task, and
+before 3.13 each ``zipimport.zipimporter`` then re-reads its archive's
+whole directory at once: a reused worker holds ~16 importers over
+``pyspark.zip`` (1,328 entries), so every task paid ~0.22 s of worker
+CPU on a 4-core box before running any code (~0.04 s with the hook). The
+hook re-reads an archive only when its (inode, size, mtime) changed
+since the last read; a new or rewritten archive is still read, and
+``FileFinder`` invalidation (which ``addPyFile`` and Spark files rely
+on) is untouched. Python 3.13 made the re-read lazy, so the hook goes
+once the minimum Python is 3.13. Workers install it on the first task
+that unpickles package code.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -22,6 +37,36 @@ def _worker_pythonpath() -> str:
     root = str(Path(__file__).resolve().parent.parent)
     existing = os.environ.get("PYTHONPATH")
     return os.pathsep.join([root, existing]) if existing else root
+
+
+def _install_zip_directory_hook() -> None:
+    """Replace ``zipimporter.invalidate_caches`` with one that re-reads an
+    archive's directory only when the archive changed since its last read,
+    and otherwise rebinds the importer to the shared directory cache."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    stamps: dict[str, tuple[int, int, int] | None] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and stamp == stamps.get(self.archive) and files is not None:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_install_zip_directory_hook()
 
 
 def get_spark(

@@ -202,6 +202,13 @@ class _AviDecoder:
 
 
 def _open_decoder(spec: str):
+    # ValueError, not NotImplementedError: Spark's planner reads a
+    # NotImplementedError from partitions() as "no partitions" and hides it
+    if not spec:
+        raise ValueError(
+            "empty video source spec in the 'path' option (an empty path "
+            "or a stray comma)"
+        )
     if spec.startswith("synthetic://"):
         return _SyntheticDecoder(spec)
     if spec.lower().endswith(".avi"):
@@ -209,7 +216,7 @@ def _open_decoder(spec: str):
     try:
         return _Cv2Decoder(spec)
     except ImportError:
-        raise NotImplementedError(
+        raise ValueError(
             f"no video codec in this container for {spec!r}; a cv2-backed "
             "decoder implements the same read(start, end) contract — and "
             "RIFF/AVI containers demux codec-free via _AviDecoder"
@@ -313,8 +320,10 @@ class VideoBatchReader(DataSourceReader):
                 )
         return parts
 
-    def read(self, partition: _VideoPartition):
-        yield from _read_partition(partition)
+    def read(self, partition: _VideoPartition | None):
+        # Spark plans an empty partitions() list as one None partition
+        if partition is not None:
+            yield from _read_partition(partition)
 
 
 class VideoStreamReader(DataSourceStreamReader):
