@@ -14,6 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from uav_streamprocessor_spark.operators import jpeg
 from uav_streamprocessor_spark.operators.jpeg import (
     JpegFormatError,
     decode_jpeg,
@@ -402,3 +403,77 @@ def test_crafted_giant_sof_raises_instead_of_allocating():
     mid[i + 5 : i + 9] = (4000).to_bytes(2, "big") + (4000).to_bytes(2, "big")
     with pytest.raises(JpegFormatError, match="entropy"):
         decode_jpeg(bytes(mid))
+
+
+def test_every_truncation_raises_format_error():
+    """Cut anywhere short of the EOI marker, a frame raises
+    JpegFormatError: a DQT or SOF table cut short must not escape as a
+    bare ValueError from numpy or tuple unpacking. (A frame that only
+    lacks EOI still decodes, as real MJPG streams need.)"""
+    rng = np.random.default_rng(8)
+    img = np.clip(
+        _smooth(48, 64).astype(int) + rng.integers(-12, 13, (48, 64, 3)),
+        0, 255,
+    ).astype(np.uint8)
+    buf = encode_jpeg(img, quality=85, subsampling="4:2:0")
+    for cut in range(len(buf) - 2):
+        with pytest.raises(JpegFormatError):
+            decode_jpeg(buf[:cut])
+    assert decode_jpeg(buf[:-2]).shape == (48, 64, 3)
+
+
+# The codec's 8×8 transforms as they ran before they became matrix
+# products: one 3-operand einsum per component.
+def _einsum_fdct(blocks):
+    return np.einsum("ij,njk,kl->nil", jpeg._A, blocks, jpeg._A.T)
+
+
+def _einsum_idct(coefs):
+    return np.einsum("ij,njk,kl->nil", jpeg._A.T, coefs, jpeg._A)
+
+
+def _transform_corpus():
+    """Smooth, uniform-noise and flat-tile images at an odd and an even
+    geometry. Flat 8×8 tiles put DCT coefficients on exact .5 rounding
+    ties at high quality."""
+    rng = np.random.default_rng(2024)
+    for h, w in ((17, 33), (48, 64)):
+        tiles = rng.integers(0, 256, (-(-h // 8), -(-w // 8), 3), np.uint8)
+        yield _smooth(h, w)
+        yield rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        yield tiles.repeat(8, 0).repeat(8, 1)[:h, :w]
+
+
+def _codec_outputs(images):
+    out = []
+    for img in images:
+        for quality in (50, 85, 95):
+            for sub in ("4:2:0", "4:4:4", "gray"):
+                src = img[..., 0] if sub == "gray" else img
+                for restart in (0, 3):
+                    buf = encode_jpeg(
+                        src, quality=quality,
+                        subsampling="4:2:0" if sub == "gray" else sub,
+                        restart_interval=restart,
+                    )
+                    out.append((buf, decode_jpeg(buf)))
+    return out
+
+
+def test_matrix_product_transforms_match_the_einsum_codec(monkeypatch):
+    """Encode bytes and decoded pixels are those of the einsum codec
+    over the whole corpus, and the corpus reaches rounding ties: with
+    the tie recompute switched off, some encode changes."""
+    images = list(_transform_corpus())
+    fast = _codec_outputs(images)
+    with monkeypatch.context() as m:
+        m.setattr(jpeg, "_fdct", _einsum_fdct)
+        m.setattr(jpeg, "_idct", _einsum_idct)
+        reference = _codec_outputs(images)
+    for (buf, px), (ref_buf, ref_px) in zip(fast, reference):
+        assert buf == ref_buf
+        assert np.array_equal(px, ref_px)
+    with monkeypatch.context() as m:
+        m.setattr(jpeg, "_TIE_EPS", -1.0)  # |x - rint(x)| > 1.5: never
+        unguarded = _codec_outputs(images)
+    assert any(b != r for (b, _), (r, _) in zip(unguarded, reference))

@@ -24,10 +24,13 @@ Scale posture: decode runs executor-side inside Arrow-batched UDFs /
 DataSource partitions (one frame at a time, bounded); nothing here
 touches the driver. The numpy-heavy stages are batched (entropy pass
 fills one (n_blocks, 64) coefficient matrix per component; dequant +
-IDCT run as whole-component einsums; color transforms vectorized over
-planes) and the Huffman walk uses packed 16-bit-peek lookup lists —
-~0.2s per 640×480 frame, and the codec seam still prefers a native
-library when one is present.
+IDCT, like the encoder's forward DCT, run as stacked 8×8 matrix
+products over a whole component; color transforms vectorized over
+planes) and the Huffman walk uses packed 16-bit-peek lookup lists.
+Decode takes ~18 ms per 320×180 and ~0.15 s per 640×480 q90 4:2:0
+frame on one core of a 4-core x86 box, most of it the Python Huffman
+walk; encode ~12 ms per 320×180 q85 frame. The codec seam still prefers
+a native library when one is present.
 
 Format facts are public ITU-T T.81 structure (Annex B markers, Annex C
 canonical code construction, Annex F decode procedures, Annex K example
@@ -285,30 +288,6 @@ def _scaled_quant(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(np.floor((base * scale + 50) / 100), 1, 255)
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, code: int, size: int) -> None:
-        if size == 0:
-            return
-        self._acc = (self._acc << size) | (code & ((1 << size) - 1))
-        self._n += size
-        while self._n >= 8:
-            b = (self._acc >> (self._n - 8)) & 0xFF
-            self.buf.append(b)
-            if b == 0xFF:  # byte stuffing
-                self.buf.append(0x00)
-            self._n -= 8
-        self._acc &= (1 << self._n) - 1
-
-    def pad_to_byte(self) -> None:
-        if self._n:
-            self.write((1 << (8 - self._n)) - 1, 8 - self._n)  # 1-fill
-
-
 def _plane_blocks_mcu_order(
     plane: np.ndarray, mcu_rows: int, mcu_cols: int, v: int, h: int
 ) -> np.ndarray:
@@ -322,114 +301,73 @@ def _plane_blocks_mcu_order(
     )
 
 
+# The 8×8 transforms run as two stacked matrix products per block
+# (_fdct/_idct). A 3-operand np.einsum of the same product runs as one
+# unoptimized nested loop (8⁴ multiply-adds per block, no BLAS), ~20×
+# slower on the 960 luma blocks of a 320×180 frame. The matrix products
+# add the 64 terms in another order than that einsum, so values differ in
+# the last bits, and np.rint differs only on an exact .5 tie (flat blocks
+# at high quality reach one: 18 of 332 q95 encodes of 320×180 aerial and
+# noise frames). For 8-bit data the two orders differ by < 6e-10 after the
+# colour transform (each sum's error is ≤ 66u·Σ|terms| ≤ 66u·1150·3.85²),
+# so a value farther than _TIE_EPS from a tie rounds alike in both; any
+# nearer one is recomputed with the einsum, and encoded bytes and decoded
+# pixels stay those of the einsum codec.
+_TIE_EPS = 1e-9
+
+
+def _fdct(blocks: np.ndarray) -> np.ndarray:
+    """Forward DCT of stacked (n, 8, 8) blocks."""
+    return _A @ blocks @ _A.T
+
+
+def _idct(coefs: np.ndarray) -> np.ndarray:
+    """Inverse DCT of stacked (n, 8, 8) coefficient blocks."""
+    return _A.T @ coefs @ _A
+
+
+def _fdct_einsum(blocks: np.ndarray) -> np.ndarray:
+    return np.einsum("ij,njk,kl->nil", _A, blocks, _A.T)
+
+
+def _idct_einsum(coefs: np.ndarray) -> np.ndarray:
+    return np.einsum("ij,njk,kl->nil", _A.T, coefs, _A)
+
+
+def _on_tie(x: np.ndarray, rounded: np.ndarray) -> np.ndarray:
+    """|x - np.rint(x)| > 0.5 - _TIE_EPS per value. Overwrites x: a fresh
+    frame-sized temporary costs more page faults than the IDCT."""
+    d = np.subtract(x, rounded, out=x)
+    return np.abs(d, out=d) > 0.5 - _TIE_EPS
+
+
 def _quantized_zigzag(blocks: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Batched DCT + quantize + zigzag for a whole component: one einsum
-    over every block → (n_blocks, 64) int64 in zigzag order. The entropy
-    stage is vectorized too (r18), so the matrix stays numpy end to end;
-    the scalar fallback .tolist()s it itself."""
-    coef = np.einsum("ij,njk,kl->nil", _A, blocks - 128.0, _A.T)
-    return np.rint(coef / q).astype(np.int64).reshape(-1, 64)[:, ZIGZAG]
+    """Batched DCT + quantize + zigzag for a whole component → (n_blocks,
+    64) int64 in zigzag order, which the vectorized entropy stage takes
+    as is. Blocks with a coefficient on a rounding tie are recomputed
+    with the einsum (see _TIE_EPS)."""
+    x = blocks - 128.0
+    scaled = _fdct(x) / q
+    coef = np.rint(scaled)
+    tie = _on_tie(scaled, coef).any(axis=(1, 2))
+    if tie.any():
+        coef[tie] = np.rint(_fdct_einsum(x[tie]) / q)
+    return coef.astype(np.int64).reshape(-1, 64)[:, ZIGZAG]
 
 
-def _encode_block_zz(
-    bw: _BitWriter, zz: list, dc_codes: dict, ac_codes: dict, pred: int
-) -> int:
-    """Entropy-encode one pre-quantized zigzag block with the bit-packer
-    state inlined as locals (the per-symbol write() calls were the
-    encoder's top profile line; same treatment as the decoder's walk)."""
-    buf = bw.buf
-    acc, n = bw._acc, bw._n
-    dc = zz[0]
-    diff = dc - pred
-    ssss = diff.bit_length() if diff > 0 else (-diff).bit_length()
-    code, size = dc_codes[ssss]
-    if ssss:
-        code = (code << ssss) | (
-            (diff if diff >= 0 else diff + (1 << ssss) - 1) & ((1 << ssss) - 1)
-        )
-        size += ssss
-    acc = (acc << size) | code
-    n += size
-    while n >= 8:
-        b = (acc >> (n - 8)) & 0xFF
-        buf.append(b)
-        if b == 0xFF:
-            buf.append(0x00)
-        n -= 8
-    acc &= (1 << n) - 1
-
-    last = 63
-    while last > 0 and zz[last] == 0:
-        last -= 1
-    run = 0
-    for i in range(1, last + 1):
-        v = zz[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, size = ac_codes[0xF0]  # ZRL
-            acc = (acc << size) | code
-            n += size
-            while n >= 8:
-                b = (acc >> (n - 8)) & 0xFF
-                buf.append(b)
-                if b == 0xFF:
-                    buf.append(0x00)
-                n -= 8
-            acc &= (1 << n) - 1
-            run -= 16
-        ssss = v.bit_length() if v > 0 else (-v).bit_length()
-        code, size = ac_codes[(run << 4) | ssss]
-        code = (code << ssss) | (
-            (v if v >= 0 else v + (1 << ssss) - 1) & ((1 << ssss) - 1)
-        )
-        size += ssss
-        acc = (acc << size) | code
-        n += size
-        while n >= 8:
-            b = (acc >> (n - 8)) & 0xFF
-            buf.append(b)
-            if b == 0xFF:
-                buf.append(0x00)
-            n -= 8
-        acc &= (1 << n) - 1
-        run = 0
-    if last < 63:
-        code, size = ac_codes[0x00]  # EOB
-        acc = (acc << size) | code
-        n += size
-        while n >= 8:
-            b = (acc >> (n - 8)) & 0xFF
-            buf.append(b)
-            if b == 0xFF:
-                buf.append(0x00)
-            n -= 8
-        acc &= (1 << n) - 1
-    bw._acc, bw._n = acc, n
-    return dc
-
-
-# Vectorized entropy encoder (r18, guide §4.2): the per-symbol Python
-# walk in _encode_block_zz was the encoder's entire profile at roundtrip
-# scale (~2µs/symbol × ~3k symbols per 32×32 q95 image). The whole scan
+# Vectorized entropy encoder (r18, guide §4.2): a per-symbol Python walk
+# was the encoder's entire profile at roundtrip scale (~2µs/symbol × ~3k
+# symbols per 32×32 q95 image). The whole scan
 # is expressible as numpy array arithmetic — run-length gaps from
 # np.nonzero positions, Huffman (code, size) via 256-entry LUT gathers,
 # symbol placement via offset cumsums, and bit packing via one
 # np.repeat + np.packbits — producing BYTE-IDENTICAL streams (asserted
-# by test_jpeg_vectorized_encoder parity against the retained scalar
-# path). DC magnitudes are bounded by |DCT DC| ≤ 8·128 → diffs < 4096,
-# so the bit-length LUT covers every legal 8-bit-input coefficient; the
-# scalar path remains as the (never expected) overflow fallback.
+# by tests/test_r18_optimizations.py against the scalar walk it keeps as
+# its parity oracle). DC magnitudes are bounded by |DCT DC| ≤ 8·128 →
+# diffs < 4096, so the bit-length LUT covers every legal 8-bit-input
+# coefficient; anything beyond it has no Huffman code and raises.
 
 _BL_LUT = np.array([i.bit_length() for i in range(1 << 12)], dtype=np.int64)
-
-
-class _UnencodableSymbol(Exception):
-    """A (run, size) symbol with no Huffman code in the table — not
-    reachable from 8-bit image input (AC magnitudes stay < 1024, DC
-    diffs < 4096); routed to the scalar path so a hostile direct call
-    fails with the same loud KeyError the r12-r17 walk raised."""
 
 
 @lru_cache(maxsize=16)
@@ -447,10 +385,10 @@ def _enc_luts(bits_b: bytes, vals_b: bytes) -> tuple[np.ndarray, np.ndarray]:
 
 def _pack_bits_vec(codes: np.ndarray, sizes: np.ndarray) -> bytes:
     """MSB-first variable-length bit packing of (code, size) pairs into
-    a 1-fill byte-padded, 0xFF-stuffed entropy segment — semantics of
-    _BitWriter.write + pad_to_byte. Each symbol's bits land in ≤5 bytes
-    (size ≤ 31 bits + 7 bits of byte-offset skew < 40), so every code is
-    shifted into a 40-bit byte-aligned window, split into 5 byte lanes,
+    a 1-fill byte-padded, 0xFF-stuffed entropy segment (T.81 B.1.1.5).
+    Each symbol's bits land in ≤5 bytes (size ≤ 31 bits + 7 bits of
+    byte-offset skew < 40), so every code is shifted into a 40-bit
+    byte-aligned window, split into 5 byte lanes,
     and scattered with ONE np.bincount — bit ownership is exclusive, so
     summing byte contributions IS the bitwise OR, with no per-bit
     expansion (the first cut's np.repeat-per-bit was 40% of encode)."""
@@ -498,7 +436,7 @@ def _entropy_segment_vec(
     dcode = np.where(is_chroma, dcc_c[ssss], dcl_c[ssss])
     dsize = np.where(is_chroma, dcc_s[ssss], dcl_s[ssss])
     if n and not dsize.all():
-        raise _UnencodableSymbol
+        raise KeyError(f"no DC Huffman code for size {ssss[dsize == 0][0]}")
     mask = (np.int64(1) << ssss) - 1
     dval = (diff + np.where(diff < 0, mask, 0)) & mask
     dcode = (dcode << ssss) | dval
@@ -528,7 +466,7 @@ def _entropy_segment_vec(
         acode = np.where(ch, acc_c[rs], acl_c[rs])
         asize = np.where(ch, acc_s[rs], acl_s[rs])
         if not asize.all():
-            raise _UnencodableSymbol
+            raise KeyError(f"no AC Huffman code for {rs[asize == 0][0]:#x}")
         amask = (np.int64(1) << assq) - 1
         aval = (v + np.where(v < 0, amask, 0)) & amask
         acode = (acode << assq) | aval
@@ -587,9 +525,8 @@ def _entropy_scan(
     restart_interval: int,
 ) -> bytes:
     """Full entropy-coded scan (RST markers included) for stream-ordered
-    blocks. Vectorized path unless a coefficient exceeds the bit-length
-    LUT bound (impossible for 8-bit input; scalar fallback keeps the
-    function total)."""
+    blocks. A coefficient with no Huffman code (impossible for 8-bit
+    input: AC magnitudes stay < 1024, DC diffs < 4096) raises KeyError."""
     dc_luts = (
         _enc_luts(bytes(_DC_LUMA[0]), bytes(_DC_LUMA[1])),
         _enc_luts(bytes(_DC_CHROMA[0]), bytes(_DC_CHROMA[1])),
@@ -598,73 +535,22 @@ def _entropy_scan(
         _enc_luts(bytes(_AC_LUMA[0]), bytes(_AC_LUMA[1])),
         _enc_luts(bytes(_AC_CHROMA[0]), bytes(_AC_CHROMA[1])),
     )
-    if np.abs(qz).max(initial=0) >= len(_BL_LUT):
-        return _entropy_scan_scalar(
-            qz, is_chroma, comp_ids, blocks_per_mcu, n_mcu, restart_interval
-        )
-    try:
-        if not restart_interval:
-            return _entropy_segment_vec(
-                qz, is_chroma, comp_ids, dc_luts, ac_luts
-            )
-        out = bytearray()
-        seg_blocks = restart_interval * blocks_per_mcu
-        n_seg = -(-n_mcu * blocks_per_mcu // seg_blocks)
-        for si in range(n_seg):
-            lo = si * seg_blocks
-            hi = min((si + 1) * seg_blocks, n_mcu * blocks_per_mcu)
-            if si:
-                out += bytes([0xFF, 0xD0 + ((si - 1) & 7)])
-            out += _entropy_segment_vec(
-                qz[lo:hi], is_chroma[lo:hi], comp_ids[lo:hi], dc_luts, ac_luts
-            )
-        return bytes(out)
-    except _UnencodableSymbol:
-        return _entropy_scan_scalar(
-            qz, is_chroma, comp_ids, blocks_per_mcu, n_mcu, restart_interval
-        )
-
-
-def _entropy_scan_scalar(
-    qz: np.ndarray,
-    is_chroma: np.ndarray,
-    comp_ids: np.ndarray,
-    blocks_per_mcu: int,
-    n_mcu: int,
-    restart_interval: int,
-) -> bytes:
-    """The r12-r17 per-symbol walk over the same stream-ordered blocks —
-    the parity reference for the vectorized path and its overflow
-    fallback."""
-    dcl = _canonical_codes(*_DC_LUMA)
-    dcc = _canonical_codes(*_DC_CHROMA)
-    acl = _canonical_codes(*_AC_LUMA)
-    acc = _canonical_codes(*_AC_CHROMA)
-    zz = qz.tolist()
+    peak = np.abs(qz).max(initial=0)
+    if peak >= len(_BL_LUT):
+        raise KeyError(f"coefficient magnitude {peak} has no Huffman code")
+    if not restart_interval:
+        return _entropy_segment_vec(qz, is_chroma, comp_ids, dc_luts, ac_luts)
     out = bytearray()
-    bw = _BitWriter()
-    preds: dict[int, int] = {}
-    rst = 0
-    n_in_interval = 0
-    for mi in range(n_mcu):
-        if restart_interval and n_in_interval == restart_interval:
-            bw.pad_to_byte()
-            out += bw.buf
-            out += bytes([0xFF, 0xD0 + (rst & 7)])
-            bw = _BitWriter()
-            preds = {}
-            rst += 1
-            n_in_interval = 0
-        for b in range(blocks_per_mcu):
-            i = mi * blocks_per_mcu + b
-            dc_t, ac_t = (dcc, acc) if is_chroma[i] else (dcl, acl)
-            cid = int(comp_ids[i])
-            preds[cid] = _encode_block_zz(
-                bw, zz[i], dc_t, ac_t, preds.get(cid, 0)
-            )
-        n_in_interval += 1
-    bw.pad_to_byte()
-    out += bw.buf
+    seg_blocks = restart_interval * blocks_per_mcu
+    n_seg = -(-n_mcu * blocks_per_mcu // seg_blocks)
+    for si in range(n_seg):
+        lo = si * seg_blocks
+        hi = min((si + 1) * seg_blocks, n_mcu * blocks_per_mcu)
+        if si:
+            out += bytes([0xFF, 0xD0 + ((si - 1) & 7)])
+        out += _entropy_segment_vec(
+            qz[lo:hi], is_chroma[lo:hi], comp_ids[lo:hi], dc_luts, ac_luts
+        )
     return bytes(out)
 
 
@@ -872,6 +758,14 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
         raise JpegFormatError(f"malformed JPEG: {exc!r}") from exc
 
 
+def _check_fits(seg: bytes, end: int, what: str) -> None:
+    """A table inside a marker segment must end inside that segment."""
+    if end > len(seg):
+        raise JpegFormatError(
+            f"{what} table needs {end} bytes, its segment has {len(seg)}"
+        )
+
+
 def _decode_jpeg(buf: bytes) -> np.ndarray:
     if buf[:2] != b"\xff\xd8":
         raise JpegFormatError("not a JPEG (no SOI)")
@@ -898,6 +792,11 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
             i += 2
             continue
         seglen = struct.unpack(">H", buf[i + 2 : i + 4])[0]
+        if seglen < 2 or i + 2 + seglen > len(buf):
+            raise JpegFormatError(
+                f"marker 0xFF{m:02X} declares {seglen} bytes, "
+                f"{len(buf) - i - 2} left"
+            )
         seg = buf[i + 4 : i + 2 + seglen]
         if m == 0xDB:  # DQT (possibly several tables per segment)
             p = 0
@@ -905,6 +804,7 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
                 pq, tq = seg[p] >> 4, seg[p] & 0x0F
                 if pq != 0:
                     raise JpegFormatError("16-bit quant tables unsupported")
+                _check_fits(seg, p + 65, "DQT")
                 tbl = np.zeros(64)
                 tbl[ZIGZAG] = np.frombuffer(seg[p + 1 : p + 65], dtype=np.uint8)
                 qt[tq] = tbl.reshape(8, 8)
@@ -913,8 +813,10 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
             p = 0
             while p < len(seg):
                 tc, th = seg[p] >> 4, seg[p] & 0x0F
+                _check_fits(seg, p + 17, "DHT")
                 bits = list(seg[p + 1 : p + 17])
                 nv = sum(bits)
+                _check_fits(seg, p + 17 + nv, "DHT")
                 vals = list(seg[p + 17 : p + 17 + nv])
                 huff[(tc, th)] = _fast_huff_cached(bytes(bits), bytes(vals))
                 p += 17 + nv
@@ -923,6 +825,7 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
                 raise JpegFormatError("only 8-bit precision supported")
             h, w = struct.unpack(">HH", seg[1:5])
             nc = seg[5]
+            _check_fits(seg, 6 + 3 * nc, "SOF component")
             comps = []
             for c in range(nc):
                 cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
@@ -938,6 +841,7 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
             restart_interval = struct.unpack(">H", seg[:2])[0]
         elif m == 0xDA:  # SOS
             ns = seg[0]
+            _check_fits(seg, 4 + 2 * ns, "SOS component")
             scan_sel = []
             for c in range(ns):
                 cs, tdta = seg[1 + 2 * c], seg[2 + 2 * c]
@@ -1138,32 +1042,42 @@ def _decode_scan(
         if flat_idx[ci]:
             coefs[ci].ravel()[flat_idx[ci]] = flat_val[ci]
 
-    # batched dequant + un-zigzag + IDCT, then MCU-scan order → plane
-    # geometry via one transpose, upsample (nearest), crop
-    full = []
-    for (c, _, _), mat in zip(scan, coefs):
-        v_, h_ = c["v"], c["h"]
-        dq = mat * qt[c["tq"]].ravel()[ZIGZAG]
-        blocks = dq[:, _UNZIGZAG].reshape(-1, 8, 8)
-        spatial = np.einsum("ij,njk,kl->nil", _A.T, blocks, _A) + 128.0
-        plane = (
-            spatial.reshape(mcu_rows, mcu_cols, v_, h_, 8, 8)
-            .transpose(0, 2, 4, 1, 3, 5)
-            .reshape(mcu_rows * v_ * 8, mcu_cols * h_ * 8)
-        )
-        ry, rx = vmax // v_, hmax // h_
-        if ry > 1 or rx > 1:
-            plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        g = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-        return np.stack([g, g, g], axis=-1)
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+    blocks = [
+        (mat * qt[c["tq"]].ravel()[ZIGZAG])[:, _UNZIGZAG].reshape(-1, 8, 8)
+        for (c, _, _), mat in zip(scan, coefs)
+    ]
+
+    def pixels(idct) -> np.ndarray:
+        """Unrounded pixels: batched IDCT, MCU-scan order → plane geometry
+        via one transpose, upsample (nearest), crop, then YCbCr → RGB. A
+        one-component scan stays one HxW plane."""
+        full = []
+        for (c, _, _), blk in zip(scan, blocks):
+            v_, h_ = c["v"], c["h"]
+            spatial = idct(blk) + 128.0
+            plane = (
+                spatial.reshape(mcu_rows, mcu_cols, v_, h_, 8, 8)
+                .transpose(0, 2, 4, 1, 3, 5)
+                .reshape(mcu_rows * v_ * 8, mcu_cols * h_ * 8)
+            )
+            ry, rx = vmax // v_, hmax // h_
+            if ry > 1 or rx > 1:
+                plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
+            full.append(plane[:h, :w])
+        if len(full) == 1:
+            return full[0]
+        y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
+        r = y + 1.402 * cr
+        g = y - 0.344136 * cb - 0.714136 * cr
+        b = y + 1.772 * cb
+        return np.stack([r, g, b], axis=-1)
+
+    px = pixels(_idct)
+    out = np.rint(px)
+    if _on_tie(px, out).any():
+        out = np.rint(pixels(_idct_einsum))
+    out = np.clip(out, 0, 255).astype(np.uint8)
+    return np.stack([out, out, out], axis=-1) if out.ndim == 2 else out
 
 
 def is_jpeg(buf: bytes) -> bool:
