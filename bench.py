@@ -56,18 +56,22 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from uav_streamprocessor_spark import registry
 from uav_streamprocessor_spark.session import get_spark
-from uav_streamprocessor_spark.streaming.ann_stream import run_incremental_ann_index
+from uav_streamprocessor_spark.streaming.ann_stream import bucket_coded
 from uav_streamprocessor_spark.streaming.anomaly_stream import anomaly_stream
 from uav_streamprocessor_spark.streaming.cms_stream import cms_stream
-from uav_streamprocessor_spark.streaming.curation_stream import run_incremental_curation
-from uav_streamprocessor_spark.streaming.dedup_stream import run_incremental_neardup
+from uav_streamprocessor_spark.streaming.curation_stream import per_hash_survivors
+from uav_streamprocessor_spark.streaming.dedup_stream import neardup_sink
 from uav_streamprocessor_spark.streaming.ewma_stream import ewma_stream
-from uav_streamprocessor_spark.streaming.kll_stream import run_incremental_kll
+from uav_streamprocessor_spark.streaming.kll_stream import per_type_sketches
 from uav_streamprocessor_spark.streaming.packing_stream import packed_stream
 from uav_streamprocessor_spark.streaming.rate_limit_stream import rate_limited_stream
 from uav_streamprocessor_spark.streaming.session_stream import session_stream
-from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
-from uav_streamprocessor_spark.streaming.sketch_stream import run_incremental_sketches
+from uav_streamprocessor_spark.streaming.sinks import (
+    start_batch_store,
+    start_foreach_batch,
+    start_memory_sink,
+)
+from uav_streamprocessor_spark.streaming.sketch_stream import daily_sketches
 from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
 from uav_streamprocessor_spark.streaming.topk_stream import topk_stream
 
@@ -423,6 +427,14 @@ def _memory_sink(transform):
     return start
 
 
+def _batch_store(reduce):
+    """start() for a store that writes each micro-batch's reduction as
+    its own partition of a parquet store."""
+    return lambda stream, work: start_batch_store(
+        stream, reduce, work / "store", work / "ckpt"
+    )
+
+
 _EVENTS = "event_id long, ts timestamp, user_id long, event_type string"
 _VALUES = "event_id long, ts timestamp, user_id long, value double"
 _TS_ORDER = ("ts", "event_id")
@@ -433,23 +445,17 @@ _TS_ORDER = ("ts", "event_id")
 # availableNow query over that file stream, writing under `work`.
 STREAM_STORES = [
     ("dedup_lsh_index", "documents", "doc_id long, text string", None,
-     lambda s, w: run_incremental_neardup(
-         s, index_dir=str(w / "index"), pairs_dir=str(w / "pairs"),
-         checkpoint_dir=str(w / "ckpt"))),
+     lambda s, w: start_foreach_batch(
+         s, neardup_sink(str(w / "index"), str(w / "pairs")), w / "ckpt")),
     ("curation_store", "documents", "doc_id long, text string", None,
-     lambda s, w: run_incremental_curation(
-         s, store_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+     _batch_store(per_hash_survivors)),
     ("ann_index", "embeddings",
      "vec_id long, embedding array<float>, label int", None,
-     lambda s, w: run_incremental_ann_index(
-         s, index_dir=str(w / "index"), checkpoint_dir=str(w / "ckpt"))),
-    ("hll_sketch_store", "events", _EVENTS, None,
-     lambda s, w: run_incremental_sketches(
-         s, sketch_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+     _batch_store(bucket_coded)),
+    ("hll_sketch_store", "events", _EVENTS, None, _batch_store(daily_sketches)),
     ("kll_sketch_store", "events",
      "event_id long, ts timestamp, event_type string, value double", None,
-     lambda s, w: run_incremental_kll(
-         s, store_dir=str(w / "store"), checkpoint_dir=str(w / "ckpt"))),
+     _batch_store(per_type_sketches)),
     ("rate_limit_state", "events", _EVENTS, _TS_ORDER,
      _memory_sink(rate_limited_stream)),
     ("packing_state", "documents",

@@ -5,10 +5,8 @@ from __future__ import annotations
 
 from uav_streamprocessor_spark.fixtures import register_uav_views
 from uav_streamprocessor_spark.operators.similarity import ann_lsh_topk
-from uav_streamprocessor_spark.streaming.ann_stream import (
-    index_topk,
-    run_incremental_ann_index,
-)
+from uav_streamprocessor_spark.streaming.ann_stream import bucket_coded, index_topk
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -21,10 +19,8 @@ def _run_stream(spark, tmp_path, tag):
     # contributes candidates for every query
     parts = [emb.filter(f"vec_id % 3 = {m}") for m in range(3)]
     stream = file_stream(spark, parts, tmp_path / f"vec_src_{tag}", _SCHEMA)
-    q = run_incremental_ann_index(
-        stream,
-        index_dir=str(tmp_path / "index"),
-        checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+    q = start_batch_store(
+        stream, bucket_coded, tmp_path / "index", tmp_path / f"ckpt_{tag}"
     )
     q.awaitTermination(180)
     return {
@@ -73,10 +69,11 @@ def test_cross_batch_redelivery_dedups_at_read(spark, tmp_path):
     emb.filter("vec_id % 3 = 0").coalesce(1).write.mode("overwrite").parquet(
         str(src / "f3_redelivered")
     )
-    q = run_incremental_ann_index(
+    q = start_batch_store(
         file_stream(spark, [], src, _SCHEMA),
-        index_dir=str(tmp_path / "index"),
-        checkpoint_dir=str(tmp_path / "ckpt_run1"),
+        bucket_coded,
+        tmp_path / "index",
+        tmp_path / "ckpt_run1",
     )
     q.awaitTermination(180)
 

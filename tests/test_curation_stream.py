@@ -19,8 +19,9 @@ from uav_streamprocessor_spark.operators.repetition import curation_funnel
 from uav_streamprocessor_spark.streaming.curation_stream import (
     accepted_doc_ids,
     curation_stream_report,
-    run_incremental_curation,
+    per_hash_survivors,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -79,10 +80,8 @@ def _run(spark, aug, tmp_path, tag, mods):
     stream = file_stream(
         spark, parts, tmp_path / f"docs_{tag}", "doc_id long, text string"
     )
-    q = run_incremental_curation(
-        stream,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+    q = start_batch_store(
+        stream, per_hash_survivors, tmp_path / "store", tmp_path / f"ckpt_{tag}"
     )
     q.awaitTermination(180)
     return {
@@ -135,3 +134,49 @@ def test_streaming_curation_is_arrival_order_independent(spark, tmp_path, aug_do
     expected = _batch_expected(aug_docs)
     got = _run(spark, aug_docs, tmp_path, "rev", [1, 2, 0])
     assert got == expected
+
+
+@pytest.mark.fast
+def test_restart_replays_the_uncommitted_batch_into_its_own_partition(
+    spark, tmp_path
+):
+    """Stop after 2 of 3 feed files with batch 1's commit lost, add the
+    last file and restart from the same checkpoint: Spark re-runs batch
+    1, which replaces its own store partition, then runs batch 2. The
+    store equals an uninterrupted run's, partition by partition, and so
+    does the reader output."""
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    parts = [docs.filter(f"doc_id % 3 = {m}") for m in range(3)]
+    schema = "doc_id long, text string"
+
+    def run(src, parts, store, ckpt):
+        q = start_batch_store(
+            file_stream(spark, parts, src, schema), per_hash_survivors, store, ckpt
+        )
+        q.awaitTermination(180)
+        return q
+
+    run(tmp_path / "whole_src", parts, tmp_path / "whole", tmp_path / "whole_ckpt")
+
+    src, store, ckpt = tmp_path / "src", tmp_path / "store", tmp_path / "ckpt"
+    run(src, parts[:2], store, ckpt)
+    for lost in ("1", ".1.crc"):  # batch 1's commit and its checksum
+        (ckpt / "commits" / lost).unlink()
+    parts[2].coalesce(1).write.parquet(str(src / "f2"))
+    q = run(src, [], store, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [1, 2]
+
+    def per_partition(d):
+        counts = spark.read.parquet(str(d)).groupBy("src_batch").count()
+        return sorted(tuple(r) for r in counts.collect())
+
+    def accepted(d):
+        return sorted(r["doc_id"] for r in accepted_doc_ids(spark, str(d)).collect())
+
+    # one partition per batch, and the replayed one holds one copy
+    whole = per_partition(tmp_path / "whole")
+    assert [b for b, _ in whole] == [0, 1, 2]
+    assert per_partition(store) == whole
+    assert accepted(store) == accepted(tmp_path / "whole")

@@ -9,9 +9,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.streaming.kll_stream import (
-    run_incremental_kll,
+    per_type_sketches,
     running_quantiles,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -35,10 +36,11 @@ def _run_stream(spark, tmp_path, tag, n_files=4):
     ev = _events(spark)
     parts = [ev.filter((F.col("event_id") % n_files) == i) for i in range(n_files)]
     stream = file_stream(spark, parts, tmp_path / f"src_{tag}", _SCHEMA)
-    q = run_incremental_kll(
+    q = start_batch_store(
         stream,
-        store_dir=str(tmp_path / f"store_{tag}"),
-        checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+        per_type_sketches,
+        tmp_path / f"store_{tag}",
+        tmp_path / f"ckpt_{tag}",
     )
     q.awaitTermination(180)
     return {
@@ -78,10 +80,11 @@ def test_replay_overwrites_not_doubles(spark, tmp_path):
     bit-identical."""
     a = _run_stream(spark, tmp_path, "replay")
     store_dir = str(tmp_path / "store_replay")
-    q = run_incremental_kll(
+    q = start_batch_store(
         file_stream(spark, [], tmp_path / "src_replay", _SCHEMA),
-        store_dir=store_dir,
-        checkpoint_dir=str(tmp_path / "ckpt_replay2"),  # fresh -> full replay
+        per_type_sketches,
+        store_dir,
+        tmp_path / "ckpt_replay2",  # fresh -> full replay
     )
     q.awaitTermination(180)
     store = spark.read.parquet(store_dir)

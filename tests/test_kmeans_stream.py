@@ -17,9 +17,10 @@ from uav_streamprocessor_spark.operators.similarity import kmeans_lloyd
 from uav_streamprocessor_spark.streaming.kmeans_stream import (
     load_centroids,
     merged_centroid_update,
-    run_incremental_kmeans,
+    partial_sums,
     streaming_lloyd_round,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 from uav_streamprocessor_spark.streaming.sources import file_stream
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -98,8 +99,8 @@ def test_streaming_rounds_equal_batch_lloyd_and_replay_idempotent(
     # same store; every batch rewrites its partition with identical bytes,
     # so the merged update is unchanged
     seed = _seed_centroids(spark)
-    q = run_incremental_kmeans(
-        stream, f"{work}/partials_r0", str(tmp_path / "ckpt_replay"), seed
+    q = start_batch_store(
+        stream, partial_sums(seed), f"{work}/partials_r0", tmp_path / "ckpt_replay"
     )
     q.awaitTermination(180)
     replay_update = merged_centroid_update(spark, f"{work}/partials_r0", seed)

@@ -16,6 +16,7 @@ from uav_streamprocessor_spark.operators.pixel import (
     letterbox_udf,
     make_test_image,
 )
+from uav_streamprocessor_spark.operators.uav_core import wire_confidence
 from uav_streamprocessor_spark.plans.pipeline import (
     keyframe_detections_flat,
     process_keyframes,
@@ -153,6 +154,25 @@ def test_sender_payloads_shape(spark, frames_df):
         for d in meta["detections"]:
             assert set(d) == {"class_name", "class_id", "confidence", "box"}
             assert len(d["box"]) == 4
+
+
+def test_wire_confidence_rounds_like_python(spark):
+    """The wire confidence rounds like the reference's Python
+    round(conf, 4). As a double 0.00015 lies just below the tie, so it
+    rounds down; Spark's round(x, 4), which the HTTP payload used,
+    HALF_UPs the decimal string "0.00015" to 0.0002."""
+    vals = [0.00015, 0.12345, 0.5, 0.87654321]
+    rows = (
+        spark.createDataFrame(list(enumerate(vals)), "i int, c double")
+        .orderBy("i")
+        .select(
+            wire_confidence(F.col("c")).alias("wire"),
+            F.round("c", 4).alias("plain"),
+        )
+        .collect()
+    )
+    assert [r["wire"] for r in rows] == [round(v, 4) for v in vals]
+    assert rows[0]["wire"] == 0.0001 and rows[0]["plain"] == 0.0002
 
 
 def test_recorder_rows_fps_fallback(spark, frames_df):

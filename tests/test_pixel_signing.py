@@ -27,6 +27,7 @@ from uav_streamprocessor_spark.operators.pixel import (
     md5_image_array,
     roundtrip_contract,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -231,13 +232,8 @@ def test_streaming_signature_equals_batch(spark, tmp_path):
         .load()
         .filter(F.col("frame_number") % 30 == 0)
     )
-    q = (
-        content_signature(sdf)
-        .writeStream.format("memory")
-        .queryName("px_sig_stream")
-        .option("checkpointLocation", str(tmp_path / "sig_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_memory_sink(
+        content_signature(sdf), "px_sig_stream", tmp_path / "sig_ckpt"
     )
     q.awaitTermination(120)
     stream_rows = sorted(

@@ -5,8 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 from uav_streamprocessor_spark.streaming.sketch_stream import (
-    run_incremental_sketches,
+    daily_sketches,
     running_distinct_users,
 )
 from uav_streamprocessor_spark.streaming.sources import file_stream
@@ -39,10 +40,8 @@ def _run_stream(spark, tmp_path, tag):
         tmp_path / f"ev_src_{tag}",
         "event_id long, ts timestamp, user_id long, event_type string",
     )
-    q = run_incremental_sketches(
-        stream,
-        sketch_dir=str(tmp_path / "sketches"),
-        checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+    q = start_batch_store(
+        stream, daily_sketches, tmp_path / "sketches", tmp_path / f"ckpt_{tag}"
     )
     q.awaitTermination(180)
     return {

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from uav_streamprocessor_spark.config import PipelineConfig
+from uav_streamprocessor_spark.fixtures import register_base_tables
 from uav_streamprocessor_spark.operators.uav_core import keyframes
 from uav_streamprocessor_spark.streaming.pipeline import (
     session_event_counts,
@@ -24,38 +25,41 @@ from uav_streamprocessor_spark.streaming.sinks import (
     HttpSenderSink,
     IdempotentBatchSink,
     OrderedRecorderSink,
+    start_memory_sink,
 )
-from uav_streamprocessor_spark.streaming.sources import (
-    ordered_slices,
-    prepare_event_stream_dir,
-    stream_events,
+from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
+
+_EVENT_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
 )
 
 
 @pytest.fixture(scope="module")
 def stream_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("evstream")
-    return prepare_event_stream_dir(spark, SF_SMALL, str(d), n_slices=6)
+    """The events table as 6 time-ordered files, one per micro-batch."""
+    d = tmp_path_factory.mktemp("evstream") / "src"
+    register_base_tables(spark, SF_SMALL)
+    parts = ordered_slices(spark.table("events"), 6, ("ts", "event_id"))
+    file_stream(spark, parts, d, _EVENT_SCHEMA)
+    return str(d)
 
 
-def _run_to_memory(df, name, tmp_path, output_mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
+def _events(spark, stream_dir):
+    return file_stream(spark, [], stream_dir, _EVENT_SCHEMA)
+
+
+def _run_to_memory(df, name, tmp_path):
+    q = start_memory_sink(df, name, tmp_path / f"ckpt_{name}")
     q.awaitTermination(120)
     return q
 
 
 def test_file_stream_replays_all_events(spark, stream_dir, tmp_path):
-    ev = stream_events(spark, stream_dir)
+    ev = _events(spark, stream_dir)
     q = _run_to_memory(ev.select("event_id"), "all_events", tmp_path)
     n = spark.sql("SELECT count(*) c FROM all_events").collect()[0]["c"]
-    total = spark.read.parquet(f"{stream_dir}").count()
+    total = spark.read.parquet(f"{stream_dir}/*").count()
     assert n == total
     assert q.lastProgress is not None
 
@@ -83,16 +87,14 @@ def test_ordered_slices_partition_the_feed_in_order(spark):
 
 
 def test_windowed_counts_match_batch(spark, stream_dir, tmp_path):
-    ev = stream_events(spark, stream_dir)
-    _run_to_memory(
-        windowed_event_counts(ev), "hourly_stream", tmp_path, "append"
-    )
+    ev = _events(spark, stream_dir)
+    _run_to_memory(windowed_event_counts(ev), "hourly_stream", tmp_path)
     got = {
         (r["window_start_epoch"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in spark.sql("SELECT * FROM hourly_stream").collect()
     }
     # batch twin over the same data (only windows the watermark finalized)
-    batch = spark.read.parquet(stream_dir)
+    batch = spark.read.parquet(f"{stream_dir}/*")
     expected_all = {
         (r["ws"], r["event_type"]): (r["n"], r["tv"])
         for r in batch.groupBy(
@@ -108,7 +110,7 @@ def test_windowed_counts_match_batch(spark, stream_dir, tmp_path):
 
 
 def test_session_and_sliding_run(spark, stream_dir, tmp_path):
-    ev = stream_events(spark, stream_dir)
+    ev = _events(spark, stream_dir)
     _run_to_memory(sliding_event_counts(ev), "sliding_stream", tmp_path)
     _run_to_memory(session_event_counts(ev), "session_stream", tmp_path)
     assert spark.sql("SELECT count(*) c FROM sliding_stream").collect()[0]["c"] > 0
@@ -116,7 +118,7 @@ def test_session_and_sliding_run(spark, stream_dir, tmp_path):
 
 
 def test_streaming_dedup_bounded_state(spark, stream_dir, tmp_path):
-    ev = stream_events(spark, stream_dir)
+    ev = _events(spark, stream_dir)
     _run_to_memory(
         streaming_dedup(ev).select("user_id", "event_type", "event_id"),
         "dedup_stream",
@@ -125,7 +127,7 @@ def test_streaming_dedup_bounded_state(spark, stream_dir, tmp_path):
     rows = spark.sql("SELECT user_id, event_type, count(*) c FROM dedup_stream "
                      "GROUP BY 1,2 HAVING c > 1").collect()
     # within-watermark duplicates must be gone; far-apart repeats may remain
-    ev_batch = spark.read.parquet(stream_dir)
+    ev_batch = spark.read.parquet(f"{stream_dir}/*")
     n_keys = ev_batch.select("user_id", "event_type").distinct().count()
     n_out = spark.sql("SELECT count(*) c FROM dedup_stream").collect()[0]["c"]
     assert n_out >= n_keys  # at least one row per live key
@@ -141,8 +143,16 @@ def test_stateful_counters(spark, tmp_path):
     src = tmp_path / "frames_src"
     frames.coalesce(1).write.parquet(str(src))
     sdf = spark.readStream.schema("camera_id string, frame_number long").parquet(str(src))
-    out = stateful_frame_counters(sdf)
-    _run_to_memory(out, "counters_stream", tmp_path, "update")
+    q = (
+        stateful_frame_counters(sdf)
+        .writeStream.format("memory")
+        .queryName("counters_stream")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt_counters_stream"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
     rows = {
         r["camera_id"]: (r["total_frames"], r["keyframes"])
         for r in spark.sql(

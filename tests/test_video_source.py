@@ -20,6 +20,7 @@ from uav_streamprocessor_spark.operators.uav_core import keyframes
 from uav_streamprocessor_spark.sources.readers import load_frames, load_keyframes
 from uav_streamprocessor_spark.sources.video_source import register
 from uav_streamprocessor_spark.storage import formatted_plan
+from uav_streamprocessor_spark.streaming.sinks import start_memory_sink
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -196,13 +197,8 @@ def test_stream_drains_fully(spark, tmp_path):
         .option("framesPerBatch", "40")
         .load()
     )
-    q = (
-        sdf.select("camera_id", "frame_number")
-        .writeStream.format("memory")
-        .queryName("video_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_memory_sink(
+        sdf.select("camera_id", "frame_number"), "video_stream", tmp_path / "ckpt"
     )
     q.awaitTermination(120)
     nums = sorted(

@@ -264,16 +264,24 @@ def top_confidence_global(
 
 # --- K2 payload: the HTTP sink's metadata projection
 # (uav/frame_processing.py:230-248) ---
+def wire_confidence(confidence: Column) -> Column:
+    """Confidence as the wire metadata carries it: rounded to 4 places
+    (frame_processing.py:236) with the integer-scaling idiom
+    round(x*10000)/10000. Plain round(x, 4) HALF_UPs the decimal string
+    in Spark (0.00015 → 0.0002), while the reference's Python round and
+    DuckDB round the binary double (0.00015 → 0.0001), so they diverge
+    when a value lands exactly on .xxxx5 (the tpch_q2_min_cost class).
+    The HTTP payload and both registry metadata queries use
+    this one expression."""
+    return F.round(confidence * 10000) / 10000
+
+
 def detection_metadata_fields(
     detections: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Field-level form of the wire metadata: class_name, class_id,
-    confidence rounded to 4 (frame_processing.py:236) via the
-    integer-scaling idiom round(x*10000)/10000 — plain round(x, 4)
-    HALF_UPs a decimal string in Spark but rounds the binary double in
-    DuckDB, diverging when a quotient lands exactly on .xxxx5 (the
-    tpch_q2_min_cost class, ADVICE r10) — box corners (:237)."""
-    conf4 = (F.round(F.col("confidence") * 10000) / 10000).alias("confidence")
+    confidence rounded to 4 (wire_confidence), box corners (:237)."""
+    conf4 = wire_confidence(F.col("confidence")).alias("confidence")
     return filter_detections(detections, cfg).select(
         "camera_id",
         "frame_number",
@@ -295,9 +303,7 @@ def detection_metadata_json(
     det_struct = F.struct(
         F.col("class_name"),
         F.col("class_id"),
-        # integer-scaling round — keeps the printed double bit-identical
-        # across engines on .xxxx5 ties (see detection_metadata_fields)
-        (F.round(F.col("confidence") * 10000) / 10000).alias("confidence"),
+        wire_confidence(F.col("confidence")).alias("confidence"),
         F.array("x_min", "y_min", "x_max", "y_max").alias("box"),
     )
     return (

@@ -21,7 +21,7 @@ from uav_streamprocessor_spark.operators.pixel import (
     explode_detections,
     letterbox_and_detect,
 )
-from uav_streamprocessor_spark.operators.uav_core import keyframes
+from uav_streamprocessor_spark.operators.uav_core import keyframes, wire_confidence
 
 
 def process_keyframes(
@@ -54,7 +54,7 @@ def sender_payloads(
         lambda d: F.struct(
             d["class_name"].alias("class_name"),
             d["class_id"].alias("class_id"),
-            F.round(d["confidence"], 4).alias("confidence"),
+            wire_confidence(d["confidence"]).alias("confidence"),
             F.array(d["x_min"], d["y_min"], d["x_max"], d["y_max"]).alias("box"),
         ),
     )

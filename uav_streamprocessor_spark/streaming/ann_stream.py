@@ -6,12 +6,13 @@ kmeans_stream: centroid sufficient statistics; curation_stream: survivor
 store): each micro-batch of vectors is coded with the SAME
 random-hyperplane bucket expression the batch ANN query uses
 (similarity.bucket_code_col — planes are plan constants, so batch and
-streaming entries are bit-identical) and OVERWRITES its own
-`src_batch=N` partition of a bucket-coded index store. Queries probe
+streaming entries are bit-identical) and is written as its own
+partition of a bucket-coded index store by `sinks.write_batch_partition`
+(replay-idempotent; one checkpoint lineage per index dir). Queries probe
 the ACCUMULATED store with the same multi-probe candidate join + exact
 cosine re-rank as the batch operator — proven to return exactly
 `ann_lsh_topk`'s results once the feed is fully ingested
-(tests/test_ann_stream.py), and replay-idempotent.
+(tests/test_ann_stream.py).
 
 This is how a vector index rides an ingest feed: the index is an
 append-only partitioned table of (vec_id, bucket, vector), additions
@@ -28,15 +29,9 @@ Scale properties:
 - A probe broadcasts the (tiny) query set against the store and prunes
   by bit_count(bucket XOR qbucket) <= h BEFORE any distance math; scan
   fraction ≈ C(planes, <=h) / 2^planes, same as batch ANN.
-- Replay rewrites a batch's partition with identical bytes (dynamic
-  partition overwrite): at-least-once -> exactly-once convergence.
-- ONE producer (one checkpoint lineage) per index dir: `src_batch` is
-  the checkpoint's batch id, so a second stream started with a FRESH
-  checkpoint against the same index dir would reuse batch ids from 0
-  and clobber the first run's partitions. Re-deliveries within a feed
-  (a later batch re-sending an earlier vector — the at-least-once case)
-  land in a new partition and are collapsed at read time by
-  index_topk's latest-src_batch dedup.
+- Re-deliveries within a feed (a later batch re-sending an earlier
+  vector — the source-level at-least-once case) land in a new partition
+  and are collapsed at read time by index_topk's latest-src_batch dedup.
 """
 
 from __future__ import annotations
@@ -50,37 +45,14 @@ from uav_streamprocessor_spark.operators.similarity import (
 )
 
 
-def make_ann_index_sink(index_dir: str):
-    """foreachBatch function: bucket-code the batch and overwrite its
-    index partition."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        coded = batch_df.select(
-            "vec_id",
-            "label",
-            "embedding",
-            bucket_code_col(F.col("embedding")).alias("bucket"),
-            F.lit(batch_id).alias("src_batch"),
-        )
-        (
-            coded.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(index_dir)
-        )
-
-    return process
-
-
-def run_incremental_ann_index(
-    vector_stream: DataFrame, index_dir: str, checkpoint_dir: str
-):
-    """Wire the sink to a vector stream (availableNow for tests)."""
-    return (
-        vector_stream.writeStream.foreachBatch(make_ann_index_sink(index_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def bucket_coded(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch's vectors with their bucket codes: the rows a
+    batch writes to its index partition (sinks.start_batch_store)."""
+    return batch_df.select(
+        "vec_id",
+        "label",
+        "embedding",
+        bucket_code_col(F.col("embedding")).alias("bucket"),
     )
 
 

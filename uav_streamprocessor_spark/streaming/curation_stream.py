@@ -5,7 +5,8 @@ The third instance of the engine's streaming-state pattern (after
 dedup_stream's LSH index and sketch_stream/kmeans_stream's mergeable
 summaries): each micro-batch reduces its documents to ONE row per
 text-hash — (md5(text), min doc_id in batch, that doc's quality flag) —
-and OVERWRITES its own `src_batch=N` partition of a survivor store.
+written as its own partition of a survivor store by
+`sinks.write_batch_partition`.
 Readers resolve the GLOBAL survivor per hash with an argmin fold over
 the accumulated partitions, then apply the stored quality flag.
 
@@ -20,9 +21,8 @@ oracle-proven curation funnel's stage counts.
 Scale properties:
 - Per-batch state is one narrow row per DISTINCT text in the batch
   (hash, id, flag) — payload text never enters the store.
-- Replay rewrites a batch's partition with identical bytes (dynamic
-  partition overwrite) — the same at-least-once -> exactly-once
-  convergence as every store in streaming/.
+- A replayed batch rewrites its own partition with identical rows
+  (sinks.write_batch_partition).
 - The read-time fold shuffles on the 16-byte hash only; at 100 TB the
   store compacts like any partitioned table and the fold is a
   map-side-combinable min.
@@ -61,49 +61,26 @@ def _staged_flags(df: DataFrame) -> DataFrame:
     )
 
 
-def make_curation_sink(store_dir: str):
-    """foreachBatch function: reduce the batch to one survivor candidate
-    per text-hash and overwrite this batch's store partition."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        per_hash = (
-            _staged_flags(batch_df)
-            .groupBy("h")
-            .agg(F.min(F.struct("doc_id", "q")).alias("m"))
-            .select("h", F.col("m.doc_id").alias("doc_id"), F.col("m.q").alias("q"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        (
-            per_hash.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(store_dir)
-        )
-
-    return process
-
-
-def run_incremental_curation(
-    doc_stream: DataFrame, store_dir: str, checkpoint_dir: str
-):
-    """Wire the sink to a document stream (availableNow for tests)."""
+def _min_doc_per_hash(df: DataFrame) -> DataFrame:
+    """(h, doc_id, q) keeping the lowest doc_id per text-hash."""
     return (
-        doc_stream.writeStream.foreachBatch(make_curation_sink(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        df.groupBy("h")
+        .agg(F.min(F.struct("doc_id", "q")).alias("m"))
+        .select("h", F.col("m.doc_id").alias("doc_id"), F.col("m.q").alias("q"))
     )
+
+
+def per_hash_survivors(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch reduced to one survivor candidate per text-hash:
+    the rows a batch writes to its store partition
+    (sinks.start_batch_store)."""
+    return _min_doc_per_hash(_staged_flags(batch_df))
 
 
 def resolved_survivors(spark: SparkSession, store_dir: str) -> DataFrame:
     """(h, doc_id, q) with the GLOBAL minimum doc per hash — the
     order-independent argmin fold over every accumulated partition."""
-    return (
-        spark.read.parquet(store_dir)
-        .groupBy("h")
-        .agg(F.min(F.struct("doc_id", "q")).alias("m"))
-        .select("h", F.col("m.doc_id").alias("doc_id"), F.col("m.q").alias("q"))
-    )
+    return _min_doc_per_hash(spark.read.parquet(store_dir))
 
 
 def accepted_doc_ids(spark: SparkSession, store_dir: str) -> DataFrame:

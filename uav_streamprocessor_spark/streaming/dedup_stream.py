@@ -14,17 +14,18 @@ Scale properties:
   never text. The per-batch join is band-bucket-keyed, exactly like the
   batch operator; index-side partition pruning keeps replayed batches
   out (`src_batch < current`).
-- Idempotent under foreachBatch replay: each batch OVERWRITES its own
-  `src_batch=N` partition of the index and its own pairs directory, so
-  an at-least-once retry converges to the same state (same pattern as
-  sinks.IdempotentBatchSink).
+- Idempotent under foreachBatch replay: each batch writes its pairs and
+  its index rows as its own partition of each store
+  (sinks.write_batch_partition), so an at-least-once retry converges to
+  the same state. `candidate_pairs` reads the pairs store.
 - At 100 TB the index compacts periodically (many small src_batch dirs →
   bucketed-by-band_sig files); noted here, not needed at test scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.operators.dedup import (
@@ -32,6 +33,7 @@ from uav_streamprocessor_spark.operators.dedup import (
     minhash_signature,
 )
 from uav_streamprocessor_spark.operators.partitioning import spread_scan
+from uav_streamprocessor_spark.streaming.sinks import write_batch_partition
 
 
 def batch_band_signatures(docs: DataFrame) -> DataFrame:
@@ -47,37 +49,44 @@ def batch_band_signatures(docs: DataFrame) -> DataFrame:
     return band_signatures(sigs)
 
 
-def make_incremental_neardup_sink(index_dir: str, pairs_dir: str):
+def _index_before(spark, index_dir: str, batch_id: int) -> DataFrame | None:
+    """The index partitions of the batches before batch_id, or None when
+    no batch has written index rows yet: the directory is absent, or
+    holds no data file because every earlier batch was empty. Any other
+    read error (a corrupt or unreadable index) propagates and fails the
+    query: treating it as "no index yet" would silently drop every
+    cross-batch pair."""
+    try:
+        store = spark.read.parquet(index_dir)
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
+    return store.filter(F.col("src_batch") < F.lit(batch_id))
+
+
+def neardup_sink(index_dir: str, pairs_dir: str):
     """foreachBatch function: detect near-dup candidate pairs of this
-    batch against (index ∪ itself), then extend the index."""
+    batch against (index ∪ itself), then extend the index. Both the pairs
+    and the index extension are this batch's partition of their store
+    (sinks.write_batch_partition), so a replayed batch converges."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         bands = batch_band_signatures(batch_df).persist()
         try:
             new = bands.alias("new")
             # within-batch pairs (a < b)
-            within = (
-                new.join(
-                    bands.alias("b"),
-                    (F.col("new.band") == F.col("b.band"))
-                    & (F.col("new.band_sig") == F.col("b.band_sig"))
-                    & (F.col("new.doc_id") < F.col("b.doc_id")),
-                )
-                .select(
-                    F.col("new.doc_id").alias("doc_id_a"),
-                    F.col("b.doc_id").alias("doc_id_b"),
-                )
+            pairs = new.join(
+                bands.alias("b"),
+                (F.col("new.band") == F.col("b.band"))
+                & (F.col("new.band_sig") == F.col("b.band_sig"))
+                & (F.col("new.doc_id") < F.col("b.doc_id")),
+            ).select(
+                F.col("new.doc_id").alias("doc_id_a"),
+                F.col("b.doc_id").alias("doc_id_b"),
             )
-            pairs = within
-            try:
-                store = spark.read.parquet(index_dir).filter(
-                    F.col("src_batch") < F.lit(batch_id)
-                )
-                has_store = True
-            except Exception:  # first batch: no index yet
-                has_store = False
-            if has_store:
+            store = _index_before(batch_df.sparkSession, index_dir, batch_id)
+            if store is not None:
                 cross = (
                     store.alias("old")
                     .join(
@@ -92,32 +101,21 @@ def make_incremental_neardup_sink(index_dir: str, pairs_dir: str):
                     )
                 )
                 pairs = pairs.union(cross)
-            # idempotent per-batch outputs: a replayed batch overwrites
-            # its own partition/directory, never duplicating state
-            pairs.distinct().write.mode("overwrite").parquet(
-                f"{pairs_dir}/batch={batch_id}"
-            )
-            bands.withColumn("src_batch", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).parquet(f"{index_dir}/src_batch={batch_id}")
+            write_batch_partition(pairs.distinct(), batch_id, pairs_dir)
+            write_batch_partition(bands, batch_id, index_dir)
         finally:
             bands.unpersist()
 
     return process
 
 
-def run_incremental_neardup(
-    doc_stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire the sink to a document stream (availableNow for tests)."""
+def candidate_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
+    """(doc_id_a, doc_id_b) over every batch's partition of the pairs
+    store. The schema is given, not inferred: a batch that finds no pair
+    writes no file, so a feed without near-duplicates leaves a store with
+    nothing to infer it from, and it reads as empty."""
     return (
-        doc_stream.writeStream.foreachBatch(
-            make_incremental_neardup_sink(index_dir, pairs_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        spark.read.schema("doc_id_a long, doc_id_b long")
+        .parquet(pairs_dir)
+        .select("doc_id_a", "doc_id_b")
     )

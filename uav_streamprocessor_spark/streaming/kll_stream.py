@@ -5,11 +5,11 @@ operators/sketches.py). Running p50/p90/p99 of `value` per event type
 WITHOUT sorting or rescanning events.
 
 Same store shape as the HLL sink: each micro-batch reduces to one KLL
-sketch per event_type and OVERWRITES its own `src_batch=N` partition of
-a parquet store (dynamic partition overwrite → at-least-once replay
-never double-counts: a redelivered batch replaces its own partition).
-One contract difference from the HLL twin: KLL compaction is RANDOMIZED
-by design, so a replayed partition holds a statistically equivalent
+sketch per event_type (`per_type_sketches`), written as its own
+partition of a parquet store by `sinks.write_batch_partition`, so a
+replayed batch replaces its partition and never double-counts. One
+contract difference from the HLL twin: KLL compaction is RANDOMIZED by
+design, so a replayed partition holds a statistically equivalent
 sketch, not identical bytes — convergence is "n exact + rank bounds
 hold", not bit equality (asserted exactly that way in tests). Readers
 fold-merge the tiny stored sketches. k=200 gives ~1.65% one-sided rank
@@ -33,37 +33,12 @@ from pyspark.sql import functions as F
 _K = 200
 
 
-def make_incremental_kll_sink(store_dir: str, k: int = _K):
-    """foreachBatch function: reduce the batch to per-type KLL sketches
-    and overwrite this batch's partition of the store."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        per_type = (
-            batch_df.groupBy("event_type")
-            .agg(F.kll_sketch_agg_double("value", F.lit(k)).alias("sketch"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        (
-            per_type.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(store_dir)
-        )
-
-    return process
-
-
-def run_incremental_kll(
-    event_stream: DataFrame, store_dir: str, checkpoint_dir: str, k: int = _K
-):
-    """Wire the sink to an event stream (availableNow for tests)."""
-    return (
-        event_stream.writeStream.foreachBatch(
-            make_incremental_kll_sink(store_dir, k)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def per_type_sketches(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch reduced to one KLL sketch of `value` per
+    event_type: the rows a batch writes to its store partition
+    (sinks.start_batch_store)."""
+    return batch_df.groupBy("event_type").agg(
+        F.kll_sketch_agg_double("value", F.lit(_K)).alias("sketch")
     )
 
 

@@ -6,14 +6,14 @@ streaming state, never raw data.
 
 Each micro-batch runs the SAME fused assignment+partial-sum reducer the
 batch algorithm uses (similarity.partial_sum_reducer) against FROZEN
-round centroids, and OVERWRITES its own `src_batch=N` partition of a
-partial-sum store. A merge reader folds the accumulated store into one
-Lloyd update. Because the partials are plain per-cluster (count, sum)
-vectors over disjoint row sets, merge-of-parts == partials-of-whole,
-so the incrementally-maintained update equals the batch update over
-everything ingested — the equivalence tests/test_kmeans_stream.py pins
-round-by-round against kmeans_lloyd, down to identical final cluster
-assignments.
+round centroids (`partial_sums`), written as its own partition of a
+partial-sum store by `sinks.write_batch_partition`. A merge reader folds
+the accumulated store into one Lloyd update. Because the partials are
+plain per-cluster (count, sum) vectors over disjoint row sets,
+merge-of-parts == partials-of-whole, so the incrementally-maintained
+update equals the batch update over everything ingested — the
+equivalence tests/test_kmeans_stream.py pins round-by-round against
+kmeans_lloyd, down to identical final cluster assignments.
 
 A full Lloyd ITERATION re-scores all data against new centroids, so each
 round is one replay of the feed (availableNow) with the previous round's
@@ -25,9 +25,9 @@ rescanned within a round, and a round's scan is embarrassingly parallel.
 Scale properties:
 - State per batch is <= k * n_arrow_batches narrow rows (k counts + sums),
   independent of batch row volume.
-- At-least-once replay converges: a re-fired batch rewrites its partition
-  with identical bytes (dynamic partition overwrite) — same idempotence
-  contract as sketch_stream/dedup_stream, asserted in tests.
+- At-least-once replay converges: a re-fired batch rewrites its own
+  partition with identical partials (sinks.write_batch_partition),
+  asserted in tests.
 - Merge cost for a reader is O(batches * k), not O(vectors).
 - The online (Sculley mini-batch) variant — update centroids WITHIN a
   round from each batch's partials — drops the replay requirement at the
@@ -41,49 +41,22 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from uav_streamprocessor_spark.operators.similarity import (
     centroid_update_from_partials,
     partial_sum_reducer,
 )
+from uav_streamprocessor_spark.streaming.sinks import start_batch_store
 
 
-def make_incremental_kmeans_sink(store_dir: str, centroids: list[list[float]]):
-    """foreachBatch function: fused assignment+partial-sum of the batch
-    against frozen centroids; overwrite this batch's store partition."""
+def partial_sums(centroids: list[list[float]]):
+    """The per-batch reduction against frozen centroids: a function from
+    one micro-batch to its fused assignment+partial-sum rows, the rows
+    the batch writes to its store partition (sinks.start_batch_store)."""
     reduce_batch, schema = partial_sum_reducer(centroids)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        partials = batch_df.select("embedding").mapInPandas(
-            reduce_batch, schema=schema
-        )
-        (
-            partials.withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(store_dir)
-        )
-
-    return process
-
-
-def run_incremental_kmeans(
-    vector_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    centroids: list[list[float]],
-):
-    """Wire the sink to a vector stream (availableNow for one replay)."""
-    return (
-        vector_stream.writeStream.foreachBatch(
-            make_incremental_kmeans_sink(store_dir, centroids)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return lambda batch_df: batch_df.select("embedding").mapInPandas(
+        reduce_batch, schema=schema
     )
 
 
@@ -118,7 +91,6 @@ def streaming_lloyd_round(
     work_dir: str,
     round_no: int,
     centroids: list[list[float]],
-    timeout_sec: int = 180,
 ) -> list[list[float]]:
     """One full Lloyd round as a streaming pass: replay the feed through
     the partial-sum sink (fresh store + checkpoint per round — a round is
@@ -127,8 +99,8 @@ def streaming_lloyd_round(
     (streams are single-use)."""
     store = f"{work_dir}/partials_r{round_no}"
     ckpt = f"{work_dir}/ckpt_r{round_no}"
-    q = run_incremental_kmeans(make_stream(), store, ckpt, centroids)
-    q.awaitTermination(timeout_sec)
+    q = start_batch_store(make_stream(), partial_sums(centroids), store, ckpt)
+    q.awaitTermination()
     new_centroids = merged_centroid_update(spark, store, centroids)
     save_centroids(f"{work_dir}/centroids_r{round_no}.json", new_centroids)
     return new_centroids

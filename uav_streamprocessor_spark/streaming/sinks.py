@@ -22,6 +22,12 @@ Scale rules enforced here:
   atomically by the camera's owning partition) so a restarted sink keeps
   the reference's first-frame semantics (frame_processing.py:147-159)
   instead of re-latching.
+
+This module is also the one place a stream reaches a store:
+start_memory_sink (append to an in-memory table), start_foreach_batch
+(foreachBatch under a checkpoint and availableNow), write_batch_partition
+(the replay-idempotent src_batch=<batch_id> partition write) and
+start_batch_store (the last two composed over a per-batch reduction).
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pathlib import Path
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -604,4 +611,53 @@ def start_memory_sink(df: DataFrame, name: str, checkpoint) -> StreamingQuery:
         .option("checkpointLocation", str(checkpoint))
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def start_foreach_batch(df: DataFrame, fn, checkpoint) -> StreamingQuery:
+    """Start df into the foreachBatch function fn(batch, batch_id) under
+    an availableNow trigger: the query drains every micro-batch available
+    at start, then stops. The checkpoint makes delivery at-least-once: a
+    batch whose commit was lost re-runs with the same batch_id."""
+    return (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def write_batch_partition(df: DataFrame, batch_id: int, store_dir) -> None:
+    """Write df as the partition src_batch=<batch_id> of the parquet store
+    at store_dir, replacing that partition and no other (dynamic partition
+    overwrite).
+
+    This is what makes an at-least-once foreachBatch store exactly-once
+    in content: a micro-batch replayed after a crash rewrites its own
+    partition instead of appending a second copy, and no other batch's
+    rows are touched, so results neither duplicate nor vanish on replay.
+    It holds while one checkpoint lineage writes the store: src_batch is
+    that checkpoint's batch id, so a second stream with a fresh checkpoint
+    would reuse ids from 0 and replace the first run's partitions."""
+    (
+        df.withColumn("src_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("src_batch")
+        .parquet(str(store_dir))
+    )
+
+
+def start_batch_store(
+    stream: DataFrame, reduce, store_dir, checkpoint
+) -> StreamingQuery:
+    """Start a store whose micro-batch N writes reduce(batch) as the
+    partition src_batch=N of store_dir (write_batch_partition), under the
+    checkpoint and an availableNow trigger (start_foreach_batch)."""
+    return start_foreach_batch(
+        stream,
+        lambda batch, batch_id: write_batch_partition(
+            reduce(batch), batch_id, store_dir
+        ),
+        checkpoint,
     )

@@ -1,22 +1,20 @@
 """Incremental sketch maintenance over a streaming event feed.
 
 The streaming twin of operators/sketches.py: each micro-batch reduces to
-per-(event_type, day) HLL sketches of user_id and OVERWRITES its own
-`src_batch=N` partition of a sketch store; readers answer running
-distinct-user questions by union-merging the stored sketches — never by
-rescanning events. Because HLL union is associative and idempotent-ish
-under exact replay (same batch -> same sketch bytes -> same partition
-overwrite), the accumulated store equals the batch sketch over
-everything ingested — asserted exactly in tests/test_dedup_stream.py's
-sibling, tests/test_sketch_stream.py.
+per-(event_type, day) HLL sketches of user_id (`daily_sketches`), written
+as its own partition of a sketch store by `sinks.write_batch_partition`;
+readers answer running distinct-user questions by union-merging the
+stored sketches — never by rescanning events. Because HLL union is
+associative and a replayed batch writes the same sketches again, the
+accumulated store equals the batch sketch over everything ingested —
+asserted exactly in tests/test_sketch_stream.py.
 
 Scale properties:
 - State per batch is |event_types| x |days-touched| sketches (~2 KB
   each), independent of event volume — the whole point of sketches as
   streaming state.
-- At-least-once replay converges: a batch's partition is rewritten with
-  identical bytes (dynamic partition overwrite), same pattern as
-  streaming/dedup_stream.py and sinks.IdempotentBatchSink.
+- At-least-once replay converges: a replayed batch rewrites its own
+  partition with identical sketches (sinks.write_batch_partition).
 - The store compacts like any partitioned table; merge cost for a reader
   is O(batches x types), not O(events).
 """
@@ -29,37 +27,12 @@ from pyspark.sql import functions as F
 _LG_K = 12
 
 
-def make_incremental_sketch_sink(sketch_dir: str):
-    """foreachBatch function: reduce the batch to daily HLL sketches and
-    overwrite this batch's partition of the store."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        daily = (
-            batch_df.groupBy("event_type", F.to_date("ts").alias("day"))
-            .agg(F.hll_sketch_agg("user_id", F.lit(_LG_K)).alias("sketch"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        (
-            daily.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(sketch_dir)
-        )
-
-    return process
-
-
-def run_incremental_sketches(
-    event_stream: DataFrame, sketch_dir: str, checkpoint_dir: str
-):
-    """Wire the sink to an event stream (availableNow for tests)."""
-    return (
-        event_stream.writeStream.foreachBatch(
-            make_incremental_sketch_sink(sketch_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def daily_sketches(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch reduced to one HLL sketch of user_id per
+    (event_type, day): the rows a batch writes to its store partition
+    (sinks.start_batch_store)."""
+    return batch_df.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        F.hll_sketch_agg("user_id", F.lit(_LG_K)).alias("sketch")
     )
 
 

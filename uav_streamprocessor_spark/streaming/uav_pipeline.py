@@ -10,8 +10,11 @@ readStream DAG with two sinks driven by the micro-batch engine:
     └── filter(% N)    → letterbox UDF → detect (mapInPandas) → payloads
                        → HttpSenderSink (K2)
 
-Both sinks are checkpointed foreachBatch (at-least-once; the reference is
-at-most-once on both paths).
+Both sinks are checkpointed foreachBatch started by
+sinks.start_foreach_batch (at-least-once; the reference is at-most-once
+on both paths). Replay-safety comes from the sinks themselves: the
+recorder writes one segment per micro-batch, so a replayed batch
+replaces its own segment, while the sender re-POSTs a replayed batch.
 """
 
 from __future__ import annotations
@@ -24,7 +27,9 @@ from uav_streamprocessor_spark.streaming.sinks import (
     DEFAULT_FMT,
     HttpSenderSink,
     OrderedRecorderSink,
+    reassemble_segments,
     recorder_columns,
+    start_foreach_batch,
 )
 
 
@@ -45,10 +50,9 @@ def run_streaming_pipeline(
     source_spec: str,
     out_dir: str,
     checkpoint_dir: str,
+    sender: HttpSenderSink,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    sender: HttpSenderSink | None = None,
     frames_per_batch: int = 30,
-    timeout_s: float = 120.0,
     record_fmt: str = DEFAULT_FMT,
 ) -> dict:
     """Run both branches with availableNow triggers (complete drain of
@@ -61,32 +65,22 @@ def run_streaming_pipeline(
     reference's shutdown report (uav/main.py:175-179)."""
     frames = stream_frames(spark, source_spec, frames_per_batch)
     recorder = OrderedRecorderSink(out_dir, cfg, fmt=record_fmt)
-
-    rec_q = (
-        recorder_rows_stream(frames, cfg, fmt=record_fmt)
-        .writeStream.foreachBatch(recorder)
-        .option("checkpointLocation", f"{checkpoint_dir}/record")
-        .trigger(availableNow=True)
-        .start()
-    )
-    send_q = (
-        sender_payloads(frames, cfg)
-        .writeStream.foreachBatch(sender or HttpSenderSink("http://localhost:9"))
-        .option("checkpointLocation", f"{checkpoint_dir}/send")
-        .trigger(availableNow=True)
-        .start()
-    )
-    rec_q.awaitTermination(timeout_s)
-    send_q.awaitTermination(timeout_s)
-    from uav_streamprocessor_spark.streaming.sinks import reassemble_segments
-
-    reassembled = reassemble_segments(out_dir, fmt=record_fmt)
-    snd = sender
+    queries = [
+        start_foreach_batch(
+            recorder_rows_stream(frames, cfg, fmt=record_fmt),
+            recorder,
+            f"{checkpoint_dir}/record",
+        ),
+        start_foreach_batch(
+            sender_payloads(frames, cfg), sender, f"{checkpoint_dir}/send"
+        ),
+    ]
+    for q in queries:
+        q.awaitTermination()
     return {
-        "recorded_batches": True,
-        "segments": reassembled,
-        "sent": getattr(snd, "sent", None),
-        "send_errors": getattr(snd, "errors", None),
+        "segments": reassemble_segments(out_dir, fmt=record_fmt),
+        "sent": sender.sent,
+        "send_errors": sender.errors,
         "skipped_frames": recorder.skipped,
     }
 
