@@ -357,7 +357,11 @@ def test_real_video_file_through_full_pipeline(spark, tmp_path):
     }
     assert sent == {0, 30, 60}
     # K1: every frame recorded in order; camera id = file stem with dots
-    assert result["segments"] == {"flight.2024": 3}
+    rec = tmp_path / "rec_out"
+    seg_paths = sorted(p for p in rec.iterdir() if ".b" in p.name)
+    seg = result["segments"]["flight.2024"]
+    assert len(seg_paths) >= 1 and seg["segments"] == len(seg_paths)
+    assert not seg["reencoded"]
     lines = [
         _json.loads(x) for x in open(tmp_path / "rec_out" / "flight.2024.jsonl")
     ]

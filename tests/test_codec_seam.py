@@ -1,19 +1,17 @@
 """Codec drop-in contract tests (VERDICT r2 #6).
 
-No video/image codec ships in this container, so the engine gates real
-decode behind two seams: `_open_decoder` (video source, cv2.VideoCapture
-shape — reference uav/frame_reader.py:116-155) and the pixel ops' codec
-pair (cv2.imencode/imdecode shape — frame_processing.py:221). These tests
-prove the seams are REAL: a cv2-shaped fake module / codec pair drops in
-and the Spark plumbing — DataSource planning, partition reads, Arrow UDF
-batches — runs unmodified, end to end, through executors.
+No video codec ships in this container, so the engine gates real decode
+behind one seam: `_open_decoder` (video source, cv2.VideoCapture shape —
+reference uav/frame_reader.py:116-155). These tests prove the seam is
+REAL: a cv2-shaped fake module drops in and the Spark plumbing —
+DataSource planning and partition reads — runs unmodified, end to end,
+through executors.
 """
 
 from __future__ import annotations
 
 import textwrap
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,49 +151,3 @@ def test_unopenable_source_raises_like_reference(fake_cv2_on_cluster):
 
     with pytest.raises(IOError):
         _open_decoder("/videos/not_a_video.avi")
-
-
-def test_pixel_ops_run_on_swapped_codec(spark):
-    """letterbox_and_detect with a jpeg-shaped fake codec (magic header +
-    tensor payload — structurally like cv2.imencode output) must produce
-    EXACTLY the detections of the raw-tensor codec on the same pixels:
-    the ops depend only on the (encode, decode) contract. The codec pair
-    pickles by value into the mapInPandas closure — no executor-side
-    module injection needed."""
-    from uav_streamprocessor_spark.operators.pixel import (
-        decode_image,
-        letterbox_and_detect,
-        make_test_image,
-    )
-
-    MAGIC = b"FAKEJPG1"
-
-    def fake_encode(arr):
-        h, w = arr.shape[:2]
-        return MAGIC + h.to_bytes(4, "big") + w.to_bytes(4, "big") + arr.tobytes()
-
-    def fake_decode(buf):
-        assert buf[:8] == MAGIC, "fake codec fed non-fake bytes"
-        h = int.from_bytes(buf[8:12], "big")
-        w = int.from_bytes(buf[12:16], "big")
-        return np.frombuffer(buf, np.uint8, offset=16).reshape(h, w, 3)
-
-    arrays = [decode_image(make_test_image(s, 36, 64)) for s in range(8)]
-    schema = "camera_id string, frame_number long, image binary"
-
-    def run(codec_encode, codec):
-        frames = spark.createDataFrame(
-            [("cam0", i, codec_encode(a)) for i, a in enumerate(arrays)], schema
-        )
-        out = letterbox_and_detect(frames, codec=codec)
-        return sorted(
-            (r["frame_number"], tuple(map(tuple, r["detections"])))
-            for r in out.select("frame_number", "detections").collect()
-        )
-
-    from uav_streamprocessor_spark.operators.pixel import encode_image
-
-    raw = run(encode_image, None)
-    fake = run(fake_encode, (fake_encode, fake_decode))
-    assert fake == raw
-    assert any(dets for _, dets in fake)  # non-vacuous: some boxes found

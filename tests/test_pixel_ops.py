@@ -13,7 +13,6 @@ from uav_streamprocessor_spark.operators.pixel import (
     decode_image,
     encode_image,
     letterbox_array,
-    letterbox_udf,
     make_test_image,
 )
 from uav_streamprocessor_spark.operators.uav_core import wire_confidence
@@ -109,13 +108,6 @@ def test_best_resize_presence_gated():
         out_nn = letterbox_array(img, target=640)
         assert (out_cv[:140] == 0).all() and (out_cv[500:] == 0).all()
         assert out_cv.shape == out_nn.shape
-
-
-def test_letterbox_udf_batches(spark, frames_df):
-    out = frames_df.limit(8).withColumn("lb", letterbox_udf("image")).collect()
-    for r in out:
-        img = decode_image(bytes(r["lb"]))
-        assert img.shape == (640, 640, 3)
 
 
 def test_stub_detector_deterministic():

@@ -23,8 +23,8 @@ from uav_streamprocessor_spark.streaming.pipeline import (
 )
 from uav_streamprocessor_spark.streaming.sinks import (
     HttpSenderSink,
-    IdempotentBatchSink,
     OrderedRecorderSink,
+    start_foreach_batch,
     start_memory_sink,
 )
 from uav_streamprocessor_spark.streaming.sources import file_stream, ordered_slices
@@ -269,6 +269,7 @@ def test_ordered_recorder_sink(spark, tmp_path):
     assert len(list(open(tmp_path / "rec" / "cam0.jsonl"))) == 50
 
 
+@pytest.mark.fast
 def test_full_uav_streaming_pipeline(spark, tmp_path):
     """The reference main loop, streamed: video source → record sink +
     keyframe→detect→send sink, both checkpointed foreachBatch."""
@@ -321,27 +322,71 @@ def test_full_uav_streaming_pipeline(spark, tmp_path):
     )
 
 
-def test_idempotent_batch_sink_skips_replays(spark, tmp_path):
-    """Replayed batch ids are no-ops; new ids run; a marker is written
-    only AFTER the inner sink succeeds (a failing batch is retried)."""
-    calls = []
+@pytest.mark.fast
+def test_flight_restart_rewrites_segments_and_resends_keyframes(
+    spark, tmp_path, monkeypatch
+):
+    """The flight is one query under one checkpoint. Lose batch 0's
+    commit and rerun from the same checkpoint: Spark re-runs batch 0
+    through both sinks, so the recorder rewrites its own segments byte
+    for byte and the sender re-POSTs every keyframe (at-least-once)."""
+    from collections import Counter
 
-    def inner(batch, batch_id):
-        if batch_id == 7 and not calls.count(7):
-            calls.append(7)
-            raise OSError("sink crash before commit")
-        calls.append(batch_id)
+    from uav_streamprocessor_spark.streaming import uav_pipeline
 
-    sink = IdempotentBatchSink(inner, str(tmp_path / "markers"))
-    batch = spark.createDataFrame([(1,)], "x int")
-    sink(batch, 0)
-    sink(batch, 0)  # replay → skipped
-    sink(batch, 1)
-    with pytest.raises(OSError):
-        sink(batch, 7)  # fails → no marker
-    sink(batch, 7)  # retry succeeds
-    assert calls == [0, 1, 7, 7]
-    assert sink.skipped_replays == 1
+    queries = []
+
+    def start(df, fn, checkpoint):
+        queries.append(start_foreach_batch(df, fn, checkpoint))
+        return queries[-1]
+
+    monkeypatch.setattr(uav_pipeline, "start_foreach_batch", start)
+
+    delivered = tmp_path / "delivered"
+    delivered.mkdir()
+    ddir = str(delivered)
+
+    def fake_post(url, image, metadata, timeout):
+        import uuid
+
+        # one file per delivery, so a re-POST adds a file
+        fn = json.loads(metadata)["frame_number"]
+        open(f"{ddir}/{fn}.{uuid.uuid4().hex}", "w").close()
+        return 200
+
+    rec, ckpt = tmp_path / "rec_out", tmp_path / "ckpt"
+
+    def run():
+        return uav_pipeline.run_streaming_pipeline(
+            spark,
+            "synthetic://camZ?frames=90&w=64&h=36&seed=11",
+            str(rec),
+            str(ckpt),
+            sender=HttpSenderSink("http://cc.test/ingest", post=fake_post),
+            frames_per_batch=90,
+        )
+
+    def recorded():
+        return {
+            str(p.relative_to(rec)): p.read_bytes()
+            for p in rec.rglob("*")
+            if p.is_file()
+        }
+
+    assert run()["sent"] == 3
+    first = recorded()
+    # one query read the source once: 90 input rows, not 2 x 90
+    assert len(queries) == 1
+    assert sum(p.numInputRows for p in queries[0].recentProgress) == 90
+    assert not {"record", "send"} & {p.name for p in ckpt.iterdir()}
+
+    for lost in ("0", ".0.crc"):  # batch 0's commit and its checksum
+        (ckpt / "commits" / lost).unlink()
+    assert run()["sent"] == 3
+    assert [p.batchId for p in queries[1].recentProgress] == [0]
+    assert recorded() == first
+    deliveries = Counter(int(p.name.split(".")[0]) for p in delivered.iterdir())
+    assert deliveries == {0: 2, 30: 2, 60: 2}
 
 
 def test_stream_static_enrichment(spark, tmp_path):

@@ -124,24 +124,6 @@ def letterbox_array(img: np.ndarray, target: int = 640, resize=None) -> np.ndarr
     return out
 
 
-@pandas_udf(T.BinaryType())
-def letterbox_udf(images: pd.Series) -> pd.Series:
-    """T1 as an Arrow-batched scalar pandas UDF. Uses cv2 INTER_AREA when
-    the worker has a cv2 build (reference parity), nearest otherwise. On
-    error returns the input unchanged — the reference's fallback
-    (frame_processing.py:53-57)."""
-    rz = _best_resize()
-    out = []
-    for buf in images:
-        try:
-            out.append(
-                encode_image(letterbox_array(decode_image(bytes(buf)), resize=rz))
-            )
-        except Exception:
-            out.append(buf)
-    return pd.Series(out)
-
-
 # 5×7 bitmap font (classic HD44780 shapes): 7 rows per glyph, each row a
 # 5-bit int, MSB = leftmost column. Covers what detection labels need —
 # letters (rendered uppercase), digits, ':', '.', space. This replaces
@@ -301,44 +283,35 @@ def explode_detections(detected: DataFrame) -> DataFrame:
 
 
 def letterbox_and_detect(
-    frames: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    image_col: str = "image",
-    codec=None,
+    frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Fused T1+T2: decode → letterbox → detect → encode in ONE
-    mapInPandas pass. The separate operators pay decode+encode twice and
-    ship the intermediate 640×640 buffer across two UDF boundaries; fused,
-    each image crosses the Arrow boundary once — the pixel path's dominant
-    cost at scale. Both unfused operators remain available for pipelines
-    that need the intermediate.
-
-    `codec` is an (encode, decode) pair — the swap seam for real image
-    codecs (cv2.imencode/imdecode at JPEG quality 90, the reference's
-    frame_processing.py:221); defaults to the raw-tensor codec."""
+    mapInPandas pass, so each image crosses the Arrow boundary once —
+    the pixel path's dominant cost at scale."""
     out_schema = T.StructType(
         frames.schema.fields
         + [T.StructField("detections", T.ArrayType(BBOX_STRUCT), False)]
     )
     conf, classes = cfg.confidence, cfg.classes
     target = cfg.target_resolution
-    enc, dec = codec or (encode_image, decode_image)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         detector = StubDetector(conf, classes)
         rz = _best_resize()  # INTER_AREA where cv2 ships (ref parity)
         for pdf in batches:
             images, dets = [], []
-            for buf in pdf[image_col]:
+            for buf in pdf["image"]:
                 try:
-                    boxed = letterbox_array(dec(bytes(buf)), target, resize=rz)
-                    images.append(enc(boxed))
+                    boxed = letterbox_array(
+                        decode_image(bytes(buf)), target, resize=rz
+                    )
+                    images.append(encode_image(boxed))
                     dets.append(detector.detect(boxed))
                 except Exception:
                     images.append(buf)  # frame_processing.py:53-57 fallback
                     dets.append([])     # frame_processing.py:113-115 fallback
             pdf = pdf.copy()
-            pdf[image_col] = images
+            pdf["image"] = images
             pdf["detections"] = [
                 [
                     (b["x_min"], b["y_min"], b["x_max"], b["y_max"],
@@ -360,9 +333,7 @@ _SIGNATURE_DDL = (
 
 
 def content_signature(
-    frames: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    image_col: str = "image",
+    frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Exact integer content signature of the pixel hot path (VERDICT
     r15 #4 — the media_frame_samples moment recipe applied to T1/T2):
@@ -387,7 +358,7 @@ def content_signature(
         for pdf in batches:
             rows = []
             for cam, fno, buf in zip(
-                pdf["camera_id"], pdf["frame_number"], pdf[image_col]
+                pdf["camera_id"], pdf["frame_number"], pdf["image"]
             ):
                 boxed = letterbox_array(
                     decode_image(bytes(buf)), target, resize=rz
@@ -439,32 +410,30 @@ _CONTRACT_DDL = (
     "mae_ok boolean, pad_ok boolean, dets_ok boolean"
 )
 
+# roundtrip_contract's mean-|error| bound, calibrated: JPEG q=85 4:2:0
+# on md5 noise (the hardest content for a DCT codec — chroma subsampling
+# alone costs ~42 per chroma byte) measures MAE 44.73-44.82 over the
+# 640x360 fixture corpus, while UNRELATED uint8 noise reads ~85 (the
+# expected |U-V| of independent uniforms), which is where any demux
+# offset, quant-table, or IDCT regression lands. 60.0 sits ~34% above
+# correct and ~30% below broken.
+_MAE_BOUND = 60.0
+
 
 def roundtrip_contract(
-    frames: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    image_col: str = "image",
-    mae_bound: float = 60.0,
+    frames: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Accuracy contract for the pixel path over LOSSY real containers
     (VERDICT r15 #4, the media_jpeg_roundtrip form): the JPEG entropy
     decode is not SQL-replayable, so the registered surface is the
     per-keyframe verdict table — shape preserved through demux + decode
     + letterbox, mean |error| vs the md5-regenerated pre-encode original
-    under a calibrated bound, letterbox padding exactly zero (geometry
+    under the calibrated _MAE_BOUND, letterbox padding exactly zero (geometry
     survives the real container), and every detection inside the stub
     detector's contract (coords in-frame and ordered, confidence >= the
     threshold, class in the whitelist, <= 3 boxes — StubDetector's
     seed%4 ceiling). Any codec/demux/letterbox regression flips a row;
-    the oracle derives the all-true table relationally.
-
-    `mae_bound` is calibrated: JPEG q=85 4:2:0 on md5 noise (the
-    hardest content for a DCT codec — chroma subsampling alone costs
-    ~42 per chroma byte) measures MAE 44.73-44.82 over the 640x360
-    fixture corpus, while UNRELATED uint8 noise reads ~85 (the
-    expected |U-V| of independent uniforms), which is where any demux
-    offset, quant-table, or IDCT regression lands. 60.0 sits ~34%
-    above correct and ~30% below broken."""
+    the oracle derives the all-true table relationally."""
     conf, classes = cfg.confidence, cfg.classes
     target = cfg.target_resolution
     class_ids = {i for i, n in StubDetector.CLASSES.items() if n in classes}
@@ -475,7 +444,7 @@ def roundtrip_contract(
         for pdf in batches:
             rows = []
             for cam, fno, buf in zip(
-                pdf["camera_id"], pdf["frame_number"], pdf[image_col]
+                pdf["camera_id"], pdf["frame_number"], pdf["image"]
             ):
                 img = decode_image(bytes(buf))
                 ref = md5_image_array(f"{cam}:{int(fno)}", *img.shape[:2])
@@ -508,7 +477,7 @@ def roundtrip_contract(
                         cam,
                         int(fno),
                         boxed.shape == (target, target, 3),
-                        mae <= mae_bound,
+                        mae <= _MAE_BOUND,
                         pad_sum == 0,
                         dets_ok,
                     )

@@ -570,35 +570,6 @@ class OrderedRecorderSink:
         )
 
 
-@dataclass
-class IdempotentBatchSink:
-    """Exactly-once upgrade for non-transactional foreachBatch sinks.
-
-    Structured Streaming's foreachBatch is at-least-once: a crash between
-    the sink's side effect and the checkpoint commit replays the batch.
-    This wrapper persists a marker per committed batch_id (marker write
-    AFTER the inner sink succeeds) and skips batches already marked —
-    replays become no-ops, so any wrapped sink (HTTP, files, JDBC-ish)
-    is effectively exactly-once as long as the marker dir survives with
-    the checkpoint. This is the standard batchId-dedup pattern the
-    reference has no notion of (its HTTP sink is at-most-once,
-    frame_processing.py:257-262)."""
-
-    inner: Callable[[DataFrame, int], None]
-    marker_dir: str
-    skipped_replays: int = 0
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        d = Path(self.marker_dir)
-        d.mkdir(parents=True, exist_ok=True)
-        marker = d / f"batch_{batch_id}.done"
-        if marker.exists():
-            self.skipped_replays += 1
-            return
-        self.inner(batch, batch_id)
-        marker.touch()
-
-
 def start_memory_sink(df: DataFrame, name: str, checkpoint) -> StreamingQuery:
     """Start df into the in-memory table `name` in append mode under an
     availableNow trigger: the query drains every micro-batch available

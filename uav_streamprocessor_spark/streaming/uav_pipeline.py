@@ -2,19 +2,23 @@
 (SURVEY.md §3.1 → streaming form).
 
 The reference runs one blocking loop: read frame → save → if keyframe:
-resize → detect → send (uav/main.py:109-141). Streamed, this is a single
-readStream DAG with two sinks driven by the micro-batch engine:
+resize → detect → send (uav/main.py:109-141). Streamed, this is one
+query over one uav_video source read, under one checkpoint, whose
+foreachBatch function fans each micro-batch out to both sinks:
 
-  uav_video stream source
-    ├── record branch  → OrderedRecorderSink (K1)
-    └── filter(% N)    → letterbox UDF → detect (mapInPandas) → payloads
-                       → HttpSenderSink (K2)
+  uav_video stream source → foreachBatch(batch, batch_id):
+    persist(batch)
+    ├── filter(% N) → letterbox+detect (mapInPandas) → payloads
+    │                → HttpSenderSink (K2)
+    ├── every frame → OrderedRecorderSink (K1)
+    └── unpersist(batch)
 
-Both sinks are checkpointed foreachBatch started by
+Send runs before record, so keyframe POSTs do not wait for the
+per-camera repartition of every frame. The query is started by
 sinks.start_foreach_batch (at-least-once; the reference is at-most-once
-on both paths). Replay-safety comes from the sinks themselves: the
-recorder writes one segment per micro-batch, so a replayed batch
-replaces its own segment, while the sender re-POSTs a replayed batch.
+on both paths). A batch replayed after a lost commit re-runs both
+sinks: the recorder writes one segment per micro-batch, so the replay
+rewrites its own segments, while the sender re-POSTs its keyframes.
 """
 
 from __future__ import annotations
@@ -55,28 +59,30 @@ def run_streaming_pipeline(
     frames_per_batch: int = 30,
     record_fmt: str = DEFAULT_FMT,
 ) -> dict:
-    """Run both branches with availableNow triggers (complete drain of
-    the source — latestOffset reports EOF, so no frames are truncated
+    """Run the flight as one query under an availableNow trigger, with
+    checkpoint_dir as its checkpoint. availableNow drains the source
+    completely (latestOffset reports EOF, so no frames are truncated
     regardless of frames_per_batch, which only sets partition
     granularity; a real deployment uses processingTime triggers).
     After the drain, per-micro-batch recorder segments are reassembled
     into the reference's single-file-per-camera deliverable
     (uav/frame_processing.py:142-159). Returns sink counters — the
     reference's shutdown report (uav/main.py:175-179)."""
-    frames = stream_frames(spark, source_spec, frames_per_batch)
     recorder = OrderedRecorderSink(out_dir, cfg, fmt=record_fmt)
-    queries = [
-        start_foreach_batch(
-            recorder_rows_stream(frames, cfg, fmt=record_fmt),
-            recorder,
-            f"{checkpoint_dir}/record",
-        ),
-        start_foreach_batch(
-            sender_payloads(frames, cfg), sender, f"{checkpoint_dir}/send"
-        ),
-    ]
-    for q in queries:
-        q.awaitTermination()
+
+    def send_and_record(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            sender(sender_payloads(batch, cfg), batch_id)
+            recorder(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    start_foreach_batch(
+        stream_frames(spark, source_spec, frames_per_batch),
+        send_and_record,
+        checkpoint_dir,
+    ).awaitTermination()
     return {
         "segments": reassemble_segments(out_dir, fmt=record_fmt),
         "sent": sender.sent,
